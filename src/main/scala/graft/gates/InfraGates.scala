@@ -2,7 +2,6 @@ package graft
 package gates
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.analysis.DaysApart

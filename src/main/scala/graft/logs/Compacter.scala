@@ -2,7 +2,12 @@ package graft.logs
 
 import java.time.LocalDate
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation,
+  InMemoryFileIndex, PartitionSpec}
+import org.apache.spark.sql.execution.datasources.text.TextFileFormat
+import org.apache.spark.sql.types.{StringType, StructType}
 
 /** Per-day raw-log → Parquet compaction: the reference's
   * `convert_s3_access_logs_to_parquet`
@@ -11,8 +16,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Differences by design (not behavior):
   *  - one SparkSession reused across days (the reference stops/starts a
   *    session per day, an artifact, reference `:184-196,263-266`);
-  *  - no RDD / Python-worker hop: `spark.read.text` + pure column
+  *  - no RDD / Python-worker hop: a text scan + pure column
   *    expressions, whole plan in Catalyst/Tungsten codegen;
+  *  - each day is listed once: the scan reuses the lister's statuses;
   *  - ingest parallelism comes from the text source's file splitting
   *    (`spark.sql.files.maxPartitionBytes`) instead of
   *    `parallelize(paths, 100)` (reference `:214`).
@@ -128,10 +134,27 @@ object Compacter {
   def destinationFor(cfg: Config, dt: String): String =
     s"${cfg.destRoot}/${cfg.sourceBucket}/dt=$dt"
 
-  /** Read + parse the given raw log files (no write). */
-  def parsed(spark: SparkSession, paths: Seq[String]): DataFrame = {
-    val raw = spark.read.text(paths: _*)
-    LogLineParser.parse(LogLineParser.dropBlankLines(raw))
+  /** Read + parse exactly the listed raw log objects (no write). The scan
+    * is a text `HadoopFsRelation` over an `InMemoryFileIndex` whose status
+    * cache returns the listed statuses, so Spark runs no existence check and
+    * no leaf-file listing job (bare paths would be statted again). Assumes
+    * S3 access-log objects are immutable once delivered, so a listed length
+    * is final; an object gone since listing fails the scan loudly
+    * (`ignoreMissingFiles` stays off) rather than dropping its rows.
+    */
+  def readListed(spark: SparkSession, listed: Seq[FileStatus]): DataFrame = {
+    val byPath = listed.map(st => st.getPath -> Array(st)).toMap
+    val listedOnly = new FileStatusCache {
+      override def getLeafFiles(path: Path): Option[Array[FileStatus]] = byPath.get(path)
+      override def putLeafFiles(path: Path, leafFiles: Array[FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = ()
+    }
+    val index = new InMemoryFileIndex(spark, listed.map(_.getPath), Map.empty, None,
+      listedOnly, Some(PartitionSpec.emptySpec))
+    val text = HadoopFsRelation(index, partitionSchema = new StructType(),
+      dataSchema = new StructType().add("value", StringType), bucketSpec = None,
+      fileFormat = new TextFileFormat, options = Map.empty)(spark)
+    LogLineParser.parse(LogLineParser.dropBlankLines(spark.baseRelationToDataFrame(text)))
   }
 
   /** Per-day compaction outcome: where it wrote and what it saw. The
@@ -158,15 +181,14 @@ object Compacter {
                           dt: String): Option[DayStats] = {
     import org.apache.spark.sql.functions.{col, count, lit}
     val dest = destinationFor(cfg, dt)
-    val listed = LogFileLister.listDayWithSizes(
+    val listed = LogFileLister.listDayStatuses(
       cfg.accessLogRoot, cfg.sourceBucket, dt,
       spark.sparkContext.hadoopConfiguration)
     if (listed.isEmpty) return None
-    val paths = listed.map(_._1)
-    val numFiles = outputFilesFor(cfg, listed.map(_._2).sum)
+    val numFiles = outputFilesFor(cfg, listed.map(_.getLen).sum)
     configure(spark)
     val obs = org.apache.spark.sql.Observation(s"compact-$dt")
-    val observed = parsed(spark, paths)
+    val observed = readListed(spark, listed)
       .observe(obs, count(lit(1)).as("rows"), count(col("error_line")).as("corrupt"))
     if (cfg.zorderBy.isEmpty) {
       // metrics ride the write job itself — no second scan of the input
@@ -193,16 +215,17 @@ object Compacter {
     Some(DayStats(dest, m("rows").asInstanceOf[Long], m("corrupt").asInstanceOf[Long]))
   }
 
+  private def days(minDate: LocalDate, maxDate: LocalDate): Seq[String] =
+    Iterator.iterate(minDate)(_.plusDays(1))
+      .takeWhile(_.isBefore(maxDate)).map(_.toString).toSeq
+
   /** Day loop `[minDate, maxDate)` (reference `date_iterator` + per-day loop,
-    * `:269-302`), one session for the whole range. Returns the paths
-    * actually written.
+    * `:269-302`), one session for the whole range. Returns the stats of the
+    * days actually written, in day order.
     */
   def compactRange(spark: SparkSession, cfg: Config,
-                   minDate: LocalDate, maxDate: LocalDate): Seq[String] =
-    Iterator.iterate(minDate)(_.plusDays(1))
-      .takeWhile(_.isBefore(maxDate))
-      .flatMap(d => compactDay(spark, cfg, d.toString))
-      .toSeq
+                   minDate: LocalDate, maxDate: LocalDate): Seq[DayStats] =
+    days(minDate, maxDate).flatMap(compactDayWithStats(spark, cfg, _))
 
   /** As [[compactRange]], but with up to `maxConcurrent` day jobs in
     * flight at once — on a real cluster a single day's tail (straggler
@@ -216,16 +239,14 @@ object Compacter {
     */
   def compactRangeConcurrent(spark: SparkSession, cfg: Config,
                              minDate: LocalDate, maxDate: LocalDate,
-                             maxConcurrent: Int = 4): Seq[String] = {
+                             maxConcurrent: Int = 4): Seq[DayStats] = {
     require(maxConcurrent > 0, "maxConcurrent must be positive")
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
-    val days = Iterator.iterate(minDate)(_.plusDays(1))
-      .takeWhile(_.isBefore(maxDate)).map(_.toString).toSeq
     val pool = java.util.concurrent.Executors.newFixedThreadPool(maxConcurrent)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     try {
-      val written = days.map(d => Future(compactDay(spark, cfg, d)))
+      val written = days(minDate, maxDate).map(d => Future(compactDayWithStats(spark, cfg, d)))
       val out = Await.result(Future.sequence(written), Duration.Inf).flatten
       pool.shutdown()
       out

@@ -82,7 +82,13 @@ object CompacterCli {
         Compacter.configureS3CredentialsFromFile(spark, _))
       Compacter.compactRange(spark, cfg,
         LocalDate.parse(req("min-date")), LocalDate.parse(req("max-date")))
-        .foreach(d => println(s"[compacter] wrote $d"))
+        .foreach(st => println(dayLine(st)))
     } finally spark.stop()
   }
+
+  /** The JSON line printed per written day: destination, rows, corrupt rows. */
+  def dayLine(st: Compacter.DayStats): String =
+    new com.fasterxml.jackson.databind.ObjectMapper().createObjectNode()
+      .put("dest", st.dest).put("rows", st.rows).put("corrupt_rows", st.corruptRows)
+      .toString
 }

@@ -1,9 +1,7 @@
 package graft.logs
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
-
-import scala.collection.mutable.ArrayBuffer
+import org.apache.hadoop.fs.{FileStatus, Path}
 
 /** Paginated object listing by prefix, the reference's manual
   * partition-pruning-at-listing-time step
@@ -19,53 +17,27 @@ import scala.collection.mutable.ArrayBuffer
   */
 object LogFileLister {
 
-  /** All file URIs directly under `dirUri` whose *name* starts with
-    * `namePrefix` (empty prefix = everything). Streaming, driver-bounded.
-    */
-  def list(dirUri: String, namePrefix: String,
-           conf: Configuration = new Configuration()): Seq[String] = {
-    val dir = new Path(dirUri)
-    val fs = dir.getFileSystem(conf)
-    if (!fs.exists(dir)) return Seq.empty
-    val out = ArrayBuffer.empty[String]
-    val it = fs.listStatusIterator(dir)
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.isFile && (namePrefix.isEmpty || st.getPath.getName.startsWith(namePrefix)))
-        out += st.getPath.toString
-    }
-    out.toSeq
-  }
-
-  /** As `list`, also returning each object's size — one listing pass feeds
-    * both the read plan and size-based output sizing (the lister already
-    * has the FileStatus in hand; a second metadata round-trip per object
-    * would be the S3-LIST cost all over again).
-    */
-  def listWithSizes(dirUri: String, namePrefix: String,
-                    conf: Configuration = new Configuration()): Seq[(String, Long)] = {
-    val dir = new Path(dirUri)
-    val fs = dir.getFileSystem(conf)
-    if (!fs.exists(dir)) return Seq.empty
-    val out = ArrayBuffer.empty[(String, Long)]
-    val it = fs.listStatusIterator(dir)
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.isFile && (namePrefix.isEmpty || st.getPath.getName.startsWith(namePrefix)))
-        out += ((st.getPath.toString, st.getLen))
-    }
-    out.toSeq
-  }
-
-  /** The reference's per-day listing: keys under
+  /** The reference's per-day listing: statuses of the files directly under
     * `{accessLogRoot}/{sourceBucket}/` named `{date}-*` (reference `:212-213`
-    * builds prefix `'{source_bucket}/{partition_key}-'`).
+    * builds prefix `'{source_bucket}/{partition_key}-'`). Streaming,
+    * driver-bounded; the statuses feed both output sizing and the scan.
     */
+  def listDayStatuses(accessLogRoot: String, sourceBucket: String, date: String,
+                      conf: Configuration = new Configuration()): Seq[FileStatus] = {
+    val dir = new Path(s"$accessLogRoot/$sourceBucket")
+    val fs = dir.getFileSystem(conf)
+    if (!fs.exists(dir)) return Seq.empty
+    val it = fs.listStatusIterator(dir)
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .filter(st => st.isFile && st.getPath.getName.startsWith(s"$date-")).toSeq
+  }
+
   def listDay(accessLogRoot: String, sourceBucket: String, date: String,
               conf: Configuration = new Configuration()): Seq[String] =
-    list(s"$accessLogRoot/$sourceBucket", s"$date-", conf)
+    listDayStatuses(accessLogRoot, sourceBucket, date, conf).map(_.getPath.toString)
 
   def listDayWithSizes(accessLogRoot: String, sourceBucket: String, date: String,
                        conf: Configuration = new Configuration()): Seq[(String, Long)] =
-    listWithSizes(s"$accessLogRoot/$sourceBucket", s"$date-", conf)
+    listDayStatuses(accessLogRoot, sourceBucket, date, conf)
+      .map(st => (st.getPath.toString, st.getLen))
 }

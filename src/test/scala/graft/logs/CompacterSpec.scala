@@ -1,9 +1,11 @@
 package graft.logs
 
 import java.nio.file.{Files, Path}
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
 import graft.SparkTestBase
 import graft.analysis.DaysApart
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** End-to-end golden test (SURVEY.md §5.3): raw log dir → compact →
@@ -28,6 +30,57 @@ class CompacterSpec extends SparkTestBase {
     Files.write(dir.resolve(s"$dt-00-00-00-OBJA"), String.join("\n", a: _*).getBytes)
     Files.write(dir.resolve(s"$dt-12-00-00-OBJB"),
       ("\n" + String.join("\n", b: _*) + "\n\n").getBytes) // blank lines dropped
+  }
+
+  /** `n` raw objects for the day, the lines dealt out evenly. */
+  def writeObjects(root: Path, bucket: String, dt: String, lines: Seq[String],
+                   n: Int): Unit = {
+    val dir = root.resolve(bucket)
+    Files.createDirectories(dir)
+    (0 until n).foreach { i =>
+      val mine = lines.indices.filter(_ % n == i).map(lines)
+      Files.write(dir.resolve(f"$dt-00-00-$i%02d-OBJ$i"),
+        (String.join("\n", mine: _*) + "\n").getBytes)
+    }
+  }
+
+  /** Exactly `n` Parquet files under `dest`, each sorted by request_time
+    * (sortWithinPartitions semantics).
+    */
+  def assertFilesTimeSorted(dest: String, n: Int): Unit = {
+    val files = Files.list(java.nio.file.Paths.get(dest)).toArray
+      .map(_.toString).filter(_.endsWith(".parquet"))
+    assert(files.length == n, s"expected $n output files, got ${files.length}")
+    files.foreach { f =>
+      val ts = spark.read.parquet(f).select("request_time")
+        .collect().map(r => Option(r.getTimestamp(0)).map(_.getTime).getOrElse(Long.MinValue))
+      assert(ts.sameElements(ts.sorted), s"rows in $f not time-sorted")
+    }
+  }
+
+  /** Job property holding `SparkContext.setJobDescription`'s text. */
+  val JobDescription = "spark.job.description"
+
+  /** The jobs started while `body` runs, in start order. */
+  def jobsDuring[T](body: => T): (T, Seq[SparkListenerJobStart]) = {
+    val sc = spark.sparkContext
+    val seen = new LinkedBlockingQueue[SparkListenerJobStart]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = seen.put(e)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val v = body
+      // fence: a listener gets events in the order they were posted, so
+      // once this job's start arrives, every job of `body` has been seen
+      sc.setJobDescription("fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val jobs = Iterator.continually(seen.poll(60, TimeUnit.SECONDS))
+        .map(e => Option(e).getOrElse(fail("listener never saw the fence job")))
+        .takeWhile(_.properties.getProperty(JobDescription) != "fence")
+        .toSeq
+      (v, jobs)
+    } finally sc.removeSparkListener(listener)
   }
 
   test("compact → read back: schema, rows, in-file time-sortedness, file count") {
@@ -58,16 +111,7 @@ class CompacterSpec extends SparkTestBase {
     assert(back.count() == lines.size, "other days' objects must not leak in")
     assert(back.filter(col("error_line").isNotNull).count() == 1)
 
-    val files = Files.list(java.nio.file.Paths.get(dest)).toArray
-      .map(_.toString).filter(_.endsWith(".parquet"))
-    assert(files.length == 3, s"expected 3 output files, got ${files.length}")
-
-    // per-file sortedness by request_time (sortWithinPartitions semantics)
-    files.foreach { f =>
-      val ts = spark.read.parquet(f).select("request_time")
-        .collect().map(r => Option(r.getTimestamp(0)).map(_.getTime).getOrElse(Long.MinValue))
-      assert(ts.sameElements(ts.sorted), s"rows in $f not time-sorted")
-    }
+    assertFilesTimeSorted(dest, 3)
 
     // determinism: re-run the day → identical row multiset (materialize
     // before the overwrite invalidates the first read's file listing)
@@ -254,8 +298,12 @@ class CompacterSpec extends SparkTestBase {
     val conOut = Compacter.compactRangeConcurrent(spark, conCfg, min, max,
       maxConcurrent = 3)
     assert(seqOut.size == 3 && conOut.size == 3)
-    assert(conOut.map(_.split("/dt=").last) == seqOut.map(_.split("/dt=").last),
+    assert(seqOut.map(_.dest) == dts.map(dt => s"${seqCfg.destRoot}/bucket1/dt=$dt") &&
+      conOut.map(_.dest) == dts.map(dt => s"${conCfg.destRoot}/bucket1/dt=$dt"),
       "day order preserved in results")
+    assert(conOut.map(st => (st.rows, st.corruptRows)) ==
+      seqOut.map(st => (st.rows, st.corruptRows)) && seqOut.forall(_.rows == 20),
+      "each day's stats reported")
     dts.foreach { dt =>
       val a = spark.read.parquet(s"${seqCfg.destRoot}/bucket1/dt=$dt")
       val b = spark.read.parquet(s"${conCfg.destRoot}/bucket1/dt=$dt")
@@ -264,5 +312,58 @@ class CompacterSpec extends SparkTestBase {
       assert(Files.list(java.nio.file.Paths.get(s"${conCfg.destRoot}/bucket1/dt=$dt"))
         .toArray.map(_.toString).count(_.endsWith(".parquet")) == 2)
     }
+  }
+
+  test("a day above the parallel-listing threshold is read from the listed statuses, no listing job") {
+    val tmp = Files.createTempDirectory("graft-listed-once")
+    val rawRoot = tmp.resolve("raw"); val destRoot = tmp.resolve("out")
+    val dt = "2021-02-03"
+    val objects = 48
+    assert(objects >
+      spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt)
+    val lines = (0 until objects * 3).map { i =>
+      logLine(3, (i * 7) % 24, f"logs/svc${i % 3}/2019/01/${(i % 27) + 1}%02d/part-$i.gz")
+    } :+ "corrupt line that matches nothing"
+    writeObjects(rawRoot, "bucket1", dt, lines, objects)
+    val cfg = Compacter.Config(rawRoot.toString, "bucket1", destRoot.toString,
+      numOutputFiles = 3)
+
+    val (stats, jobs) = jobsDuring(Compacter.compactDayWithStats(spark, cfg, dt).get)
+    val descriptions = jobs.map(j =>
+      Option(j.properties.getProperty(JobDescription)).getOrElse(""))
+    assert(!descriptions.exists(_.startsWith("Listing leaf files")),
+      s"the day's objects were listed again: $descriptions")
+    // every job belongs to the write's one SQL execution: nothing runs
+    // before it, such as a file-status job over the listed paths
+    val executions = jobs.map(j =>
+      Option(j.properties.getProperty("spark.sql.execution.id")))
+    assert(jobs.nonEmpty && executions.distinct.size == 1 && executions.head.isDefined,
+      s"jobs outside the write: ${jobs.map(_.jobId).zip(descriptions)}")
+
+    assert(stats.rows == lines.size && stats.corruptRows == 1)
+    assert(spark.read.parquet(stats.dest).count() == lines.size)
+    assertFilesTimeSorted(stats.dest, 3)
+  }
+
+  test("an object deleted after listing fails the read loudly, no rows dropped") {
+    val tmp = Files.createTempDirectory("graft-vanished")
+    val dt = "2021-02-03"
+    writeObjects(tmp, "bucket1", dt,
+      (0 until 12).map(i => logLine(3, i, s"logs/svc/2019/01/01/p$i.gz")), 4)
+    val listed = LogFileLister.listDayStatuses(tmp.toString, "bucket1", dt)
+    assert(listed.size == 4)
+    assert(Compacter.readListed(spark, listed).count() == 12)
+    val gone = listed(1).getPath
+    Files.delete(java.nio.file.Paths.get(gone.toUri))
+    val e = intercept[Exception](Compacter.readListed(spark, listed).collect())
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(t => t.isInstanceOf[java.io.FileNotFoundException] ||
+      String.valueOf(t.getMessage).contains(gone.getName)),
+      s"expected a missing-file error naming ${gone.getName}, got $e")
+  }
+
+  test("CLI prints one JSON line per day") {
+    val line = CompacterCli.dayLine(Compacter.DayStats("/out/b/dt=2021-02-03", 52, 1))
+    assert(line == """{"dest":"/out/b/dt=2021-02-03","rows":52,"corrupt_rows":1}""")
   }
 }
