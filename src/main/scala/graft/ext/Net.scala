@@ -208,10 +208,16 @@ object Net {
     * UNIQUE `idCol` and a numeric IPv4 `ipCol` as produced by
     * [[ipv4ToLong]]), attach the columns of the most specific matching
     * row of `nets` — a CIDR table with integer columns `lenCol`
-    * (prefix length, in [minLen, maxLen]) and `prefixCol`
-    * (= network_address >> (32 − len); a `len = 0` default route has
-    * `prefix = 0`). Unmatched / NULL-ip probes keep their row with the
-    * net columns NULL (left-join semantics).
+    * (prefix length) and `prefixCol` (= network_address >> (32 − len);
+    * a `len = 0` default route has `prefix = 0`). Unmatched / NULL-ip
+    * probes keep their row with the net columns NULL (left-join
+    * semantics).
+    *
+    * Only nets with a length in [minLen, maxLen] can match; rows outside
+    * that band are excluded, which lets a caller cap match specificity
+    * (`maxLen = 24` ignores /28s). `lens`, when given, declares the
+    * lengths present inside the band: a net row at an in-band length
+    * missing from `lens` raises at first action (see [[guardedLen]]).
     *
     * Ties at the same length (duplicate `(len, prefix)` rows in
     * `nets`) break deterministically by the ascending sort of the
@@ -250,7 +256,11 @@ object Net {
       .select(col(idCol).as("__pid"), explode(array(keys: _*)).as("__k"))
       .select(col("__pid"), col("__k.__len").as("__len"),
         col("__k.__prefix").as("__prefix"))
-    val netsK = nets.select(
+    // out-of-band nets are excluded, as the minLen/maxLen contract says;
+    // only an in-band length missing from a declared `lens` raises
+    val inBand = if (lens.isEmpty) nets
+      else nets.filter(col(lenCol).cast("long").between(minLen, maxLen))
+    val netsK = inBand.select(
       ((if (lens.isEmpty) col(lenCol).cast("long")
         else guardedLen(col(lenCol).cast("long"), lenSet,
           "longestPrefixJoin")).as("__len") +:

@@ -30,8 +30,10 @@ import org.apache.spark.sql.types.{StringType, StructType}
   *  - snappy Parquet, TIMESTAMP_MILLIS, `dt=` encoded in the destination
   *    PATH only — `dt` is NOT a data column in the files (reference
   *    `partitionBy([])` + path interpolation, `:245-251,261`);
-  *  - committer v2 + speculation off for object-store-safe commits
-  *    (reference `:189-200`).
+  *  - one write per day that replaces the previous copy; the reference
+  *    pins committer v2 + speculation off for this (`:189-200`), here
+  *    [[DayWriter]] stages the files beside `dt=` and publishes them whole,
+  *    with `_SUCCESS`, only after every task has succeeded.
   */
 object Compacter {
 
@@ -75,14 +77,13 @@ object Compacter {
     case None => cfg.numOutputFiles
   }
 
-  /** Session settings the reference pins (`:189-200`). Safe to call on an
-    * existing session; returns it for chaining. (`spark.speculation` must
-    * be set at session build — see CompacterCli — it is not runtime-mutable.)
+  /** Session settings the output format needs: TIMESTAMP_MILLIS, as the
+    * reference pins (`:193-194`). Safe to call on an existing session;
+    * returns it for chaining. (`spark.speculation` must be set at session
+    * build — see CompacterCli — it is not runtime-mutable.)
     */
   def configure(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MILLIS")
-    val hc = spark.sparkContext.hadoopConfiguration
-    hc.set("mapreduce.fileoutputcommitter.algorithm.version", "2")
     spark
   }
 
@@ -160,9 +161,11 @@ object Compacter {
   /** Per-day compaction outcome: where it wrote and what it saw. The
     * corrupt count surfaces the PERMISSIVE error_line channel (reference
     * `:47-69`) as an operational metric — a spike is how log-format drift
-    * gets noticed.
+    * gets noticed. `bytesIn` is the listed raw size, `bytesOut` the size
+    * of the published Parquet files.
     */
-  final case class DayStats(dest: String, rows: Long, corruptRows: Long)
+  final case class DayStats(dest: String, rows: Long, corruptRows: Long,
+                            files: Int = 0, bytesIn: Long = 0L, bytesOut: Long = 0L)
 
   /** Compact one day's raw files into `destRoot/sourceBucket/dt=<dt>/`.
     * Returns the destination path, or None if the day had no raw objects
@@ -171,48 +174,38 @@ object Compacter {
   def compactDay(spark: SparkSession, cfg: Config, dt: String): Option[String] =
     compactDayWithStats(spark, cfg, dt).map(_.dest)
 
-  /** As `compactDay`, additionally reporting row/corrupt counts measured
-    * via `Dataset.observe` — metrics ride the first job over the frame;
-    * on the default path that is the write itself (no second scan), on
-    * the zorder path the parsed frame is cached so the boundary/sketch
-    * passes and the write still read the raw text once.
+  /** As `compactDay`, additionally reporting what the day's write tasks
+    * counted: rows, corrupt rows, files and bytes. The day is written by
+    * [[DayWriter]] (staged, then published whole); on the zorder path the
+    * parsed frame is cached so the boundary/sketch passes and the write
+    * still read the raw text once.
     */
   def compactDayWithStats(spark: SparkSession, cfg: Config,
                           dt: String): Option[DayStats] = {
-    import org.apache.spark.sql.functions.{col, count, lit}
     val dest = destinationFor(cfg, dt)
     val listed = LogFileLister.listDayStatuses(
       cfg.accessLogRoot, cfg.sourceBucket, dt,
       spark.sparkContext.hadoopConfiguration)
     if (listed.isEmpty) return None
-    val numFiles = outputFilesFor(cfg, listed.map(_.getLen).sum)
+    val bytesIn = listed.map(_.getLen).sum
+    val numFiles = outputFilesFor(cfg, bytesIn)
     configure(spark)
-    val obs = org.apache.spark.sql.Observation(s"compact-$dt")
-    val observed = readListed(spark, listed)
-      .observe(obs, count(lit(1)).as("rows"), count(col("error_line")).as("corrupt"))
-    if (cfg.zorderBy.isEmpty) {
-      // metrics ride the write job itself — no second scan of the input
-      observed.repartition(numFiles).sortWithinPartitions("request_time")
-        .write
-        .mode("overwrite") // deterministic re-runs: re-running a day replaces it
-        .option("compression", cfg.compression)
-        .parquet(dest)
+    val parsed = readListed(spark, listed)
+    val files = if (cfg.zorderBy.isEmpty) {
+      DayWriter.write(parsed.repartition(numFiles).sortWithinPartitions("request_time"),
+        dest, cfg.compression)
     } else {
       // the zorder path needs boundary/sampling passes BEFORE the write
       // (quantile collect + range-partitioner sketch) — cache the parsed
       // frame so the raw text is read and parsed once, not three times
-      val cached = observed.persist(
+      val cached = parsed.persist(
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        graft.ext.Layout.zorderCluster(cached, cfg.zorderBy, numFiles)
-          .write
-          .mode("overwrite")
-          .option("compression", cfg.compression)
-          .parquet(dest)
-      } finally cached.unpersist()
+      try DayWriter.write(graft.ext.Layout.zorderCluster(cached, cfg.zorderBy, numFiles),
+        dest, cfg.compression)
+      finally cached.unpersist()
     }
-    val m = obs.get
-    Some(DayStats(dest, m("rows").asInstanceOf[Long], m("corrupt").asInstanceOf[Long]))
+    Some(DayStats(dest, files.map(_.rows).sum, files.map(_.corruptRows).sum,
+      files.size, bytesIn, files.map(_.bytes).sum))
   }
 
   private def days(minDate: LocalDate, maxDate: LocalDate): Seq[String] =

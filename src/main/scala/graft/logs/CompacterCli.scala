@@ -71,7 +71,10 @@ object CompacterCli {
     )
     val builder = SparkSession.builder()
       .appName("graft-log-compacter")
-      .config("spark.speculation", "false") // committer-v2 safety (ref :189-192)
+      // off as in the reference (:189-192), but not for output safety: a
+      // stray attempt's files stay in staging, and only the files named by
+      // the job's results are published (DayWriter)
+      .config("spark.speculation", "false")
       .config("spark.sql.session.timeZone", "UTC")
     // Under spark-submit the master comes from the launcher; standalone
     // (sbt run, plain java) falls back to all local cores.
@@ -86,9 +89,12 @@ object CompacterCli {
     } finally spark.stop()
   }
 
-  /** The JSON line printed per written day: destination, rows, corrupt rows. */
+  /** The JSON line printed per written day: destination, rows, corrupt
+    * rows, files, and raw bytes in and Parquet bytes out.
+    */
   def dayLine(st: Compacter.DayStats): String =
     new com.fasterxml.jackson.databind.ObjectMapper().createObjectNode()
       .put("dest", st.dest).put("rows", st.rows).put("corrupt_rows", st.corruptRows)
+      .put("files", st.files).put("bytes_in", st.bytesIn).put("bytes_out", st.bytesOut)
       .toString
 }

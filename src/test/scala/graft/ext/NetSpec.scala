@@ -204,5 +204,16 @@ class NetSpec extends SparkTestBase {
     val tag = Net.longestPrefixJoin(probes, "id", "ipn", nets, "len", "prefix",
       minLen = 8, maxLen = 24).select("tag").head().getString(0)
     assert(tag == "ten8")
+    // declaring the in-band lengths keeps the out-of-band /28 excluded
+    val declared = Net.longestPrefixJoin(probes, "id", "ipn", nets, "len", "prefix",
+      minLen = 8, maxLen = 24, lens = Seq(8)).select("tag").head().getString(0)
+    assert(declared == "ten8")
+    // an in-band length missing from `lens` still raises
+    val e = intercept[Exception] {
+      Net.longestPrefixJoin(probes, "id", "ipn", nets, "len", "prefix",
+        minLen = 8, maxLen = 28, lens = Seq(8)).collect()
+    }
+    assert(e.getMessage.contains("outside the declared present-length set"),
+      s"in-band /28 missing from lens must raise, got: ${e.getMessage}")
   }
 }

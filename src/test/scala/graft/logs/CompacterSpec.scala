@@ -363,7 +363,132 @@ class CompacterSpec extends SparkTestBase {
   }
 
   test("CLI prints one JSON line per day") {
-    val line = CompacterCli.dayLine(Compacter.DayStats("/out/b/dt=2021-02-03", 52, 1))
-    assert(line == """{"dest":"/out/b/dt=2021-02-03","rows":52,"corrupt_rows":1}""")
+    val line = CompacterCli.dayLine(Compacter.DayStats("/out/b/dt=2021-02-03", 52, 1,
+      files = 3, bytesIn = 9000, bytesOut = 4100))
+    assert(line == """{"dest":"/out/b/dt=2021-02-03","rows":52,"corrupt_rows":1,""" +
+      """"files":3,"bytes_in":9000,"bytes_out":4100}""")
+  }
+
+  /** Name → SHA-256 of every file directly under `dir`. */
+  def snapshot(dir: Path): Map[String, String] =
+    Files.list(dir).toArray.map(_.asInstanceOf[Path]).map { f =>
+      f.getFileName.toString -> java.security.MessageDigest.getInstance("SHA-256")
+        .digest(Files.readAllBytes(f)).map(b => f"$b%02x").mkString
+    }.toMap
+
+  def names(dir: Path): Set[String] =
+    Files.list(dir).toArray.map(_.asInstanceOf[Path].getFileName.toString).toSet
+
+  test("a failed re-run leaves the previous day intact and no staging directory") {
+    val tmp = Files.createTempDirectory("graft-failed-rerun")
+    val rawRoot = tmp.resolve("raw"); val destRoot = tmp.resolve("out")
+    val dt = "2021-02-03"
+    val lines = (0 until 30).map(i => logLine(3, i % 24, s"logs/svc/2019/01/01/p$i.gz")) :+
+      "corrupt line that matches nothing"
+    writeRawDay(rawRoot, "bucket1", dt, lines)
+    spark.sparkContext.hadoopConfiguration.set("fs.failfs.impl",
+      classOf[FailingFileSystem].getName)
+    val cfg = Compacter.Config(rawRoot.toString, "bucket1", s"failfs://$destRoot",
+      numOutputFiles = 3)
+    val first = Compacter.compactDayWithStats(spark, cfg, dt).get
+    val dest = destRoot.resolve(s"bucket1/dt=$dt")
+    val parquet = names(dest).filter(_.endsWith(".parquet"))
+    assert(first.rows == lines.size && first.corruptRows == 1 && first.files == 3)
+    assert(names(dest) == parquet + "_SUCCESS", s"unexpected files ${names(dest)}")
+    assert(first.bytesOut == parquet.toSeq.map(n => Files.size(dest.resolve(n))).sum)
+    val raw = rawRoot.resolve("bucket1")
+    assert(first.bytesIn == names(raw).filter(_.startsWith(dt)).toSeq
+      .map(n => Files.size(raw.resolve(n))).sum)
+    val before = snapshot(dest)
+    def failsLeavingPreviousDay(): Unit = {
+      intercept[Exception](Compacter.compactDay(spark, cfg, dt))
+      assert(Files.exists(dest) && snapshot(dest) == before,
+        "the first run's files must survive the failed run")
+      assert(names(dest.getParent) == Set(s"dt=$dt"), "a staging sibling was left behind")
+    }
+
+    // the write tasks die creating their Parquet files, after the driver
+    // has prepared the output
+    FailingFileSystem.failParquet = true
+    try failsLeavingPreviousDay() finally FailingFileSystem.failParquet = false
+    // a .gz-named object that is not gzip: the scan fails
+    Files.write(raw.resolve(s"$dt-13-00-00-BAD.gz"), "not gzip".getBytes)
+    failsLeavingPreviousDay()
+    assert(spark.read.parquet(first.dest).count() == lines.size)
+  }
+
+  /** A Parquet footer, opened with parquet-hadoop directly. */
+  def footer(f: Path): org.apache.parquet.hadoop.metadata.ParquetMetadata = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.toUri), new org.apache.hadoop.conf.Configuration()))
+    try reader.getFooter finally reader.close()
+  }
+
+  /** Per data file: key/value metadata and each column's codec and
+    * encodings, in file-name order.
+    */
+  def footers(dir: String): Seq[(Map[String, String], Seq[String])] = {
+    import scala.jdk.CollectionConverters._
+    Files.list(java.nio.file.Paths.get(dir)).toArray.map(_.asInstanceOf[Path])
+      .filter(_.getFileName.toString.endsWith(".parquet")).sortBy(_.getFileName.toString)
+      .map(footer).map { m =>
+        (m.getFileMetaData.getKeyValueMetaData.asScala.toMap,
+          m.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala.map(c =>
+            s"${c.getPath} ${c.getCodec} ${c.getEncodings.asScala.toSeq.map(_.toString).sorted}")))
+      }.toSeq
+  }
+
+  test("DayWriter writes what Spark's Parquet writer writes") {
+    val tmp = Files.createTempDirectory("graft-day-writer")
+    Seq(("50 rows, 3 files", 50, 3), ("4 rows, 10 files", 4, 10), ("blank day", 0, 3))
+      .foreach { case (label, n, numFiles) =>
+        val dt = "2021-02-03"
+        val raw = tmp.resolve(s"raw-$n-$numFiles")
+        writeRawDay(raw, "b", dt, (0 until n).map(i =>
+          logLine(3, (i * 5) % 24, s"logs/svc${i % 3}/2019/01/01/p$i.gz")))
+        val listed = LogFileLister.listDayStatuses(raw.toString, "b", dt)
+        def frame() = Compacter.readListed(spark, listed)
+          .repartition(numFiles).sortWithinPartitions("request_time")
+        val ours = tmp.resolve(s"ours-$n-$numFiles/dt=$dt").toString
+        val theirs = tmp.resolve(s"spark-$n-$numFiles/dt=$dt").toString
+        Compacter.configure(spark)
+        val written = DayWriter.write(frame(), ours, "snappy")
+        frame().write.option("compression", "snappy").parquet(theirs)
+
+        val (a, b) = (footers(ours), footers(theirs))
+        assert(a.size == b.size && written.size == a.size, s"$label: file counts")
+        assert(a.sortBy(_.toString) == b.sortBy(_.toString), s"$label: footers differ")
+        assert(written.map(_.rows).sum == n, s"$label: rows")
+        def rows(dir: String) = spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
+        assert(rows(ours) == rows(theirs), s"$label: row multiset")
+      }
+    val blank = footers(tmp.resolve("ours-0-3/dt=2021-02-03").toString)
+    assert(blank.size == 1 && blank.head._2.isEmpty, "a blank day is one schema-only file")
+  }
+
+  test("DayWriter publishes exactly the files the job returned, with _SUCCESS") {
+    val tmp = Files.createTempDirectory("graft-day-publish")
+    val dt = "2021-02-03"
+    writeRawDay(tmp.resolve("raw"), "b", dt,
+      (0 until 20).map(i => logLine(3, i % 24, s"logs/svc/2019/01/01/p$i.gz")))
+    val frame = Compacter.readListed(spark,
+      LogFileLister.listDayStatuses(tmp.resolve("raw").toString, "b", dt)).repartition(2)
+    val dest = tmp.resolve(s"out/dt=$dt")
+    val staged = DayWriter.stage(frame, dest.toString, "snappy")
+    assert(!Files.exists(dest), "staging must not touch dt=")
+    // what a failed or speculative attempt of partition 1 leaves behind
+    val stray = staged.files.find(_.name.startsWith("part-00001")).get.name
+    val strayDir = java.nio.file.Paths.get(staged.dir.toString).resolve("attempt-1")
+    Files.createDirectories(strayDir)
+    Files.write(strayDir.resolve(stray), "half a file".getBytes)
+    DayWriter.publish(spark, staged)
+
+    val published = names(dest).filterNot(_.endsWith(".crc"))
+    assert(published == staged.files.map(_.name).toSet + "_SUCCESS")
+    assert(Files.size(dest.resolve(stray)) == staged.files.find(_.name == stray).get.bytes,
+      "the stray attempt's file must not replace the returned one")
+    assert(names(dest.getParent) == Set(s"dt=$dt"), "the staging directory must be deleted")
+    assert(spark.read.parquet(dest.toString).count() == 20)
   }
 }
