@@ -40,7 +40,8 @@ private[graft] object Support {
     val ids = docs.select(col(idCol))
     val par = ids.sparkSession.sparkContext.defaultParallelism
     val wide =
-      if (ids.rdd.getNumPartitions * 2 < par) ids.repartition(par, col(idCol))
+      if (graft.streaming.StreamingMinhashLsh.shouldFanOut(
+          ids.rdd.getNumPartitions, par)) ids.repartition(par, col(idCol))
       else ids
     wide.as[Long](org.apache.spark.sql.Encoders.scalaLong)
   }

@@ -3,15 +3,18 @@ package graft.logs
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 
-/** Paginated object listing by prefix, the reference's manual
+/** Paginated per-day object listing, the reference's manual
   * partition-pruning-at-listing-time step
-  * (`scripts/oss_s3_server_side_logging_compacter.py:128-151`): only keys
-  * under `{sourceBucket}/{YYYY-MM-DD}-` are ever listed, so the date filter
-  * never touches Spark.
+  * (`scripts/oss_s3_server_side_logging_compacter.py:128-151`): the date
+  * filter runs on the driver, so it never touches Spark. Unlike the
+  * reference, which lists server-side with `Prefix={sourceBucket}/{date}-`,
+  * this pages through EVERY object directly under `{sourceBucket}/` and
+  * keeps the names starting with `{YYYY-MM-DD}-`: a day's listing costs
+  * the whole bucket prefix, not just that day.
   *
   * Uses Hadoop `FileSystem.listStatusIterator` — a RemoteIterator that pages
   * under the hood (on s3a it issues continuation-token ListObjectsV2 calls),
-  * keeping driver memory bounded even at >1M keys per prefix (the slides'
+  * keeping driver memory bounded even at >1M keys (the slides'
   * "Paginate? Paginate." OOM lesson). Works identically over `file:` for
   * local fixtures and `s3a:` in production.
   */

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** LSM-shaped accumulating keyed parquet store shared by the
@@ -51,13 +50,8 @@ final class KeyedBatchStore(spark: SparkSession, storePath: String,
     s"extraCols must not collide with keyCol and must use a supported " +
       s"SQL type, got $extraCols")
 
-  private def fs = new Path(storePath)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** The store's row schema, known from the constructor parameters —
-    * passed to every delta read so `spark.read` never runs a
-    * footer-inference job over the delta files (one job per probe/fold
-    * read otherwise; at scale, a round of object-store footer fetches).
+  /** The store's row schema, known from the constructor parameters:
+    * every delta read passes it and every append must match it.
     */
   private val rowSchema: org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.types.StructType.fromDDL(
@@ -65,8 +59,11 @@ final class KeyedBatchStore(spark: SparkSession, storePath: String,
         extraCols.map { case (n, t) => s"$n $t" } ++
         countCol.map(c => s"$c BIGINT")).mkString(", "))
 
-  private def readDeltas(files: Seq[String]): DataFrame =
-    spark.read.schema(rowSchema).parquet(files: _*)
+  private val deltas =
+    new VersionedDir(spark, storePath, "batch=", Some(rowSchema))
+  // the compacted bases are bucketed tables written by saveAsTable;
+  // VersionedDir only names, lists and retires their directories
+  private val compacted = new VersionedDir(spark, storePath, "compacted_upto_")
 
   /** Catalog identity of a compacted version: derived from the store
     * PATH (two stores on one path share tables; different paths — e.g.
@@ -79,56 +76,28 @@ final class KeyedBatchStore(spark: SparkSession, storePath: String,
     s"graft_key_store_$digest"
   }
   private def tableName(upTo: Long) = s"${tablePrefix}_upto_$upTo"
-  private def compactedDir(upTo: Long) = s"$storePath/compacted_upto_$upTo"
-
-  /** Compacted versions ON DISK (the source of truth — the catalog is
-    * session-scoped and empty after a restart), newest first.
-    */
-  private def compactedVersions(): Seq[Long] = {
-    val dir = new Path(storePath)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq
-      .filter(s => s.isDirectory &&
-        s.getPath.getName.startsWith("compacted_upto_"))
-      .flatMap(s => scala.util.Try(
-        s.getPath.getName.stripPrefix("compacted_upto_").toLong).toOption)
-      .sorted(Ordering[Long].reverse)
-  }
 
   /** The newest compacted base covering only batches strictly below
     * `batchId`, (re-)registered in the catalog so its scan reports the
-    * bucket partitioning.
+    * bucket partitioning. The directories on disk are the source of
+    * truth: the catalog is session-scoped and empty after a restart.
     */
   private def baseFor(batchId: Long): Option[(Long, DataFrame)] =
-    compactedVersions().find(_ <= batchId).map { upTo =>
+    compacted.ids().filter(_ <= batchId).lastOption.map { upTo =>
       val name = tableName(upTo)
-      if (!spark.catalog.tableExists(name)) {
-        val cols = (Seq(s"$keyCol $keySqlType") ++
-          extraCols.map { case (n, t) => s"$n $t" } ++
-          countCol.map(c => s"$c BIGINT")).mkString(", ")
+      if (!spark.catalog.tableExists(name))
         spark.sql(
-          s"""CREATE TABLE IF NOT EXISTS $name ($cols)
+          s"""CREATE TABLE IF NOT EXISTS $name (${rowSchema.toDDL})
              |USING parquet
              |CLUSTERED BY ($keyCol) SORTED BY ($keyCol) INTO $numBuckets BUCKETS
-             |LOCATION '${compactedDir(upTo)}'""".stripMargin)
-      }
+             |LOCATION '${compacted.dir(upTo)}'""".stripMargin)
       upTo -> spark.table(name)
     }
 
-  /** Parquet files of delta batches with id in [from, until). */
-  private def deltaFiles(from: Long, until: Long): Seq[String] = {
-    val dir = new Path(storePath)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq
-      .filter { s =>
-        val name = s.getPath.getName
-        s.isDirectory && name.startsWith("batch=") &&
-          scala.util.Try(name.stripPrefix("batch=").toLong).toOption
-            .exists(id => id >= from && id < until)
-      }
-      .flatMap(d => fs.listStatus(d.getPath).toSeq)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath.toString)
+  /** The delta batches with id in [from, until), as one scan. */
+  private def deltaRead(from: Long, until: Long): Option[DataFrame] = {
+    val ids = deltas.ids().filter(id => id >= from && id < until)
+    if (ids.isEmpty) None else Some(deltas.read(ids))
   }
 
   /** Fold deltas [c, batchId) into a new compacted version when due.
@@ -139,9 +108,7 @@ final class KeyedBatchStore(spark: SparkSession, storePath: String,
     val base = baseFor(batchId)
     val c = base.map(_._1).getOrElse(0L)
     if (batchId - c < compactEvery) return
-    val deltas = deltaFiles(c, batchId)
-    val parts = base.map(_._2).toSeq ++
-      (if (deltas.isEmpty) Seq.empty else Seq(readDeltas(deltas)))
+    val parts = base.map(_._2).toSeq ++ deltaRead(c, batchId)
     if (parts.isEmpty) return
     // distinct mode collapses duplicate rows (whole-row with
     // extraCols); counting mode sum-merges
@@ -165,16 +132,12 @@ final class KeyedBatchStore(spark: SparkSession, storePath: String,
     retained
       .write.mode("overwrite")
       .bucketBy(numBuckets, keyCol).sortBy(keyCol)
-      .option("path", compactedDir(batchId))
+      .option("path", compacted.dir(batchId))
       .format("parquet")
       .saveAsTable(tableName(batchId))
-    (c until batchId).foreach { id =>
-      fs.delete(new Path(s"$storePath/batch=$id"), true)
-    }
-    compactedVersions().filter(_ < batchId).foreach { old =>
-      spark.sql(s"DROP TABLE IF EXISTS ${tableName(old)}")
-      fs.delete(new Path(compactedDir(old)), true)
-    }
+    deltas.deleteBelow(batchId)
+    compacted.deleteBelow(batchId).foreach(old =>
+      spark.sql(s"DROP TABLE IF EXISTS ${tableName(old)}"))
   }
 
   /** The strictly-prior store as probe PARTS (compacted base first, then
@@ -183,19 +146,17 @@ final class KeyedBatchStore(spark: SparkSession, storePath: String,
     */
   def parts(batchId: Long): Seq[DataFrame] = {
     val base = baseFor(batchId)
-    val from = base.map(_._1).getOrElse(0L)
-    val files = deltaFiles(from, batchId)
-    base.map(_._2).toSeq ++
-      (if (files.isEmpty) Seq.empty else Seq(readDeltas(files)))
+    base.map(_._2).toSeq ++ deltaRead(base.map(_._1).getOrElse(0L), batchId)
   }
 
   /** Write a batch's frame under its own `batch=<id>` directory
     * (overwrite → retry-idempotent). The frame must have exactly the
-    * store's columns in store order: key, extras, count — matching the
-    * registered DDL of the compacted base it will fold into.
+    * store's columns in store order and type: key, extras, count —
+    * matching the registered DDL of the compacted base it will fold
+    * into. Anything else raises `IllegalArgumentException`.
     */
   def append(keys: DataFrame, batchId: Long): Unit =
-    keys.write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
+    deltas.write(keys, batchId)
 
   /** The newest compacted frontier (batches < this id are folded into
     * the base), or None when nothing has compacted yet. Retention
@@ -203,38 +164,21 @@ final class KeyedBatchStore(spark: SparkSession, storePath: String,
     * are only ever evicted at a fold, so everything at or above
     * `latestCompactedUpTo - retention` is still fully readable.
     */
-  def latestCompactedUpTo(): Option[Long] = compactedVersions().headOption
+  def latestCompactedUpTo(): Option[Long] = compacted.ids().lastOption
 
   /** Highest batch id with state on disk (delta dirs, plus
     * `compacted_upto_U` covering batches up to U−1), or None for a
     * fresh store. Pure filesystem listing — no data read.
     */
-  def maxStoredBatchId(): Option[Long] = {
-    val dir = new Path(storePath)
-    val deltas =
-      if (!fs.exists(dir)) Seq.empty[Long]
-      else fs.listStatus(dir).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-        .flatMap(s => scala.util.Try(
-          s.getPath.getName.stripPrefix("batch=").toLong).toOption)
-    val covered = compactedVersions().map(_ - 1L)
-    (deltas ++ covered).reduceOption(_ max _)
-  }
+  def maxStoredBatchId(): Option[Long] =
+    (deltas.ids() ++ compacted.ids().map(_ - 1L)).reduceOption(_ max _)
 
-  /** Fail fast on batch-id REGRESSION (the [[maxStoredBatchId]] check
-    * accumulator `update`s run before appending): a stream restarted
-    * WITHOUT its checkpoint re-numbers batches from 0, and because the
-    * batch id is folded into stored keys, the restarted stream's cells
-    * would silently interleave under old ids — corrupting any
-    * `[fromBatch, uptoBatch)` windowed read (a cumulative read stays a
-    * harmless union). A RETRY of the latest batch (same id) is allowed:
-    * `append` overwrites its own directory idempotently.
+  /** Fail fast on batch-id REGRESSION (the check accumulator
+    * `update`s run before appending): because the batch id is folded
+    * into stored keys, a restarted stream's cells would silently
+    * interleave under old ids — corrupting any `[fromBatch, uptoBatch)`
+    * windowed read (a cumulative read stays a harmless union).
     */
   def requireNoRegression(batchId: Long): Unit =
-    maxStoredBatchId().filter(_ > batchId).foreach { m =>
-      throw new IllegalArgumentException(
-        s"store $storePath already holds batches up to $m but batch " +
-          s"$batchId arrived — a restarted stream must reuse its " +
-          "checkpointLocation, and a new query needs a fresh storePath")
-    }
+    VersionedDir.requireNoRegression(storePath, maxStoredBatchId(), batchId)
 }

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -33,41 +32,15 @@ object StreamingComponents {
   /** Driver-held handle on the label store. */
   final class ComponentMaintainer(spark: SparkSession, storePath: String) {
 
-    private def fs = new Path(storePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-    // snapshot schema, captured at write time: label reads then skip
-    // the per-batch parquet footer-inference job (a restarted
+    // snapshot schema captured at the first write (a restarted
     // maintainer infers once on its first read and caches)
-    private var snapSchema: Option[org.apache.spark.sql.types.StructType] =
-      None
-
-    private def readSnapshot(path: String): DataFrame = {
-      val df = snapSchema match {
-        case Some(s) => spark.read.schema(s).parquet(path)
-        case None => spark.read.parquet(path)
-      }
-      if (snapSchema.isEmpty) snapSchema = Some(df.schema)
-      df
-    }
-
-    private def versions(): Seq[Long] = {
-      val dir = new Path(storePath)
-      if (!fs.exists(dir)) Seq.empty
-      else fs.listStatus(dir).toSeq
-        .filter(s => s.isDirectory &&
-          s.getPath.getName.startsWith("labels_at_"))
-        .flatMap(s => scala.util.Try(
-          s.getPath.getName.stripPrefix("labels_at_").toLong).toOption)
-        .sorted(Ordering[Long].reverse)
-    }
+    private val snapshots = new VersionedDir(spark, storePath, "labels_at_")
 
     /** The accumulated labels of batches strictly below `batchId` (the
       * retry-idempotence rule), or None before the first snapshot.
       */
     def labels(batchId: Long): Option[DataFrame] =
-      versions().find(_ < batchId).map(v =>
-        readSnapshot(s"$storePath/labels_at_$v"))
+      snapshots.ids().filter(_ < batchId).lastOption.map(snapshots.read)
 
     /** Fold one batch of edges into the accumulated labels, persist the
       * new snapshot (overwrite → retry-idempotent), clean superseded
@@ -79,16 +52,13 @@ object StreamingComponents {
         case None => Dedup.connectedComponents(edges)
         case Some(prior) => Dedup.connectedComponentsIncremental(prior, edges)
       }
-      val out = s"$storePath/labels_at_$batchId"
-      updated.write.mode("overwrite").parquet(out)
-      snapSchema = Some(updated.schema)
+      snapshots.write(updated, batchId)
       // keep the IMMEDIATE prior snapshot: a foreachBatch retry of this
       // batch must be able to re-read its strictly-prior state — deleting
       // it would silently turn the replay into a from-scratch fixpoint
       // over one batch's edges
-      versions().filter(_ < batchId - 1).foreach(v =>
-        fs.delete(new Path(s"$storePath/labels_at_$v"), true))
-      readSnapshot(out)
+      snapshots.deleteBelow(batchId - 1)
+      snapshots.read(batchId)
         .select(lit(batchId).as("batch_id"), col("id"), col("comp"))
     }
 

@@ -29,7 +29,7 @@ import graft.ext.Similarity
   *    directory with identical bytes (assignment is deterministic).
   *  - `gen=<lo>_<hi>/`: a compacted GENERATION — the postings of
   *    batches `[lo, hi)` folded into one segment (the
-  *    [[KeyedBatchStore]] fold discipline applied to an append-only
+  *    [[VersionedDir]] fold discipline applied to an append-only
   *    store). Without compaction a long-running stream accumulates one
   *    parquet directory per micro-batch and `postings()` unions an
   *    unbounded plan fan-in; folding every `compactEvery` deltas keeps
@@ -78,7 +78,6 @@ object StreamingIvf {
 
     private def fs = new Path(storePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    private def batchDir(id: Long) = s"$storePath/batch=$id"
     private def genDir(lo: Long, hi: Long) = s"$storePath/gen=${lo}_$hi"
     private val centroidsDir = s"$storePath/centroids"
     // store-format version marker: present on every store written (or
@@ -91,6 +90,19 @@ object StreamingIvf {
     private val formatMarker = new Path(storePath, "_graft_ivf_v2")
     private val PostingCols =
       Seq(col("cell"), col("neighbor_id"), col("vec"), col("vnorm"))
+    /** The stored postings row — what [[Similarity.ivfAssign]] emits
+      * for `vecSqlType` vectors, plus the batch id. Every delta and
+      * segment read passes it.
+      */
+    private val postingsSchema = org.apache.spark.sql.types.StructType
+      .fromDDL("cell BIGINT, neighbor_id BIGINT, " +
+        s"vec $vecSqlType, vnorm DOUBLE, __batch_id BIGINT")
+    private val deltas =
+      new VersionedDir(spark, storePath, "batch=", Some(postingsSchema))
+    private def readSegments(spans: Seq[(Long, Long)]): Option[DataFrame] =
+      if (spans.isEmpty) None
+      else Some(spark.read.schema(postingsSchema)
+        .parquet(spans.map { case (l, h) => genDir(l, h) }: _*))
 
     // Listing caches: committedSpans() costs one directory listing plus
     // one _SUCCESS existence probe PER gen dir, and a single search
@@ -124,7 +136,8 @@ object StreamingIvf {
           .coalesce(1).write.mode("overwrite").parquet(centroidsDir)
         centroidsIn
       } else {
-        val stored = spark.read.parquet(centroidsDir)
+        val stored = spark.read.schema("centroid_id BIGINT, cvec ARRAY<DOUBLE>")
+          .parquet(centroidsDir)
           .select(col("centroid_id"), col("cvec"))
           .collect()
           .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq))
@@ -153,50 +166,44 @@ object StreamingIvf {
     // post-migration stores a genuinely partial dir is never mistaken
     // for a legacy segment again.
     locally {
-      val root = new Path(storePath)
       if (!fs.exists(formatMarker)) {
-        if (fs.exists(root)) {
-          val gens = fs.listStatus(root).toSeq
-            .filter(s => s.isDirectory &&
-              s.getPath.getName.startsWith("gen="))
-          def span(name: String): Option[(Long, Long)] =
-            name.stripPrefix("gen=").split("_") match {
-              case Array(l, h) => for {
-                lo <- scala.util.Try(l.toLong).toOption
-                hi <- scala.util.Try(h.toLong).toOption
-              } yield (lo, hi)
-              case _ => None
-            }
-          val marked = gens
-            .filter(s => fs.exists(new Path(s.getPath, "_SUCCESS")))
-            .flatMap(s => span(s.getPath.getName))
-          gens.filter(s => !fs.exists(new Path(s.getPath, "_SUCCESS")))
-            .foreach { s =>
-              val committedLooking = span(s.getPath.getName).exists { sp =>
-                !marked.exists(m => m._1 <= sp._1 && sp._2 <= m._2) &&
-                  fs.listStatus(s.getPath).exists(f => f.isFile &&
-                    f.getPath.getName.endsWith(".parquet") && f.getLen > 0)
-              }
-              if (committedLooking)
-                fs.create(new Path(s.getPath, "_SUCCESS"), true).close()
-            }
+        val (marked, unmarked) =
+          genDirs().partition(g => fs.exists(new Path(g._1, "_SUCCESS")))
+        val markedSpans = marked.flatMap(_._2)
+        unmarked.foreach { case (dir, span) =>
+          val committedLooking = span.exists { sp =>
+            !markedSpans.exists(m => m._1 <= sp._1 && sp._2 <= m._2) &&
+              fs.listStatus(dir).exists(f => f.isFile &&
+                f.getPath.getName.endsWith(".parquet") && f.getLen > 0)
+          }
+          if (committedLooking)
+            fs.create(new Path(dir, "_SUCCESS"), true).close()
         }
         fs.create(formatMarker, true).close()
       }
     }
 
-    private def listDirs(prefix: String): Seq[String] = {
-      val dir = new Path(storePath)
-      if (!fs.exists(dir)) Seq.empty
-      else fs.listStatus(dir).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
-        .map(_.getPath.getName.stripPrefix(prefix))
+    /** Every `gen=` directory of the store with its parsed `[lo, hi)`
+      * span (None when the name does not parse); empty for a missing
+      * store.
+      */
+    private def genDirs(): Seq[(Path, Option[(Long, Long)])] = {
+      val root = new Path(storePath)
+      if (!fs.exists(root)) Seq.empty
+      else fs.listStatus(root).toSeq
+        .filter(s => s.isDirectory && s.getPath.getName.startsWith("gen="))
+        .map { s =>
+          val span = s.getPath.getName.stripPrefix("gen=").split("_") match {
+            case Array(l, h) =>
+              for (lo <- l.toLongOption; hi <- h.toLongOption) yield (lo, hi)
+            case _ => None
+          }
+          s.getPath -> span
+        }
     }
 
     private def batchIds(): Seq[Long] = {
-      if (batchIdCache == null)
-        batchIdCache = listDirs("batch=")
-          .flatMap(n => scala.util.Try(n.toLong).toOption).sorted
+      if (batchIdCache == null) batchIdCache = deltas.ids()
       batchIdCache
     }
 
@@ -211,18 +218,9 @@ object StreamingIvf {
       */
     private def committedSpans(): Seq[(Long, Long)] = {
       if (committedCache == null)
-        committedCache = listDirs("gen=")
-          .flatMap { n =>
-            n.split("_") match {
-              case Array(lo, hi) => for {
-                l <- scala.util.Try(lo.toLong).toOption
-                h <- scala.util.Try(hi.toLong).toOption
-              } yield (l, h)
-              case _ => None
-            }
-          }
-          .filter { case (l, h) =>
-            fs.exists(new Path(genDir(l, h), "_SUCCESS")) }
+        committedCache = genDirs()
+          .collect { case (dir, Some(span))
+            if fs.exists(new Path(dir, "_SUCCESS")) => span }
           .sortBy(_._1)
       committedCache
     }
@@ -277,16 +275,9 @@ object StreamingIvf {
       * removes it.
       */
     def update(batch: DataFrame, batchId: Long): Unit = synchronized {
-      maxStoredBatchId().filter(_ > batchId).foreach { m =>
-        throw new IllegalArgumentException(
-          s"postings store $storePath already holds batches up to $m " +
-            s"but batch $batchId arrived — a restarted stream must reuse " +
-            "its checkpointLocation, and a new query needs a fresh " +
-            "storePath")
-      }
-      Similarity.ivfAssign(batch, idCol, vecCol, centroids)
-        .withColumn("__batch_id", lit(batchId))
-        .write.mode("overwrite").parquet(batchDir(batchId))
+      VersionedDir.requireNoRegression(storePath, maxStoredBatchId(), batchId)
+      deltas.write(Similarity.ivfAssign(batch, idCol, vecCol, centroids)
+        .withColumn("__batch_id", lit(batchId)), batchId)
       invalidateListings()
       maybeCompact(batchId + 1L)
     }
@@ -310,15 +301,11 @@ object StreamingIvf {
       val pending = batchIds().filter(id => id >= lo && id < upto)
       if (pending.size >= compactEvery) {
         val hi = pending.max + 1L
-        writeSegment(
-          pending.map(i => spark.read.parquet(batchDir(i)))
-            .reduce(_ unionByName _), lo, hi)
-        pending.foreach(id => fs.delete(new Path(batchDir(id)), true))
-        invalidateListings()
+        writeSegment(deltas.read(pending), lo, hi)
       }
-      val stale = batchIds().filter(_ < coveredUpto())
-      if (stale.nonEmpty) {
-        stale.foreach(id => fs.delete(new Path(batchDir(id)), true))
+      // the folded deltas, and any leftovers below the frontier
+      if (batchIds().exists(_ < coveredUpto())) {
+        deltas.deleteBelow(coveredUpto())
         invalidateListings()
       }
       // hierarchical merge: fold the adjacent pair with the smallest
@@ -340,10 +327,7 @@ object StreamingIvf {
       while (live.size > maxSegments) {
         val (a, b) = live.zip(live.tail).minBy { case (x, y) =>
           (segBytes(x) + segBytes(y), x._1) }
-        writeSegment(
-          spark.read.parquet(genDir(a._1, a._2))
-            .unionByName(spark.read.parquet(genDir(b._1, b._2))),
-          a._1, b._2)
+        writeSegment(readSegments(Seq(a, b)).get, a._1, b._2)
         fs.delete(new Path(genDir(a._1, a._2)), true)
         fs.delete(new Path(genDir(b._1, b._2)), true)
         invalidateListings()
@@ -356,29 +340,17 @@ object StreamingIvf {
       * ignore them already).
       */
     private def sweepDeadGenDirs(): Unit = {
-      val dir = new Path(storePath)
-      if (!fs.exists(dir)) return
       val live = segments().toSet
-      fs.listStatus(dir).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("gen="))
-        .foreach { s =>
-          val span = s.getPath.getName.stripPrefix("gen=").split("_") match {
-            case Array(l, h) => for {
-              lo <- scala.util.Try(l.toLong).toOption
-              hi <- scala.util.Try(h.toLong).toOption
-            } yield (lo, hi)
-            case _ => None
-          }
-          val dead = span match {
-            case Some(sp) =>
-              !fs.exists(new Path(s.getPath, "_SUCCESS")) || !live(sp)
-            case None => true // unparseable gen dir: never readable
-          }
-          if (dead) {
-            fs.delete(s.getPath, true)
-            invalidateListings()
-          }
+      genDirs().foreach { case (dir, span) =>
+        val dead = span match {
+          case Some(sp) => !fs.exists(new Path(dir, "_SUCCESS")) || !live(sp)
+          case None => true // unparseable gen dir: never readable
         }
+        if (dead) {
+          fs.delete(dir, true)
+          invalidateListings()
+        }
+      }
     }
 
     /** The postings ingested by batches < `uptoBatch` (all, by
@@ -401,17 +373,11 @@ object StreamingIvf {
       * schema before and after its first delta lands.
       */
     def postings(uptoBatch: Long = Long.MaxValue): DataFrame = {
-      val covered = coveredUpto()
-      val segs = segments().filter(_._1 < uptoBatch)
-        .map { case (l, h) => spark.read.parquet(genDir(l, h)) }
-      val deltas = batchIds().filter(id => id >= covered && id < uptoBatch)
-        .map(i => spark.read.parquet(batchDir(i)))
-      val parts = segs ++ deltas
+      val parts = postingsParts(uptoBatch)
       if (parts.isEmpty)
-        spark.sql("SELECT CAST(NULL AS BIGINT) AS cell, " +
-          "CAST(NULL AS BIGINT) AS neighbor_id, " +
-          s"CAST(NULL AS $vecSqlType) AS vec, " +
-          "CAST(NULL AS DOUBLE) AS vnorm WHERE FALSE")
+        spark.createDataFrame(
+          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+          postingsSchema).select(PostingCols: _*)
       else parts.reduce(_ unionByName _)
         .filter(col("__batch_id") < uptoBatch)
         .select(PostingCols: _*)
@@ -444,13 +410,19 @@ object StreamingIvf {
       * and its regression frontier.
       */
     private def postingsWithBatchId(): DataFrame = {
-      val covered = coveredUpto()
-      val parts = segments()
-        .map { case (l, h) => spark.read.parquet(genDir(l, h)) } ++
-        batchIds().filter(_ >= covered)
-          .map(i => spark.read.parquet(batchDir(i)))
+      val parts = postingsParts(Long.MaxValue)
       require(parts.nonEmpty, s"nothing to rebuild at $storePath")
       parts.reduce(_ unionByName _)
+    }
+
+    /** The live segments starting below `uptoBatch` (one scan) and the
+      * pending deltas below it (one scan).
+      */
+    private def postingsParts(uptoBatch: Long): Seq[DataFrame] = {
+      val covered = coveredUpto()
+      val pending = batchIds().filter(id => id >= covered && id < uptoBatch)
+      readSegments(segments().filter(_._1 < uptoBatch)).toSeq ++
+        (if (pending.isEmpty) None else Some(deltas.read(pending)))
     }
 
     /** Execute the rebuild the drift signal asks for: re-sample a fresh
@@ -544,15 +516,17 @@ object StreamingIvf {
     require(batches.nonEmpty, "byBatch needs at least one batch")
     val acc = new IvfAccumulator(spark, storePath, idCol, vecCol,
       centroids, compactEvery = compactEvery)
-    val stateDirs = batches.zipWithIndex.map { case (b, i) =>
+    // not batch=/gen=: the accumulator's readers skip state= dirs
+    val states = new VersionedDir(spark, storePath, "state=")
+    batches.zipWithIndex.foreach { case (b, i) =>
       acc.update(b, i.toLong)
-      val dir = s"$storePath/state=$i" // not batch=/gen=: readers skip it
-      acc.search(queries, queryIdCol, k, nprobe, uptoBatch = i.toLong + 1)
-        .withColumn("batch_id", lit(i.toLong))
-        .select("batch_id", "query_id", "neighbor_id", "rank")
-        .write.mode("overwrite").parquet(dir) // materialize NOW — the
-      dir // next batch's fold deletes this state's delta files
+      // materialize NOW — the next batch's fold deletes this state's
+      // delta files
+      states.write(
+        acc.search(queries, queryIdCol, k, nprobe, uptoBatch = i.toLong + 1)
+          .withColumn("batch_id", lit(i.toLong))
+          .select("batch_id", "query_id", "neighbor_id", "rank"), i.toLong)
     }
-    stateDirs.map(spark.read.parquet(_)).reduce(_ unionByName _)
+    states.read(batches.indices.map(_.toLong))
   }
 }

@@ -315,7 +315,7 @@ object StreamingMinhashLsh {
     * batch must stay on its source partitioning (the exchange is not
     * free).
     */
-  private[streaming] def shouldFanOut(batchPartitions: Int,
-                                      parallelism: Int): Boolean =
+  private[graft] def shouldFanOut(batchPartitions: Int,
+                                  parallelism: Int): Boolean =
     batchPartitions.toLong * 2 < parallelism.toLong
 }

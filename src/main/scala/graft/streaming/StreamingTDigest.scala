@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -39,7 +38,7 @@ import graft.ext.TDigest
   * overwrites its own version directory and the fold is deterministic,
   * so foreachBatch retries rewrite identical bytes; restart recovery
   * reads the newest version on disk. Old versions are cleaned only
-  * AFTER the new version commits (the [[KeyedBatchStore]] discipline).
+  * AFTER the new version commits (the [[VersionedDir]] discipline).
   */
 object StreamingTDigest {
 
@@ -87,32 +86,19 @@ object StreamingTDigest {
         "IS the per-batch parallelism contract (rank windows run within " +
         "each group), so a separate shard column has nothing to split")
 
-    private def fs = new Path(storePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    private def versionDir(upTo: Long) = s"$storePath/digest_upto_$upTo"
-    private def batchDigestDir(id: Long) = s"$storePath/batch_digest_$id"
-
-    private def batchDigestIds(): Seq[Long] = {
-      val dir = new Path(storePath)
-      if (!fs.exists(dir)) Seq.empty
-      else fs.listStatus(dir).toSeq
-        .filter(s => s.isDirectory &&
-          s.getPath.getName.startsWith("batch_digest_"))
-        .flatMap(s => scala.util.Try(
-          s.getPath.getName.stripPrefix("batch_digest_").toLong).toOption)
-        .sorted
-    }
-
-    private def versions(): Seq[Long] = {
-      val dir = new Path(storePath)
-      if (!fs.exists(dir)) Seq.empty
-      else fs.listStatus(dir).toSeq
-        .filter(s => s.isDirectory &&
-          s.getPath.getName.startsWith("digest_upto_"))
-        .flatMap(s => scala.util.Try(
-          s.getPath.getName.stripPrefix("digest_upto_").toLong).toOption)
-        .sorted(Ordering[Long].reverse)
-    }
+    /** The folded digest's columns: declared for the global digest;
+      * a grouped store's `shard` takes the group column's type, so its
+      * schema is captured at the first fold instead (the empty frame
+      * before it types `shard` as STRING).
+      */
+    private val digestSchema = org.apache.spark.sql.types.StructType.fromDDL(
+      groupCol.map(_ => "shard STRING, ").getOrElse("") +
+        "weight BIGINT, sumv DECIMAL(28,8), vmin DECIMAL(28,8), " +
+        "vmax DECIMAL(28,8)")
+    private val folds = new VersionedDir(spark, storePath, "digest_upto_",
+      if (groupCol.isEmpty) Some(digestSchema) else None)
+    private val batchDigests =
+      new VersionedDir(spark, storePath, "batch_digest_")
 
     /** Fold one batch: `digest_{id+1} = merge(digest covering < id+1's
       * predecessor, summarize(batch))`. The predecessor is the newest
@@ -121,21 +107,13 @@ object StreamingTDigest {
       * version with identical bytes).
       */
     def update(batch: DataFrame, batchId: Long): Unit = synchronized {
-      // fail fast on batch-id REGRESSION: versions newer than this
-      // batch's own output mean the stream restarted without its
-      // checkpoint (batch ids re-start at 0) or the storePath is being
-      // reused by a new query. Folding through would write
-      // digest_upto_<batchId+1> below the stale versions, the
-      // newest-first cleanup would immediately delete it, and digest()
-      // would silently keep serving the stale state while every new
-      // fold is discarded.
-      val stale = versions().filter(_ > batchId + 1) ++
-        batchDigestIds().filter(_ > batchId)
-      require(stale.isEmpty,
-        s"digest store $storePath already holds state past batch " +
-          s"$batchId — a restarted stream must reuse its " +
-          "checkpointLocation (so batch ids resume), and a new query " +
-          "needs a fresh storePath")
+      // fail fast on batch-id REGRESSION: folding through would write
+      // digest_upto_<batchId+1> below the stale versions, retention
+      // would immediately delete it, and digest() would silently keep
+      // serving the stale state while every new fold is discarded
+      VersionedDir.requireNoRegression(storePath,
+        (folds.ids().map(_ - 1L) ++ batchDigests.ids()).reduceOption(_ max _),
+        batchId)
       val sharded = (groupCol, shardCol) match {
         case (Some(g), _) => batch.select(col(g).as("__shard"),
           col(valueCol).as("__v"))
@@ -151,7 +129,7 @@ object StreamingTDigest {
       // summarized once, not once per consumer
       val batchDigest =
         if (keepBatches > 0) {
-          summarized
+          val own = summarized
             .select("shard", "weight", "sumv", "vmin", "vmax")
             // one file: the digest is ≤ shards·(δ+1) summary rows by
             // construction (bounded at any data scale), but summarize
@@ -160,16 +138,16 @@ object StreamingTDigest {
             // PARTITION, and every windowed/decayed read re-pays the
             // open+footer cost per file (guide §6 small-files)
             .coalesce(1)
-            .write.mode("overwrite").parquet(batchDigestDir(batchId))
-          spark.read.parquet(batchDigestDir(batchId))
+          batchDigests.write(own, batchId)
+          batchDigests.read(batchId)
         } else summarized
       // keepCumulative = false (window/decay-only consumers): skip the
       // fold entirely — the per-batch digests ARE the state, and a
       // window reader shouldn't pay one merge re-cluster per batch for
       // a running digest it never reads
       if (keepCumulative) {
-        val prior = versions().find(_ <= batchId).map(v =>
-          spark.read.parquet(versionDir(v)))
+        val prior = folds.ids().filter(_ <= batchId).lastOption
+          .map(folds.read)
         // ALWAYS through the merge re-cluster (even batch 0 / one
         // shard): the stored state is canonically <= delta+1 rows (per
         // group when grouped), and the fold is one re-cluster per
@@ -184,14 +162,12 @@ object StreamingTDigest {
             TDigest.tdigestMerge(prior.toSeq :+ batchDigest, delta)
               .select("weight", "sumv", "vmin", "vmax")
         }
-        folded.coalesce(1).write.mode("overwrite")
-          .parquet(versionDir(batchId + 1))
-        versions().drop(keepVersions)
-          .foreach(old => fs.delete(new Path(versionDir(old)), true))
+        folds.write(folded.coalesce(1), batchId + 1)
+        // keep the newest keepVersions folds
+        folds.ids().takeRight(keepVersions).headOption
+          .foreach(folds.deleteBelow)
       }
-      if (keepBatches > 0)
-        batchDigestIds().filter(_ <= batchId - keepBatches)
-          .foreach(old => fs.delete(new Path(batchDigestDir(old)), true))
+      if (keepBatches > 0) batchDigests.deleteBelow(batchId - keepBatches + 1)
     }
 
     /** The folded digest over batches < `uptoBatch` (newest version at
@@ -206,14 +182,10 @@ object StreamingTDigest {
       require(keepCumulative,
         "window/decay-only accumulator (keepCumulative = false) keeps " +
           "no running digest — use quantilesWindow/quantilesDecayed")
-      versions().find(_ <= uptoBatch).map(v =>
-        spark.read.parquet(versionDir(v))).getOrElse(
-        spark.sql((if (groupCol.isDefined)
-          "SELECT CAST(NULL AS STRING) AS shard, " else "SELECT ") +
-          "CAST(NULL AS BIGINT) AS weight, " +
-          "CAST(NULL AS DECIMAL(28,8)) AS sumv, " +
-          "CAST(NULL AS DECIMAL(28,8)) AS vmin, " +
-          "CAST(NULL AS DECIMAL(28,8)) AS vmax WHERE FALSE"))
+      folds.ids().filter(_ <= uptoBatch).lastOption.map(folds.read)
+        .getOrElse(spark.createDataFrame(
+          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+          digestSchema))
     }
 
     /** Quantile reads with exact value brackets over the running
@@ -239,12 +211,12 @@ object StreamingTDigest {
           "are not retained by default)")
       val want = fromBatch until uptoBatch
       require(want.nonEmpty, s"empty window [$fromBatch, $uptoBatch)")
-      val have = batchDigestIds()
+      val have = batchDigests.ids()
         .filter(id => id >= fromBatch && id < uptoBatch)
       require(have == want,
         s"window [$fromBatch, $uptoBatch) not fully retained " +
           s"(have $have) — raise keepBatches")
-      have.map(id => id -> spark.read.parquet(batchDigestDir(id)))
+      have.map(id => id -> batchDigests.read(id))
     }
 
     private def readMerged(members: Seq[DataFrame],
@@ -366,7 +338,7 @@ object StreamingTDigest {
       // batches.nonEmpty, but this entry point is public)
       require(uptoBatch >= 1,
         s"uptoBatch must be >= 1 (no batch states to read), got $uptoBatch")
-      val have = batchDigestIds().toSet
+      val have = batchDigests.ids().toSet
       def members(u: Long): Seq[Long] =
         (math.max(0L, u - window) until u).toSeq
       (1L to uptoBatch).foreach { u =>
@@ -375,11 +347,9 @@ object StreamingTDigest {
           s"window [${want.head}, $u) not fully retained " +
             s"(have ${have.toSeq.sorted}) — raise keepBatches")
       }
-      def read(j: Long): DataFrame =
-        spark.read.parquet(batchDigestDir(j))
       val winFrames = for (u <- 1L to uptoBatch; j <- members(u)) yield
-        read(j).select(stateKey(u - 1).as("shard"), col("weight"),
-          col("sumv"), col("vmin"), col("vmax"))
+        batchDigests.read(j).select(stateKey(u - 1).as("shard"),
+          col("weight"), col("sumv"), col("vmin"), col("vmax"))
       val decayFrames = decayHalfLife.toSeq.flatMap { h =>
         require(h >= 1, s"halfLifeBatches must be >= 1, got $h")
         val maxShift = ((uptoBatch - 1) / h).toInt
@@ -393,7 +363,7 @@ object StreamingTDigest {
               s"${have.toSeq.sorted}) — raise keepBatches")
           val shift = ((uptoBatch - 1 - j) / h).toInt
           val f = 1L << (maxShift - shift)
-          read(j).select(stateKey(-1L).as("shard"),
+          batchDigests.read(j).select(stateKey(-1L).as("shard"),
             (col("weight") * f).as("weight"),
             (col("sumv") * f).cast("decimal(28,8)").as("sumv"),
             col("vmin"), col("vmax"))
