@@ -182,7 +182,7 @@ object Bench {
         name => parts.exists(name.contains)
       case None => _ => true
     }
-    val results = sharedRows ++ SparkEntry.queries.toSeq.sortBy(_._1)
+    val results = sharedRows ++ gates.Support.withScratch(SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => nameFilter(name) }
       .map { case (name, fn) =>
       val times = (1 to runs).flatMap { _ =>
@@ -203,7 +203,7 @@ object Bench {
       drainJobs(spark)
       System.gc()
       name -> (if (times.size == runs) times.min else -1.0)
-    }
+    })
     val qs = results.map { case (k, v) => "\"" + k + "\":" + num(v) }
       .mkString("{", ",", "}")
     val failed = results.count(_._2 < 0)

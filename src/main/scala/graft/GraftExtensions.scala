@@ -77,9 +77,15 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // Evaluate repeated regex-class subexpressions in Filter predicates
     // once per row (FilterExec has no cross-predicate subexpression
     // elimination; a pushed-down filter over parsed log columns otherwise
-    // re-runs the 19-group line parse per predicate reference). Physical,
-    // post-planner: every logical placement is undone by a later
-    // PushDownPredicates run — see the rule's scaladoc.
+    // re-runs the line parse per predicate reference). Physical: every
+    // logical placement is undone by a later PushDownPredicates run — see
+    // the rule's scaladoc. Post-planner rules run only under AQE, on the
+    // whole plan; a plan with no exchange never enters AQE, so the rule
+    // also runs as a pre-columnar-transition rule, the physical hook such
+    // plans do pass through (on an already rewritten plan it is a no-op).
     ext.injectQueryPostPlannerStrategyRule(_ => graft.plans.DedupFilterSubexprs)
+    ext.injectColumnar(_ => new org.apache.spark.sql.execution.ColumnarRule {
+      override def preColumnarTransitions = graft.plans.DedupFilterSubexprs
+    })
   }
 }

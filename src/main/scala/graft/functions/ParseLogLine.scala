@@ -3,21 +3,14 @@ package graft.functions
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Single-pass S3 access-log line parse: ONE regex execution per line
-  * producing all 18 capture groups as a struct, or NULL when the line does
-  * not match (the PERMISSIVE corrupt-record path).
-  *
-  * Why a custom Expression (SURVEY.md §2.9/§7.2 step 7): the declarative
-  * formulation runs `regexp_extract(line, PATTERN, i)` once per field plus
-  * an `rlike` guard — 19 executions of an 18-group regex per input line.
-  * This expression is the planned collapse to a single execution; the
-  * sentinel/null/cast post-processing stays in ordinary codegen'd column
-  * expressions reading struct fields.
+/** S3 access-log line → its 18 raw capture groups as a struct of strings,
+  * or NULL when the line does not match: the `parse_log_line` SQL function
+  * (GraftExtensions). The typed 19-column parse is
+  * [[ParseAccessLog]]; this keeps the raw-group contract for SQL callers.
   *
   * Group semantics mirror the reference pattern
   * (`scripts/oss_s3_server_side_logging_compacter.py:21-25`) via
@@ -58,27 +51,15 @@ object ParseLogLine {
 
 /** Static-call target for both the interpreted eval and the generated code
   * (Scala top-level objects emit static forwarders, so generated Java can
-  * call `graft.functions.ParseLogLineHelper.parse(...)` directly).
-  *
-  * Tokenization goes through [[graft.logs.LogLineTokenizer]]: a direct
-  * left-to-right walk for the common line shape, the compiled regex as
-  * fallback for anything irregular — identical capture semantics, several
-  * times faster on the hot path.
+  * call `graft.functions.ParseLogLineHelper.parse(...)` directly). Groups
+  * come from [[AccessLogKernel.groups]]: the byte walk, the regex as
+  * fallback.
   */
 object ParseLogLineHelper {
 
-  private val NumGroups = ParseLogLine.groupNames.length
-
   def parse(line: UTF8String): InternalRow = {
-    val groups = graft.logs.LogLineTokenizer.parseGroups(line.toString)
-    if (groups == null) return null
-    val arr = new Array[Any](NumGroups)
-    var i = 0
-    while (i < NumGroups) {
-      val g = groups(i)
-      arr(i) = if (g == null) null else UTF8String.fromString(g)
-      i += 1
-    }
-    new GenericInternalRow(arr)
+    val g = AccessLogKernel.groups(line)
+    if (g == null) return null
+    new GenericInternalRow(Array.tabulate[Any](ParseLogLine.groupNames.length)(g.string))
   }
 }

@@ -168,8 +168,7 @@ private[graft] object FormatGates extends GateFamily {
     // equal the oracle's aggregate over the original parquet. Covers
     // the second columnar format a lakehouse exchange needs.
     "q167_orc_roundtrip" -> ((s, dir) => {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-q167").toString + "/docs_orc"
+      val out = scratchDir("graft-q167") + "/docs_orc"
       tbl(s, dir, "documents").filter(col("doc_id").isNotNull)
         .select("doc_id", "lang", "n_chars")
         .write.mode("overwrite").format("orc")
@@ -240,8 +239,7 @@ private[graft] object FormatGates extends GateFamily {
     // bump.
     "q199_schema_evolution" -> ((s, dir) => {
       val d = tbl(s, dir, "documents").filter(col("doc_id").isNotNull)
-      val base = java.nio.file.Files
-        .createTempDirectory("graft-q199").toString + "/docs"
+      val base = scratchDir("graft-q199") + "/docs"
       d.filter(col("doc_id") % 2 === 0).select("doc_id", "lang")
         .write.mode("overwrite").parquet(base + "/v=1")
       d.filter(col("doc_id") % 2 =!= 0)

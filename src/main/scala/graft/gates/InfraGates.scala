@@ -63,8 +63,7 @@ private[graft] object InfraGates extends GateFamily {
     // (filters present, membership answers) live in LayoutSpec.
     "q188_bloom_layout" -> ((s, dir) => {
       val docs = tbl(s, dir, "documents").select("doc_id", "source", "lang")
-      val dest = java.nio.file.Files.createTempDirectory("graft-bloom")
-        .toString + "/docs"
+      val dest = scratchDir("graft-bloom") + "/docs"
       ext.Layout.writeWithBloomFilters(docs, dest, Seq("doc_id"),
         ndvPerGroup = 1000L, numFiles = 4)
       s.read.parquet(dest)
@@ -82,8 +81,7 @@ private[graft] object InfraGates extends GateFamily {
     // one row group, so the expected footers are plain SQL aggregates:
     // the audit is exact, not rows-only.
     "q226_layout_audit" -> ((s, dir) => {
-      val dest = java.nio.file.Files
-        .createTempDirectory("graft-q226").toString + "/ds"
+      val dest = scratchDir("graft-q226") + "/ds"
       tbl(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_quantity"), col("l_returnflag"))
         .repartition(col("l_returnflag"))

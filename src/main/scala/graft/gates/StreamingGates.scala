@@ -53,8 +53,7 @@ private[graft] object StreamingGates extends GateFamily {
             array_join(slice(words, 1, 8), " "),
             lit("Subscribe to our newsletter!"),
             array_join(slice(words, 9, 8), " ")).as("text"))
-      val store = java.nio.file.Files
-        .createTempDirectory("graft-q118").toString + "/paras"
+      val store = scratchDir("graft-q118") + "/paras"
       streaming.StreamingParagraphDedup.byBatch(s,
           Seq(shaped.filter(col("doc_id") % 3 =!= 0),
             shaped.filter(col("doc_id") % 3 === 0)),
@@ -75,8 +74,7 @@ private[graft] object StreamingGates extends GateFamily {
         .select((col("doc_id") + 90000).as("doc_id"),
           concat(array_join(slice(words, 1, 10), " "),
             lit(" tail"), col("doc_id").cast("string")).as("text"))
-      val store = java.nio.file.Files
-        .createTempDirectory("graft-q104").toString + "/grams"
+      val store = scratchDir("graft-q104") + "/grams"
       streaming.StreamingSpanDedup.byBatch(s, Seq(day1, day2), store,
           "doc_id", "text", k = 5)
         .orderBy("batch_id", "doc_id", "span_start")
@@ -112,8 +110,7 @@ private[graft] object StreamingGates extends GateFamily {
       val b3 = d.filter(col("doc_id") % 3 === 2)
         .select(((col("doc_id") * 11 + 7) % 200).as("id_a"),
           ((col("doc_id") * 13 + 2) % 200).as("id_b"))
-      val store = java.nio.file.Files
-        .createTempDirectory("graft-q148").toString + "/labels"
+      val store = scratchDir("graft-q148") + "/labels"
       streaming.StreamingComponents.byBatch(s, Seq(b1, b2, b3), store)
         .withColumnRenamed("comp", "component")
         .orderBy("id")
@@ -138,8 +135,7 @@ private[graft] object StreamingGates extends GateFamily {
               col("doc_id").cast("string"))),
           when(col("doc_id") < 4, lit("Rare promo banner"))
             .otherwise(lit("All rights reserved to no one."))).as("text"))
-      val store = java.nio.file.Files
-        .createTempDirectory("graft-q135").toString + "/lines"
+      val store = scratchDir("graft-q135") + "/lines"
       streaming.StreamingBoilerplate.byBatch(s,
           Seq(shaped.filter(col("doc_id") % 3 =!= 0),
             shaped.filter(col("doc_id") % 3 === 0)),
@@ -159,8 +155,7 @@ private[graft] object StreamingGates extends GateFamily {
           (col("user_id") % 50).cast("string")).as("key"), col("event_id"))
       val batches = (0 to 2).map(i =>
         e.filter(col("event_id") % 3 === i).select("key"))
-      val store = java.nio.file.Files
-        .createTempDirectory("graft-q157").toString + "/counts"
+      val store = scratchDir("graft-q157") + "/counts"
       streaming.StreamingTopK.byBatch(s, batches, store, "key", k = 20)
         .orderBy(col("n_total").desc, col("key"))
     }),
@@ -199,8 +194,7 @@ private[graft] object StreamingGates extends GateFamily {
         .select(col("user_id"), col("ts"), col("event_id"),
           col("event_type"), col("value"))
       val batches = (0 to 2).map(i => e.filter(col("event_id") % 3 === i))
-      val store = java.nio.file.Files
-        .createTempDirectory("graft-q194").toString + "/cdc"
+      val store = scratchDir("graft-q194") + "/cdc"
       graft.streaming.StreamingMerge.byBatch(s, batches, store,
           "user_id", orderCols = Seq("ts", "event_id"))
         .select(col("user_id"), col("event_id").as("last_event_id"),
@@ -251,8 +245,7 @@ private[graft] object StreamingGates extends GateFamily {
         .filter(col("doc_id").isNotNull && col("text").isNotNull)
       val batches = (0 to 2).map(i => words(docs.filter(col("doc_id") % 3 === i)))
       val probes = words(docs.filter(col("doc_id") % 89 === 0))
-      val store = java.nio.file.Files
-        .createTempDirectory("graft-q225").toString + "/cms"
+      val store = scratchDir("graft-q225") + "/cms"
       streaming.StreamingFreqSketch.byBatch(s, batches, store, "word",
           probes, "word", width = 512, minCount = 80L)
         .orderBy("item")
@@ -275,8 +268,7 @@ private[graft] object StreamingGates extends GateFamily {
           .select("event_type", "user_id"))
       val probes = ev.filter(col("user_id") % 97 === 0)
         .select("event_type", "user_id")
-      val store = java.nio.file.Files
-        .createTempDirectory("graft-q273").toString + "/cms"
+      val store = scratchDir("graft-q273") + "/cms"
       streaming.StreamingFreqSketch.byBatchBy(s, batches, store,
           "event_type", "user_id", probes, "event_type", "user_id",
           width = 256, minCount = 2L)
@@ -299,8 +291,7 @@ private[graft] object StreamingGates extends GateFamily {
           floor(col("o_totalprice")).cast("long").as("v"))
       val batches = (0L to 2L).map(i =>
         vals.filter(col("b") === i).select("v"))
-      val store = java.nio.file.Files
-        .createTempDirectory("graft-q276").toString + "/hdr"
+      val store = scratchDir("graft-q276") + "/hdr"
       streaming.StreamingHdr.byBatchWindow(s, batches, store, "v",
           Seq(0.5, 0.99), window = 2, subBits = 5,
           decayHalfLife = Some(1))
@@ -323,8 +314,7 @@ private[graft] object StreamingGates extends GateFamily {
       val batches = (0 to 2).map(i =>
         ev.filter(col("event_id") % 3 === i).select("user_id"))
       val probes = ev.filter(col("user_id") % 97 === 0).select("user_id")
-      val store = java.nio.file.Files
-        .createTempDirectory("graft-q275").toString + "/cms"
+      val store = scratchDir("graft-q275") + "/cms"
       streaming.StreamingFreqSketch.byBatchWindow(s, batches, store,
           "user_id", probes, "user_id", width = 256, window = 2,
           minCount = 1L, decayHalfLife = Some(1))
@@ -348,8 +338,7 @@ private[graft] object StreamingGates extends GateFamily {
           .select("event_type", "user_id"))
       val probes = ev.filter(col("user_id") % 97 === 0)
         .select("event_type", "user_id")
-      val store = java.nio.file.Files
-        .createTempDirectory("graft-q278").toString + "/cms"
+      val store = scratchDir("graft-q278") + "/cms"
       streaming.StreamingFreqSketch.byBatchWindowBy(s, batches, store,
           "event_type", "user_id", probes, "event_type", "user_id",
           width = 256, window = 2, minCount = 1L,
@@ -373,8 +362,7 @@ private[graft] object StreamingGates extends GateFamily {
           floor(col("o_totalprice")).cast("long").as("v"))
       val batches = (0L to 2L).map(i =>
         vals.filter(col("b") === i).select("g", "v"))
-      val store = java.nio.file.Files
-        .createTempDirectory("graft-q279").toString + "/hdr"
+      val store = scratchDir("graft-q279") + "/hdr"
       streaming.StreamingHdr.byBatchWindowBy(s, batches, store, "g",
           "v", Seq(0.5, 0.99), window = 2, subBits = 5,
           decayHalfLife = Some(1))
@@ -391,8 +379,7 @@ private[graft] object StreamingGates extends GateFamily {
       val ev = tbl(s, dir, "events").filter(col("event_id").isNotNull)
       val batches = (0 to 2).map(i =>
         ev.filter(col("event_id") % 3 === i).select("event_id"))
-      val store = java.nio.file.Files
-        .createTempDirectory("graft-q236").toString + "/res"
+      val store = scratchDir("graft-q236") + "/res"
       streaming.StreamingReservoir.byBatch(s, batches, store,
           "event_id", "BIGINT", k = 100)
         .orderBy("priority", "event_id")
@@ -411,8 +398,7 @@ private[graft] object StreamingGates extends GateFamily {
           concat(lit("u"), col("user_id").cast("string")).as("item"))
       val batches = (0 to 2).map(i =>
         ev.filter(col("event_id") % 3 === i).select("item"))
-      val store = java.nio.file.Files
-        .createTempDirectory("graft-q242").toString + "/bloom"
+      val store = scratchDir("graft-q242") + "/bloom"
       streaming.StreamingBloom.byBatch(s, batches, store, "item",
           mBits = 8192)
         .orderBy("batch_id")
@@ -430,8 +416,7 @@ private[graft] object StreamingGates extends GateFamily {
           floor(col("o_totalprice")).cast("long").as("v"))
       val batches = (0L to 2L).map(i =>
         vals.filter(col("b") === i).select("v"))
-      val store = java.nio.file.Files
-        .createTempDirectory("graft-q247").toString + "/hdr"
+      val store = scratchDir("graft-q247") + "/hdr"
       streaming.StreamingHdr.byBatch(s, batches, store, "v",
           Seq(0.5, 0.9, 0.99), subBits = 5)
         .orderBy("batch_id", "q")
@@ -453,8 +438,7 @@ private[graft] object StreamingGates extends GateFamily {
             (col("event_id") % 50L).cast("string")).as("item"))
       val batches = (0L to 2L).map(i =>
         ev.filter(col("b") === i).select("item"))
-      val store = java.nio.file.Files
-        .createTempDirectory("graft-q252").toString + "/hll"
+      val store = scratchDir("graft-q252") + "/hll"
       val est = streaming.StreamingHll.byBatch(s, batches, store,
         "item", p = 8, window = 2)
       val di = ev.select(col("b"), col("item")).distinct()
@@ -489,8 +473,7 @@ private[graft] object StreamingGates extends GateFamily {
           col("o_totalprice").as("v"))
       val batches = (0L to 2L).map(i =>
         vals.filter(col("b") === i).select("shard", "v"))
-      val store = java.nio.file.Files
-        .createTempDirectory("graft-q260").toString + "/tdigest"
+      val store = scratchDir("graft-q260") + "/tdigest"
       graft.streaming.StreamingTDigest.byBatch(s, batches, store, "v",
           Seq(0.5, 0.9), shardCol = Some("shard"), delta = 32)
         .select(col("batch_id"), col("qi"), col("q"), col("n"),
@@ -521,8 +504,7 @@ private[graft] object StreamingGates extends GateFamily {
           col("o_totalprice").as("v"))
       val batches = (0L to 2L).map(i =>
         vals.filter(col("b") === i).select("shard", "v"))
-      val store = java.nio.file.Files
-        .createTempDirectory("graft-q274").toString + "/tdigest"
+      val store = scratchDir("graft-q274") + "/tdigest"
       graft.streaming.StreamingTDigest.byBatchWindow(s, batches, store,
           "v", Seq(0.5, 0.9), window = 2, shardCol = Some("shard"),
           delta = 16, decayHalfLife = Some(1))
@@ -554,8 +536,7 @@ private[graft] object StreamingGates extends GateFamily {
           col("o_totalprice").as("v"))
       val batches = (0L to 2L).map(i =>
         vals.filter(col("b") === i).select("grp", "v"))
-      val store = java.nio.file.Files
-        .createTempDirectory("graft-q277").toString + "/tdigest"
+      val store = scratchDir("graft-q277") + "/tdigest"
       graft.streaming.StreamingTDigest.byBatchWindow(s, batches, store,
           "v", Seq(0.5, 0.9), window = 2, delta = 16,
           decayHalfLife = Some(1), groupCol = Some("grp"))
@@ -589,8 +570,7 @@ private[graft] object StreamingGates extends GateFamily {
           col("o_totalprice").as("v"))
       val batches = (0L to 1L).map(i =>
         vals.filter(col("b") === i).select("grp", "v"))
-      val store = java.nio.file.Files
-        .createTempDirectory("graft-q267").toString + "/tdigest"
+      val store = scratchDir("graft-q267") + "/tdigest"
       graft.streaming.StreamingTDigest.byBatch(s, batches, store, "v",
           Seq(0.5, 0.9), delta = 16, groupCol = Some("grp"))
         .select(col("batch_id"), col("shard").as("grp"), col("qi"),
@@ -623,8 +603,7 @@ private[graft] object StreamingGates extends GateFamily {
         "embedding", numCells = 16)
       val qs = em.filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), col("embedding"))
-      val store = java.nio.file.Files
-        .createTempDirectory("graft-q269").toString + "/ivf"
+      val store = scratchDir("graft-q269") + "/ivf"
       graft.streaming.StreamingIvf.byBatch(s, batches, store, "vec_id",
           "embedding", cents, qs, "query_id", k = 10, nprobe = 4,
           compactEvery = 2)
@@ -648,8 +627,7 @@ private[graft] object StreamingGates extends GateFamily {
             (col("event_id") % 50L).cast("string")).as("item"))
       val batches = (0L to 2L).map(i =>
         ev.filter(col("b") === i).select("t", "item"))
-      val store = java.nio.file.Files
-        .createTempDirectory("graft-q270").toString + "/hll"
+      val store = scratchDir("graft-q270") + "/hll"
       val est = graft.streaming.StreamingHll.byBatchBy(s, batches, store,
         "t", "item", p = 8, window = 2)
       val di = ev.select(col("b"), col("t"), col("item")).distinct()
@@ -682,8 +660,7 @@ private[graft] object StreamingGates extends GateFamily {
           floor(col("o_totalprice")).cast("long").as("v"))
       val batches = (0L to 2L).map(i =>
         vals.filter(col("b") === i).select("g", "v"))
-      val store = java.nio.file.Files
-        .createTempDirectory("graft-q271").toString + "/hdr"
+      val store = scratchDir("graft-q271") + "/hdr"
       graft.streaming.StreamingHdr.byBatchBy(s, batches, store, "g", "v",
           Seq(0.5, 0.99), subBits = 5)
         .orderBy("batch_id", "grp", "q")
@@ -707,8 +684,7 @@ private[graft] object StreamingGates extends GateFamily {
       // mod 3), so the replay exercises BOTH directions: copy probing
       // its earlier original AND original probing its earlier copy
       val batches = (0 to 2).map(b => all.filter(col("doc_id") % 3 === b))
-      val store = java.nio.file.Files
-        .createTempDirectory("graft-q280").toString + "/lsh"
+      val store = scratchDir("graft-q280") + "/lsh"
       streaming.StreamingMinhashLsh.byBatch(s, batches, store,
           "doc_id", "text", shingleSize = 3, numHashes = 64, bands = 16,
           estThreshold = 0.8)

@@ -21,6 +21,36 @@ private[graft] object Support {
   def tbl(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
 
+  /** The directory the gates of one run put their stores and scratch
+    * tables under, created on first use; None outside a run.
+    */
+  private var scratch: Option[java.nio.file.Path] = None
+
+  def scratchRoot: Option[java.nio.file.Path] = synchronized(scratch)
+
+  /** A fresh directory under the run's scratch root. A gate's result
+    * reads it lazily, so it must outlive the gate call: [[withScratch]]
+    * deletes the root once the caller has consumed every result.
+    */
+  def scratchDir(prefix: String): String = synchronized {
+    val root = scratch.getOrElse {
+      val r = java.nio.file.Files.createTempDirectory("graft-run")
+      scratch = Some(r)
+      r
+    }
+    java.nio.file.Files.createTempDirectory(root, prefix).toString
+  }
+
+  /** Run `body` (gates and the writes of their results), then delete
+    * every directory the gates created under the scratch root.
+    */
+  def withScratch[T](body: => T): T =
+    try body
+    finally synchronized {
+      scratch.foreach(root => org.apache.commons.io.FileUtils.deleteQuietly(root.toFile))
+      scratch = None
+    }
+
   /** The id column of `docs` as a Dataset[Long], fanned out to the
     * session parallelism when the scan arrives narrower than HALF of it
     * (one small parquet file = ONE scan partition), for per-id asset

@@ -1,16 +1,18 @@
 package graft.logs
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graft.ColumnBridge
 
-/** Raw access-log lines → typed 19-column DataFrame, as pure column
+import graft.functions.{NonBlankLine, ParseAccessLog}
+
+/** Raw access-log lines → typed 19-column DataFrame, as Catalyst
   * expressions (whole-stage-codegen friendly, no UDFs, no Python/RDD hop).
   *
   * Grammar: the 18-group regex of the reference
   * (`scripts/oss_s3_server_side_logging_compacter.py:21-25`), translated
   * Python→Java (named groups dropped; applied unanchored, matching
-  * `re.search` — Spark's `rlike`/`regexp_extract` use `Matcher.find`).
+  * `re.search` — `Matcher.find`).
   *
   * Semantics preserved bit-for-bit (reference `:45-100`):
   *   - unparseable line → 18 nulls + `error_line` = raw text;
@@ -18,12 +20,12 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   *     `bytes_sent`, `object_size`, `total_time`, `turn_around_time`,
   *     `version_id`; the 3-char `'"-"'` sentinel for `referrer`/`user_agent`;
   *     `request` is never nulled and keeps its surrounding quotes;
-  *   - `version_id` captures exactly ONE non-space char (`(?P<version>\S)`,
-  *     a reference quirk kept for fidelity);
+  *   - `version_id` captures exactly ONE non-space code point
+  *     (`(?P<version>\S)`, a reference quirk kept for fidelity);
   *   - timestamp: text between `[` and the first space, parsed as
-  *     `dd/MMM/yyyy:HH:mm:ss`; the `+0000` offset is discarded (reference
-  *     `:37-42` slices it off before parsing) → naive UTC; parse failure →
-  *     null (reference returns None on exception).
+  *     `dd/MMM/yyyy:HH:mm:ss` in the session time zone; the `+0000` offset
+  *     is discarded (reference `:37-42` slices it off before parsing);
+  *     parse failure → null (reference returns None on exception).
   */
 object LogLineParser {
 
@@ -32,82 +34,30 @@ object LogLineParser {
     """(\S+) (\S+) (\[[^\]]*\]) (\S+) (\S+) (\S+) (\S+) (\S+) ("[^"]*"|-) """ +
     """(\S+) (\S+) (\S+) (\S+) (\S+) (\S+) ("[^"]*"|-) ("[^"]*"|-) (\S)"""
 
+  /** The reference's `request_time` format (`:37-42`). */
+  val TimeFormat: String = "dd/MMM/yyyy:HH:mm:ss"
+
   /** Parse a one-string-column DataFrame (default column `value`, as
     * produced by `spark.read.text`) into the canonical 19-column frame.
     *
-    * Physical shape: a first projection runs the single-pass
-    * `graft.functions.ParseLogLine` expression (ONE regex execution per
-    * line → struct of 18 raw groups, null on miss); a second projection
-    * applies the sentinel/null/cast logic on struct fields. The struct
-    * attribute is referenced 19× by non-cheap consumers, so
-    * CollapseProject keeps the stages separate and the regex runs once.
+    * Physical shape: one projection runs the [[graft.functions.ParseAccessLog]]
+    * kernel (one byte walk per line → the typed struct), a second one
+    * expands its fields. The struct is referenced 19× by the expansion, so
+    * CollapseProject keeps the two apart and the kernel runs once per
+    * line; a filter pushed below it shares one evaluation with the
+    * projection ([[graft.plans.DedupFilterSubexprs]]).
     */
   def parse(raw: DataFrame, lineCol: String = "value"): DataFrame = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    val line = col(lineCol)
-    val parsedCol = ColumnBridge.column(
-      graft.functions.ParseLogLine(ColumnBridge.expression(line)))
-    val withP = raw.select(line.as("_line"), parsedCol.as("_parsed"))
-
-    val p = col("_parsed")
-    val matched = p.isNotNull
-    def g(name: String): Column = p.getField(name)
-    def dashNull(name: String): Column = nullif(g(name), lit("-"))
-    def quotedDashNull(name: String): Column = nullif(g(name), lit("\"-\""))
-    // PERMISSIVE under ANSI mode: numeric fields parse only when they look
-    // numeric AND fit the target width; '-', garbage, and oversized tokens
-    // → null instead of an ANSI cast/overflow error (a non-numeric token
-    // would have crashed the reference's int(); an oversized one would
-    // have crashed its Row→DataFrame conversion — a single bad line must
-    // not kill a 100 TB scan, so both degrade to null by design).
-    // Digit caps are conservative-safe: 9 < len("2147483647"), 18 <
-    // len("9223372036854775807").
-    def dashNullAs(name: String, t: org.apache.spark.sql.types.DataType): Column = {
-      val maxDigits = t match {
-        case IntegerType => 9
-        case _ => 18
-      }
-      val c = g(name)
-      when(c.rlike(s"^-?[0-9]{1,$maxDigits}$$"), c.cast(t))
-    }
-
-    // Reference time munging (`:37-42`): keep only the text between '[' and
-    // the first space — i.e. drop the numeric offset — then lenient-parse;
-    // try_to_timestamp → null on failure (the reference returns None).
-    // Pure substring math (chars 2 .. pos(' ')-1 of "[dd/MMM/yyyy:HH:mm:ss
-    // +0000]"), no second regex.
-    val timeGrp = g("time")
-    val tsText = timeGrp.substr(lit(2), instr(timeGrp, " ") - 2)
-    val requestTime = try_to_timestamp(tsText, lit("dd/MMM/yyyy:HH:mm:ss"))
-
-    withP.select(
-      g("owner").as("bucket_owner"),
-      g("bucket").as("s3_bucket"),
-      requestTime.as("request_time"),
-      g("ip").as("remote_ip"),
-      g("requester").as("requester"),
-      g("reqid").as("request_id"),
-      g("operation").as("operation"),
-      dashNull("key").as("key"),
-      g("request").as("request"),
-      dashNullAs("status", IntegerType).as("http_status"),
-      dashNull("error").as("error_code"),
-      dashNullAs("bytes", LongType).as("bytes_sent"),
-      dashNullAs("size", LongType).as("object_size"),
-      dashNullAs("totaltime", LongType).as("total_time"),
-      dashNullAs("turnaround", LongType).as("turn_around_time"),
-      quotedDashNull("referrer").as("referrer"),
-      quotedDashNull("useragent").as("user_agent"),
-      dashNull("version").as("version_id"),
-      when(matched, lit(null).cast("string")).otherwise(col("_line")).as("error_line")
-    )
+    val kernel = ParseAccessLog(ColumnBridge.expression(col(lineCol)))
+    raw.select(ColumnBridge.column(kernel).as("_parsed")).select("_parsed.*")
   }
 
   /** Drop blank / whitespace-only lines before parsing (reference
     * `s3_read_file` strips each line and skips empties, `:165-167`).
-    * `rlike("\\S")` rather than `trim`: Spark's trim strips spaces only,
-    * Python's strip() strips all whitespace.
+    * Blank means no character outside Java regex `\s` — Python's strip()
+    * strips all whitespace, Spark's trim only spaces — tested on the bytes
+    * with the whitespace class the kernel's walk uses.
     */
   def dropBlankLines(raw: DataFrame, lineCol: String = "value"): DataFrame =
-    raw.filter(col(lineCol).rlike("\\S"))
+    raw.filter(ColumnBridge.column(NonBlankLine(ColumnBridge.expression(col(lineCol)))))
 }

@@ -2,9 +2,6 @@ package graft.sources
 
 import java.io.{BufferedReader, InputStreamReader}
 import java.nio.charset.StandardCharsets
-import java.time.LocalDateTime
-import java.time.format.DateTimeFormatter
-import java.util.Locale
 
 import scala.collection.mutable
 
@@ -18,10 +15,11 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownRequiredColumns, SupportsReportStatistics}
 import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.functions.{AccessLogKernel, RequestTime}
 import graft.logs.AccessLogSchema
 
 /** DataSource V2 provider for raw S3 server-side access logs:
@@ -34,8 +32,8 @@ import graft.logs.AccessLogSchema
   * collapsed into ONE Spark scan node, so the parse participates in
   * Catalyst planning instead of running above it:
   *
-  *  - '''column pruning''' reaches the parser ([[SupportsPushDownRequiredColumns]]):
-  *    `select(operation)` materializes one field per line, not 19 — the
+  *  - '''column pruning''' reaches the scan ([[SupportsPushDownRequiredColumns]]):
+  *    `select(operation)` emits rows of one field, not 19 — the
   *    slides' "19 columns stored, ~7 referenced" observation applied to the
   *    RAW-text path, which the reference could never prune;
   *  - '''size-balanced splits''': files are first-fit bin-packed into
@@ -46,8 +44,9 @@ import graft.logs.AccessLogSchema
   *  - '''driver memory''': listing streams through `RemoteIterator`
   *    (pagination, slides "Clue #3") — only (path, size) pairs are held;
   *  - semantics are bit-identical to [[LogLineParser.parse]] over
-  *    `spark.read.text` (PERMISSIVE `error_line`, sentinel nulls, naive-UTC
-  *    second-precision timestamps) — asserted cross-path in the spec.
+  *    `spark.read.text` (PERMISSIVE `error_line`, sentinel nulls,
+  *    second-precision timestamps in the session time zone): both run the
+  *    same kernel, and the spec asserts it cross-path.
   *
   * Registered as short name `accesslog` via META-INF/services.
   */
@@ -316,9 +315,10 @@ final case class AccessLogReaderFactory(required: StructType,
       required, pushed, conf, sessionTimeZone)
 }
 
-/** Streams each file line-by-line through [[LogLineTokenizer]] (fast walk
-  * + regex fallback, identical capture semantics) and emits only the
-  * pruned fields.
+/** Streams each file line-by-line through the parse kernel
+  * ([[graft.functions.AccessLogKernel]], the one implementation of the
+  * group → typed-column rules, shared with [[LogLineParser.parse]]) and
+  * emits only the pruned fields.
   */
 final class AccessLogPartitionReader(part: AccessLogInputPartition,
                                      required: StructType,
@@ -333,22 +333,21 @@ final class AccessLogPartitionReader(part: AccessLogInputPartition,
     c
   }
   private val codecs = new CompressionCodecFactory(hadoopConf)
-  // canonical-name → group-extractor, computed once; the row builder walks
-  // the pruned schema only. Timestamps resolve in the SESSION timezone,
-  // matching what try_to_timestamp does on the text+parse path.
-  private val zone = java.time.ZoneId.of(sessionTimeZone)
-  private val extractors: Array[(Array[String], String) => Any] =
-    required.fieldNames.map(f => AccessLogPartitionReader.extractorFor(f, zone))
+  // Timestamps resolve in the SESSION timezone, as on the text+parse path
+  private val time = new RequestTime(sessionTimeZone)
+  // the row builder copies the pruned fields only, by canonical position
+  private val positions: Array[Int] =
+    required.fieldNames.map(AccessLogSchema.columns.indexOf(_))
+  private val types: Array[DataType] = positions.map(AccessLogSchema.schema(_).dataType)
 
-  // compiled keep-predicates over the capture groups: a row failing one
-  // is skipped before any InternalRow materializes
-  private val keeps: Array[(Array[String], String) => Boolean] =
+  // compiled keep-predicates over the typed row: a row failing one is
+  // skipped before the pruned row materializes
+  private val keeps: Array[InternalRow => Boolean] =
     pushed.flatMap(AccessLogFilterEval.compile).toArray
 
   private var fileIdx = -1
   private var reader: BufferedReader = _
-  private var line: String = _
-  private var groups: Array[String] = _
+  private var parsed: InternalRow = _
 
   private def nextReader(): Boolean = {
     if (reader != null) { reader.close(); reader = null }
@@ -369,26 +368,29 @@ final class AccessLogPartitionReader(part: AccessLogInputPartition,
   override def next(): Boolean = {
     while (true) {
       if (reader == null && !nextReader()) return false
-      line = reader.readLine()
+      val line = reader.readLine()
       if (line == null) { reader.close(); reader = null }
-      else if (AccessLogPartitionReader.hasNonWhitespace(line)) {
+      else {
+        val utf8 = UTF8String.fromString(line)
         // blank lines dropped (reference strips + skips empties, :165-167);
         // parse here so pushed filters can reject pre-materialization
-        groups = graft.logs.LogLineTokenizer.parseGroups(line)
-        var keep = true
-        var k = 0
-        while (keep && k < keeps.length) { keep = keeps(k)(groups, line); k += 1 }
-        if (keep) return true
+        if (AccessLogKernel.nonBlank(utf8)) {
+          parsed = AccessLogKernel.parse(utf8, time)
+          var keep = true
+          var k = 0
+          while (keep && k < keeps.length) { keep = keeps(k)(parsed); k += 1 }
+          if (keep) return true
+        }
       }
     }
     false
   }
 
   override def get(): InternalRow = {
-    val vals = new Array[Any](extractors.length)
+    val vals = new Array[Any](positions.length)
     var i = 0
     while (i < vals.length) {
-      vals(i) = extractors(i)(groups, line)
+      vals(i) = parsed.get(positions(i), types(i))
       i += 1
     }
     new GenericInternalRow(vals)
@@ -397,10 +399,9 @@ final class AccessLogPartitionReader(part: AccessLogInputPartition,
   override def close(): Unit = if (reader != null) { reader.close(); reader = null }
 }
 
-/** Conservative reader-side evaluation of pushed-down filters over the raw
-  * capture groups (sentinel/null/typed semantics applied, matching the
-  * canonical projection). Unsupported filters compile to None and are left
-  * entirely to Spark; supported ones ALSO remain Spark-evaluated (see
+/** Conservative reader-side evaluation of pushed-down filters over the
+  * typed row. Unsupported filters compile to None and are left entirely to
+  * Spark; supported ones ALSO remain Spark-evaluated (see
   * [[AccessLogScanBuilder.pushFilters]]), so this only ever has to be
   * sound on the rows it DROPS: a dropped row must be one the equivalent
   * Catalyst predicate would reject (null comparisons reject in SQL).
@@ -408,28 +409,21 @@ final class AccessLogPartitionReader(part: AccessLogInputPartition,
 private[sources] object AccessLogFilterEval {
   import org.apache.spark.sql.sources._
 
-  private val StringCols: Map[String, (Array[String], String) => String] = {
-    def plain(i: Int): (Array[String], String) => String =
-      (g, _) => if (g == null) null else g(i)
-    def sent(i: Int, s: String): (Array[String], String) => String =
-      (g, _) => if (g == null) null else { val v = g(i); if (v == s) null else v }
-    Map(
-      "bucket_owner" -> plain(0), "s3_bucket" -> plain(1),
-      "remote_ip" -> plain(3), "requester" -> plain(4),
-      "request_id" -> plain(5), "operation" -> plain(6),
-      "key" -> sent(7, "-"), "request" -> plain(8),
-      "error_code" -> sent(10, "-"), "referrer" -> sent(15, "\"-\""),
-      "user_agent" -> sent(16, "\"-\""), "version_id" -> sent(17, "-"),
-      "error_line" -> ((g, raw) => if (g == null) raw else null))
+  private def column(c: String): Option[(Int, DataType)] = {
+    val i = AccessLogSchema.columns.indexOf(c)
+    if (i < 0) None else Some((i, AccessLogSchema.schema(i).dataType))
   }
 
-  private val NumCols: Map[String, (Array[String], String) => java.lang.Long] = {
-    def num(i: Int, maxDigits: Int): (Array[String], String) => java.lang.Long =
-      (g, _) => if (g == null) null
-        else AccessLogPartitionReader.numOrNull(g(i), maxDigits).map(Long.box).orNull
-    Map("http_status" -> num(9, 9), "bytes_sent" -> num(11, 18),
-      "object_size" -> num(12, 18), "total_time" -> num(13, 18),
-      "turn_around_time" -> num(14, 18))
+  private def string(c: String): Option[InternalRow => String] = column(c).collect {
+    case (i, StringType) => (r: InternalRow) =>
+      if (r.isNullAt(i)) null else r.getUTF8String(i).toString
+  }
+
+  private def number(c: String): Option[InternalRow => java.lang.Long] = column(c).collect {
+    case (i, IntegerType) => (r: InternalRow) =>
+      if (r.isNullAt(i)) null else java.lang.Long.valueOf(r.getInt(i).toLong)
+    case (i, LongType) => (r: InternalRow) =>
+      if (r.isNullAt(i)) null else java.lang.Long.valueOf(r.getLong(i))
   }
 
   private def toLong(v: Any): Option[Long] = v match {
@@ -440,117 +434,25 @@ private[sources] object AccessLogFilterEval {
     case _ => None
   }
 
-  def compile(f: Filter): Option[(Array[String], String) => Boolean] = f match {
-    case EqualTo(c, v: String) if StringCols.contains(c) =>
-      Some((g, r) => StringCols(c)(g, r) == v)
-    case In(c, vs) if StringCols.contains(c) && vs.forall(_.isInstanceOf[String]) =>
+  private def compare(c: String, v: Any)(ok: (Long, Long) => Boolean)
+      : Option[InternalRow => Boolean] =
+    for (n <- number(c); lv <- toLong(v))
+      yield (r: InternalRow) => { val x = n(r); x != null && ok(x.longValue, lv) }
+
+  def compile(f: Filter): Option[InternalRow => Boolean] = f match {
+    case EqualTo(c, v: String) => string(c).map(s => (r: InternalRow) => s(r) == v)
+    case In(c, vs) if vs.forall(_.isInstanceOf[String]) =>
       val set = vs.map(_.asInstanceOf[String]).toSet
-      Some((g, r) => { val x = StringCols(c)(g, r); x != null && set.contains(x) })
-    case StringStartsWith(c, p) if StringCols.contains(c) =>
-      Some((g, r) => { val x = StringCols(c)(g, r); x != null && x.startsWith(p) })
-    case IsNotNull(c) if StringCols.contains(c) =>
-      Some((g, r) => StringCols(c)(g, r) != null)
-    case IsNull(c) if StringCols.contains(c) =>
-      Some((g, r) => StringCols(c)(g, r) == null)
-    case IsNotNull(c) if NumCols.contains(c) =>
-      Some((g, r) => NumCols(c)(g, r) != null)
-    case IsNull(c) if NumCols.contains(c) =>
-      Some((g, r) => NumCols(c)(g, r) == null)
-    case EqualTo(c, v) if NumCols.contains(c) =>
-      toLong(v).map(lv => (g, r) => { val x = NumCols(c)(g, r); x != null && x.longValue == lv })
-    case GreaterThan(c, v) if NumCols.contains(c) =>
-      toLong(v).map(lv => (g, r) => { val x = NumCols(c)(g, r); x != null && x.longValue > lv })
-    case GreaterThanOrEqual(c, v) if NumCols.contains(c) =>
-      toLong(v).map(lv => (g, r) => { val x = NumCols(c)(g, r); x != null && x.longValue >= lv })
-    case LessThan(c, v) if NumCols.contains(c) =>
-      toLong(v).map(lv => (g, r) => { val x = NumCols(c)(g, r); x != null && x.longValue < lv })
-    case LessThanOrEqual(c, v) if NumCols.contains(c) =>
-      toLong(v).map(lv => (g, r) => { val x = NumCols(c)(g, r); x != null && x.longValue <= lv })
+      string(c).map(s => (r: InternalRow) => { val x = s(r); x != null && set.contains(x) })
+    case StringStartsWith(c, p) =>
+      string(c).map(s => (r: InternalRow) => { val x = s(r); x != null && x.startsWith(p) })
+    case IsNotNull(c) => column(c).map { case (i, _) => (r: InternalRow) => !r.isNullAt(i) }
+    case IsNull(c) => column(c).map { case (i, _) => (r: InternalRow) => r.isNullAt(i) }
+    case EqualTo(c, v) => compare(c, v)(_ == _)
+    case GreaterThan(c, v) => compare(c, v)(_ > _)
+    case GreaterThanOrEqual(c, v) => compare(c, v)(_ >= _)
+    case LessThan(c, v) => compare(c, v)(_ < _)
+    case LessThanOrEqual(c, v) => compare(c, v)(_ <= _)
     case _ => None
   }
-}
-
-object AccessLogPartitionReader {
-
-  // Java regex \S semantics (the canonical path's rlike("\\S")), NOT
-  // Character.isWhitespace — they disagree on U+001C..1F/U+2028/U+2029,
-  // and such lines must become error_line rows, not be dropped
-  private def hasNonWhitespace(s: String): Boolean = {
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      val ws = c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
-      if (!ws) return true
-      i += 1
-    }
-    false
-  }
-
-  private val tsFormat = DateTimeFormatter.ofPattern("dd/MMM/yyyy:HH:mm:ss", Locale.US)
-
-  private def utf8(s: String): UTF8String = UTF8String.fromString(s)
-  private def dashNull(s: String): UTF8String = if (s == "-") null else utf8(s)
-  private def quotedDashNull(s: String): UTF8String = if (s == "\"-\"") null else utf8(s)
-  /** Matches LogLineParser.dashNullAs: numeric with conservative digit cap
-    * (9/18 < max-value widths) or null — never an overflow error.
-    */
-  private[sources] def numOrNull(s: String, maxDigits: Int): Option[Long] = {
-    var i = 0
-    val neg = s.nonEmpty && s.charAt(0) == '-'
-    if (neg) i = 1
-    val digits = s.length - i
-    if (digits < 1 || digits > maxDigits) return None
-    var v = 0L
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c < '0' || c > '9') return None
-      v = v * 10 + (c - '0'); i += 1
-    }
-    Some(if (neg) -v else v)
-  }
-  /** Reference time munging (`:37-42`): text between '[' and the first
-    * space, second precision, resolved in the session timezone (matching
-    * try_to_timestamp on the canonical path); any failure → null.
-    */
-  private def tsMicros(timeGroup: String, zone: java.time.ZoneId): Any = {
-    val sp = timeGroup.indexOf(' ')
-    if (sp < 2) return null
-    try {
-      val ldt = LocalDateTime.parse(timeGroup.substring(1, sp), tsFormat)
-      ldt.atZone(zone).toEpochSecond * 1000000L
-    } catch { case _: java.time.format.DateTimeParseException => null }
-  }
-
-  /** Group indices follow LogLineParser.Pattern order (reference `:21-25`);
-    * `g` is the 18-element capture array or null for a corrupt line.
-    */
-  private[sources] def extractorFor(field: String, zone: java.time.ZoneId)
-      : (Array[String], String) => Any =
-    field match {
-      case "bucket_owner"     => (g, _) => if (g == null) null else utf8(g(0))
-      case "s3_bucket"        => (g, _) => if (g == null) null else utf8(g(1))
-      case "request_time"     => (g, _) => if (g == null) null else tsMicros(g(2), zone)
-      case "remote_ip"        => (g, _) => if (g == null) null else utf8(g(3))
-      case "requester"        => (g, _) => if (g == null) null else utf8(g(4))
-      case "request_id"       => (g, _) => if (g == null) null else utf8(g(5))
-      case "operation"        => (g, _) => if (g == null) null else utf8(g(6))
-      case "key"              => (g, _) => if (g == null) null else dashNull(g(7))
-      case "request"          => (g, _) => if (g == null) null else utf8(g(8))
-      case "http_status"      => (g, _) =>
-        if (g == null) null else numOrNull(g(9), 9).map(_.toInt).orNull
-      case "error_code"       => (g, _) => if (g == null) null else dashNull(g(10))
-      case "bytes_sent"       => (g, _) =>
-        if (g == null) null else numOrNull(g(11), 18).map(Long.box).orNull
-      case "object_size"      => (g, _) =>
-        if (g == null) null else numOrNull(g(12), 18).map(Long.box).orNull
-      case "total_time"       => (g, _) =>
-        if (g == null) null else numOrNull(g(13), 18).map(Long.box).orNull
-      case "turn_around_time" => (g, _) =>
-        if (g == null) null else numOrNull(g(14), 18).map(Long.box).orNull
-      case "referrer"         => (g, _) => if (g == null) null else quotedDashNull(g(15))
-      case "user_agent"       => (g, _) => if (g == null) null else quotedDashNull(g(16))
-      case "version_id"       => (g, _) => if (g == null) null else dashNull(g(17))
-      case "error_line"       => (g, raw) => if (g == null) utf8(raw) else null
-      case other => throw new IllegalArgumentException(s"unknown column $other")
-    }
 }

@@ -26,7 +26,7 @@ object DumpPlans {
       "q02_filter_pushdown" -> "predicate + projection pushdown reach the parquet scan (PushedFilters, pruned ReadSchema), one WholeStageCodegen span",
       "q01_agg_pricing" -> "partial (map-side) HashAggregate before the single hash exchange; scan reads only the 6 needed columns of 11",
       "q06_join_star" -> "both dimension joins are BroadcastHashJoin (BuildRight) - the fact side never shuffles for the join",
-      "q10_parse_logline" -> "ONE parse_log_line call feeding 19 field projections; both projections fused in one codegen stage",
+      "q10_parse_logline" -> "ONE parse_access_log kernel call per line (the typed 19-column struct) feeding the 19 field extractions; both projections fused in one codegen stage",
       "q15_ann_bruteforce" -> "query side broadcast; corpus scanned once with no exchange before scoring; top-k via partial window",
       "q13_dedup_minhash" -> "LSH banding: shuffle carries only (id, band, band_hash); shingle arrays recomputed only for candidate ids (semi join)",
       "q07_topk" -> "global sort + limit becomes TakeOrderedAndProject - no full sort materialization",

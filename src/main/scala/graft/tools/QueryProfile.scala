@@ -108,7 +108,7 @@ object QueryProfile {
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => subs.isEmpty || subs.exists(n.contains))
     println(s"[profile] sf=$sfDir cpus=$cpus reps=$reps queries=${names.size}")
-    names.foreach { name =>
+    graft.gates.Support.withScratch(names.foreach { name =>
       val fn = SparkEntry.queries(name)
       (1 to reps).foreach { r =>
         val j0 = acc.jobs.get; val s0 = acc.stages.get; val t0 = acc.tasks.get
@@ -147,7 +147,7 @@ object QueryProfile {
         }
         System.gc()
       }
-    }
+    })
     spark.stop()
   }
 }

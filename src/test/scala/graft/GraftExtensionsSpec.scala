@@ -158,8 +158,52 @@ class GraftExtensionsSpec extends AnyFunSuite
     // echo the original predicate and are not executed there)
     val filterLines = physical.split("\n").filter(_.contains("Filter ("))
     assert(filterLines.exists(_.contains("_graft_filter_cse_0")), physical)
-    assert(!filterLines.exists(_.contains("parse_log_line")),
+    assert(!filterLines.exists(l => l.contains("parse_access_log") || l.contains("parse_log_line")),
       s"no parse may remain inside the Filter predicate:\n$physical")
+  }
+
+  /** How often the parse kernel runs when `df` executes, and the rows it
+    * yields: its plan, with every kernel swapped for one that counts its
+    * calls, through the full planner (AQE and the extension rules
+    * included) and executed whole, as a write runs it.
+    */
+  private def kernelCalls(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
+    val calls = spark.sparkContext.longAccumulator("parse calls")
+    val counted = org.apache.spark.sql.graft.PlanFrames.ofRows(spark,
+      df.queryExecution.analyzed.transformAllExpressions {
+        case k: graft.functions.ParseAccessLog => new CountedParse(k.child, k.timeZoneId, calls)
+      })
+    val rows = counted.queryExecution.toRdd.count()
+    (calls.value.longValue, rows)
+  }
+
+  private def lineFile(lines: Seq[String]): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-calls-test")
+    java.nio.file.Files.write(dir.resolve("lines.txt"),
+      lines.mkString("\n").getBytes("UTF-8"))
+    dir.toString
+  }
+
+  test("the compacter's plan runs the parse kernel once per non-blank line") {
+    val lines = Seq.fill(50)(SampleLines).flatten ++ Seq("", "  \t")
+    val dir = new org.apache.hadoop.fs.Path(lineFile(lines))
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val listed = fs.listStatus(dir).toSeq.filter(_.getPath.getName.endsWith(".txt"))
+    val (calls, rows) = kernelCalls(graft.logs.Compacter.readListed(spark, listed)
+      .repartition(3).sortWithinPartitions("request_time"))
+    assert(rows == 200)
+    assert(calls == 200, s"$calls kernel calls for 200 non-blank lines")
+  }
+
+  test("a filter on parsed fields shares one kernel call per line with the projection") {
+    import org.apache.spark.sql.functions._
+    val lines = Seq.fill(50)(SampleLines).flatten
+    val q = graft.logs.LogLineParser.parse(spark.read.text(lineFile(lines)))
+      .filter(col("operation") === "REST.GET.OBJECT" && col("http_status") < 300)
+    assert(q.select("request_id").collect().map(_.getString(0)).toSeq == Seq.fill(50)("rid"))
+    val (calls, rows) = kernelCalls(q)
+    assert(rows == 50)
+    assert(calls == 200, s"$calls kernel calls for 200 lines:\n${q.queryExecution.executedPlan}")
   }
 
   test("DedupFilterSubexprs: cheap first conjunct blocks the rewrite (short-circuit guard)") {
@@ -174,5 +218,31 @@ class GraftExtensionsSpec extends AnyFunSuite
     val physical = q.queryExecution.executedPlan.toString
     assert(!physical.contains("_graft_filter_cse"),
       s"cheap-first-conjunct filter must not be rewritten:\n$physical")
+  }
+}
+
+/** [[graft.functions.ParseAccessLog]] that counts its calls in `calls`;
+  * never equal to the plain kernel (either way round), so a plan
+  * transform really swaps it in.
+  */
+private class CountedParse(child: org.apache.spark.sql.catalyst.expressions.Expression,
+    tz: Option[String], calls: org.apache.spark.util.LongAccumulator)
+    extends graft.functions.ParseAccessLog(child, tz) {
+  import org.apache.spark.sql.catalyst.expressions.Expression
+  import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+  import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+
+  override def canEqual(other: Any): Boolean = other.isInstanceOf[CountedParse]
+  override def equals(other: Any): Boolean =
+    other.isInstanceOf[CountedParse] && super.equals(other)
+  override def hashCode(): Int = super.hashCode()
+  override def withTimeZone(t: String): CountedParse = new CountedParse(child, Some(t), calls)
+  override protected def withNewChildInternal(c: Expression): CountedParse =
+    new CountedParse(c, timeZoneId, calls)
+  override def nullSafeEval(input: Any): Any = { calls.add(1L); super.nullSafeEval(input) }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val counter = ctx.addReferenceObj("calls", calls)
+    val parsed = super.doGenCode(ctx, ev)
+    parsed.copy(code = code"$counter.add(1L);" + parsed.code)
   }
 }

@@ -1,19 +1,30 @@
 package graft.logs
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The fast walk must agree with the regex on EVERY input: identical
-  * groups when it claims a match, and a bail (null) whenever the line is
+/** The byte walk must agree with the regex on EVERY input: identical
+  * groups when it claims a match, and a bail (false) whenever the line is
   * anything but the common shape — in which case the regex fallback
   * defines the answer. Checked on adversarial fixtures and seeded fuzz.
   */
 class LogLineTokenizerSpec extends AnyFunSuite {
 
-  private def viaRegex(s: String) = Option(LogLineTokenizer.regexGroups(s)).map(_.toSeq)
-  private def viaApi(s: String) = Option(LogLineTokenizer.parseGroups(s)).map(_.toSeq)
+  import LogLineFuzz.canonical
 
-  private val canonical =
-    """own bkt [06/Feb/2019:00:00:38 +0000] 1.2.3.4 arn:req RID7 REST.GET.OBJECT k/p "GET /k HTTP/1.1" 200 - 512 1024 12 3 "-" "agent x/1.0" V"""
+  private def viaRegex(s: String) = Option(LogLineTokenizer.regexGroups(s)).map(_.toSeq)
+
+  /** The walk's groups decoded back to strings, None when it bails. */
+  private def viaWalk(bytes: Array[Byte]): Option[Seq[String]] = {
+    val bounds = new Array[Int](2 * LogLineTokenizer.NumGroups)
+    if (!LogLineTokenizer.walk(bytes, bytes.length, bounds)) None
+    else Some((0 until LogLineTokenizer.NumGroups).map(f =>
+      new String(bytes, bounds(2 * f), bounds(2 * f + 1) - bounds(2 * f), UTF_8)))
+  }
+
+  /** Walk, else regex — what the kernel does. */
+  private def viaApi(s: String) = viaWalk(s.getBytes(UTF_8)).orElse(viaRegex(s))
 
   private val adversarial = Seq(
     canonical,
@@ -33,7 +44,13 @@ class LogLineTokenizerSpec extends AnyFunSuite {
     "", " ", "-", "\"\"",
     canonical.replace("\"agent x/1.0\"", "\"\""),   // empty quotes
     canonical.replace("RID7", "R\"I[D]7"),     // quotes/brackets inside \S+ token
-    canonical + " " + canonical                // two lines' worth of tokens
+    canonical + " " + canonical,               // two lines' worth of tokens
+    canonical.replace(" V", " \uD83D\uDE00"),  // supplementary version char
+    canonical.replace(" V", " \uD83D\uDE00x"), // ... followed by more text
+    canonical.replace(" V", " \u00E9"),        // 2-byte version char
+    canonical.replace("k/p", "k/\u00FCber/\u6587\uD83D\uDE00"), // non-ASCII key
+    canonical.replace("agent x", "\u00A0agent\u2028x"), // non-ASCII spaces are \S
+    canonical.replace(" 200 ", " 200\u0085 ")  // NEL is \S to Java regex
   )
 
   test("fast walk + fallback equals pure regex on adversarial shapes") {
@@ -43,26 +60,26 @@ class LogLineTokenizerSpec extends AnyFunSuite {
   }
 
   test("fast walk succeeds on the canonical shape (no fallback day-to-day)") {
-    assert(LogLineTokenizer.tryFast(canonical) != null)
-    assert(LogLineTokenizer.tryFast(canonical).toSeq ==
-      LogLineTokenizer.regexGroups(canonical).toSeq)
+    assert(viaWalk(canonical.getBytes(UTF_8)) == viaRegex(canonical))
+    val emoji = canonical.replace(" V", " \uD83D\uDE00")
+    assert(viaWalk(emoji.getBytes(UTF_8)).map(_.last) == Some("\uD83D\uDE00"),
+      "the single-char version field takes the whole code point")
+  }
+
+  test("malformed UTF-8 bails to the regex over the decoded line") {
+    val ascii = canonical.getBytes(UTF_8)
+    val at = canonical.indexOf("k/p") + 1
+    Seq(Array(0x80), Array(0xC0, 0x80), Array(0xED, 0xA0, 0x80), Array(0xF4, 0x90, 0x80, 0x80),
+        Array(0xE2, 0x82)).foreach { bad =>
+      val bytes = ascii.take(at) ++ bad.map(_.toByte) ++ ascii.drop(at)
+      assert(viaWalk(bytes).isEmpty, bad.mkString(","))
+    }
+    // a lone lead byte as the version char
+    assert(viaWalk(ascii.dropRight(1) :+ 0xF0.toByte).isEmpty)
   }
 
   test("fuzz: 20k seeded random mutations never diverge from the regex") {
-    val rnd = new scala.util.Random(7)
-    val chars = Array(' ', '\t', '"', '[', ']', '-', 'x', '\u000B')
-    def mutate(s: String): String = {
-      if (s.isEmpty) return canonical
-      val i = rnd.nextInt(s.length)
-      rnd.nextInt(3) match {
-        case 0 => s.substring(0, i) + s.substring(i + 1)              // delete
-        case 1 => s.updated(i, chars(rnd.nextInt(chars.length)))      // replace
-        case 2 => s.substring(0, i) + chars(rnd.nextInt(chars.length)) + s.substring(i)
-      }
-    }
-    (1 to 20000).foreach { _ =>
-      var line = canonical
-      (0 until 1 + rnd.nextInt(4)).foreach(_ => line = mutate(line))
+    LogLineFuzz.mutations(20000, 7).foreach { line =>
       assert(viaApi(line) == viaRegex(line), s"line: <$line>")
     }
   }

@@ -40,13 +40,24 @@ class AccessLogDataSourceSpec extends SparkTestBase {
 
   test("format(accesslog) is row-identical to read.text + LogLineParser.parse") {
     val dir = writeFixture()
+    // an invalid day of month (NULL, not clamped to the 28th) and a
+    // lower-case month (parsed, like the text path's case-insensitive one)
+    Files.write(java.nio.file.Paths.get(dir, "part3.log"), Seq(
+      lines(0).replace("06/Feb/2019", "31/Feb/2019").replace("REQ1", "REQ31"),
+      lines(0).replace("06/Feb/2019", "06/feb/2019").replace("REQ1", "REQ6")
+    ).mkString("\n").getBytes("UTF-8"))
     val viaSource = spark.read.format("accesslog").load(dir)
     val viaParser = LogLineParser.parse(
       LogLineParser.dropBlankLines(spark.read.text(dir)))
     assert(viaSource.schema == viaParser.schema)
     assert(sortAll(viaSource) sameElements sortAll(viaParser))
-    // 4 parseable/corrupt rows survive, 2 blank lines dropped
-    assert(viaSource.count() == 4)
+    // 6 parseable/corrupt rows survive, 2 blank lines dropped
+    assert(viaSource.count() == 6)
+    val times = viaSource.filter(col("request_id").isin("REQ31", "REQ6"))
+      .select("request_id", "request_time").collect()
+      .map(r => r.getString(0) -> Option(r.getTimestamp(1)).map(_.toInstant)).toMap
+    assert(times == Map("REQ31" -> None,
+      "REQ6" -> Some(java.time.Instant.parse("2019-02-06T00:00:38Z"))))
   }
 
   test("column pruning reaches the scan") {

@@ -1,7 +1,12 @@
 #!/usr/bin/env python3
 """Local replica of the driver's DuckDB-oracle correctness gate.
 
-Usage: python3 tools/local_verify.py [sfDir] [outDir]
+Usage: python3 tools/local_verify.py [sfDir] [outDir] [filter]
+
+`filter` is graft.Verify's optional third argument: comma-separated
+substrings of gate names. When given, only the gates whose name contains
+one of them are checked and counted, so a filtered Verify run reads as
+"N pass, 0 fail" instead of failing every gate it did not write.
 
 Reads outDir/<name>/ (spark parquet written by graft.Verify) and
 outDir/oracle_sql.json, runs each oracle against DuckDB views over the
@@ -14,6 +19,11 @@ import duckdb
 
 sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 out_dir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
+only = sys.argv[3].split(",") if len(sys.argv) > 3 else None
+
+
+def selected(name):
+    return only is None or any(part in name for part in only)
 
 con = duckdb.connect()
 for f in glob.glob(f"{sf_dir}/*.parquet"):
@@ -44,7 +54,7 @@ def eq(a, b):
     return str(a) == str(b)
 
 n_pass = n_fail = 0
-for name in sorted(oracle):
+for name in sorted(n for n in oracle if selected(n)):
     spark_path = f"{out_dir}/{name}"
     if not os.path.isdir(spark_path):
         print(f"FAIL {name}: spark result missing")
@@ -119,7 +129,7 @@ for name in sorted(oracle):
 # queries without an oracle: rows-only
 for d in sorted(glob.glob(f"{out_dir}/*/")):
     name = os.path.basename(d.rstrip("/"))
-    if name in oracle:
+    if name in oracle or not selected(name):
         continue
     try:
         n = con.execute(f"SELECT count(*) FROM '{d}*.parquet'").fetchone()[0]
