@@ -19,6 +19,10 @@ import org.apache.spark.sql.types.{StringType, StructType}
   *  - no RDD / Python-worker hop: a text scan + pure column
   *    expressions, whole plan in Catalyst/Tungsten codegen;
   *  - each day is listed once: the scan reuses the lister's statuses;
+  *  - Parquet pages hold at most [[DayWriter.PageBytes]], where
+  *    the reference keeps Spark's 1 MiB page: parquet-mr then drops a
+  *    high-cardinality column's dictionary after its first page, not at
+  *    file close after hashing every value ([[DayWriter]]);
   *  - ingest parallelism comes from the text source's file splitting
   *    (`spark.sql.files.maxPartitionBytes`) instead of
   *    `parallelize(paths, 100)` (reference `:214`).
@@ -54,16 +58,17 @@ object Compacter {
       // prune `requester = X AND request_time BETWEEN ...`-style queries
       // instead of only time ranges. Empty = reference behavior.
       zorderBy: Seq[String] = Seq.empty,
-      // Parquet codec. Default = the reference's snappy; measured on the
-      // 1M-line day (tools.WriterBench, README "write path"), zstd writes
-      // FASTER than snappy and 38% smaller — worth switching when the
-      // downstream reader fleet has zstd (any Spark/Trino/DuckDB of the
-      // last several years does).
+      // Parquet codec, any that Spark's Parquet writer accepts. Default =
+      // the reference's snappy; zstd writes smaller files where the
+      // downstream readers have it (README "Write path, measured" dates
+      // the one speed comparison made).
       compression: String = "snappy"
   )
 
-  /** Measured raw-text → snappy-parquet size ratio for S3 access logs
-    * (262 MB raw compacted to 60 MB in the 1M-line benchmark, README).
+  /** Raw-text → snappy-Parquet size ratio for S3 access logs, rounded:
+    * perfbench's `compact_day` measures about 0.28 bytes out per raw byte
+    * (`out_bytes_per_raw_byte`, CHANGES.md), the 1M-line day of README
+    * "Write path, measured" 72 MiB out of 348 MB raw (0.22).
     */
   val ParquetCompressionRatio: Double = 0.25
 

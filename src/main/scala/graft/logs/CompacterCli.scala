@@ -17,7 +17,7 @@ import org.apache.spark.sql.SparkSession
   * --min-date <YYYY-MM-DD>            inclusive
   * --max-date <YYYY-MM-DD>            exclusive
   * --compression <codec>              parquet codec (default snappy; zstd
-  *                                    measured faster and 38% smaller)
+  *                                    writes smaller files)
   * }}}
   *
   * Credentials: `--aws-config` reads the reference's JSON keyfile shape
@@ -65,8 +65,8 @@ object CompacterCli {
         require(cols.nonEmpty, "--zorder-by requires a non-empty column list")
         cols
       }.getOrElse(Seq.empty),
-      // --compression zstd: measured faster AND 38% smaller than the
-      // snappy default on the 1M-line day (tools.WriterBench)
+      // --compression zstd: smaller files than the snappy default
+      // (README "Write path, measured")
       compression = opts.getOrElse("compression", "snappy")
     )
     val builder = SparkSession.builder()

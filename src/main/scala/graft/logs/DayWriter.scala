@@ -7,6 +7,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.parquet.hadoop.ParquetOutputFormat
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -24,7 +25,23 @@ import org.apache.spark.util.SerializableConfiguration
   * `ParquetFileFormat.prepareWrite`, and names and the file rule are
   * `FileFormatWriter`'s (`part-NNNNN-<uuid>-c000<ext>`; partition 0 always
   * writes a file, so an empty day keeps its schema; other empty partitions
-  * write none). What differs is the job around them:
+  * write none). One setting is the day writer's own: a page holds at most
+  * [[PageBytes]] of raw values. parquet-mr decides whether a column keeps
+  * its dictionary when it writes the column's first page
+  * (`FallbackValuesWriter.getBytes`). Under the 1 MiB page default a
+  * compacted file of a few thousand rows is one page per column, so that
+  * check ran at close: every value of a high-cardinality column
+  * (`request_id`, `key`, ...) was hashed into a dictionary, then encoded
+  * again as PLAIN. With the bound a wide column's check runs after a few
+  * hundred rows. The bound is in bytes of values, as parquet-mr measures
+  * pages, not in rows: nulls do not fill a page, and a narrow column's
+  * first page still holds thousands of values. Corrupt lines have no
+  * `request_time` and sort first, so a row bound would leave the first
+  * page of a large file mostly nulls, and the check would drop
+  * dictionaries that pay. Time-sorted `request_time` pages carry min/max,
+  * by which a time-range read skips pages.
+  *
+  * What differs is the job around the files:
   *  - the prepared Hadoop conf is broadcast once per day, where Spark's
   *    write command ships it twice inside every task;
   *  - tasks write into a hidden staging sibling of `dt=`, each attempt in
@@ -46,6 +63,9 @@ object DayWriter {
   /** A day written into its staging directory `dir`, not yet published. */
   private[logs] final case class Staged(dest: Path, dir: Path, files: Seq[Written])
 
+  /** Raw bytes per Parquet page, for this day's write only (not the session). */
+  private[logs] val PageBytes = 32 << 10
+
   /** Write `df` to `dest` and publish it; returns the published files. */
   def write(df: DataFrame, dest: String, compression: String): Seq[Written] = {
     val staged = stage(df, dest, compression)
@@ -61,7 +81,8 @@ object DayWriter {
     val spark = qe.sparkSession
     val schema = df.schema
     val corruptAt = schema.fieldIndex("error_line")
-    val options = Map("compression" -> compression)
+    val options = Map("compression" -> compression,
+      ParquetOutputFormat.PAGE_SIZE -> PageBytes.toString)
     val job = Job.getInstance(spark.sessionState.newHadoopConfWithOptions(options))
     val factory = new ParquetFileFormat().prepareWrite(spark, job, options, schema)
     val conf = job.getConfiguration

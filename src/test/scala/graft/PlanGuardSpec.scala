@@ -99,12 +99,19 @@ class PlanGuardSpec extends SparkTestBase {
     test(s"$name: no cartesian product; nested-loop only where intended") {
       // capture every pre-checkpoint stage plan during construction, then
       // the final frame's own chosen plan (sparkPlan = pre-AQE-wrapping:
-      // traversable, and what AQE starts from)
-      val (df, cutPlans) = PlanCapture.capturing { fn(spark, dir) }
-      cutPlans.zipWithIndex.foreach { case (p, i) =>
-        assertScaleSafe(name, s"pre-checkpoint stage $i", p)
+      // traversable, and what AQE starts from). The gate's stores go under
+      // the run's scratch root, deleted once its plans are checked.
+      var root: Option[java.nio.file.Path] = None
+      gates.Support.withScratch {
+        val (df, cutPlans) = PlanCapture.capturing { fn(spark, dir) }
+        cutPlans.zipWithIndex.foreach { case (p, i) =>
+          assertScaleSafe(name, s"pre-checkpoint stage $i", p)
+        }
+        assertScaleSafe(name, "final plan", df.queryExecution.sparkPlan)
+        root = gates.Support.scratchRoot
       }
-      assertScaleSafe(name, "final plan", df.queryExecution.sparkPlan)
+      assert(root.forall(r => !java.nio.file.Files.exists(r)), s"$root left behind")
+      assert(gates.Support.scratchRoot.isEmpty)
     }
   }
 

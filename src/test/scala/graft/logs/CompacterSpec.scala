@@ -4,13 +4,14 @@ import java.nio.file.{Files, Path}
 
 import graft.SparkTestBase
 import graft.analysis.DaysApart
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
 /** End-to-end golden test (SURVEY.md §5.3): raw log dir → compact →
   * re-read parquet → schema + content + sortedness + file count + DDL +
   * flagship query. Mirrors the reference flow §3.1/§3.3.
   */
-class CompacterSpec extends SparkTestBase {
+class CompacterSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   def logLine(day: Int, hour: Int, key: String, op: String = "REST.GET.OBJECT",
               requester: String = "arn:aws:iam::1:assumed-role/r/i-0abc",
@@ -390,26 +391,65 @@ class CompacterSpec extends SparkTestBase {
     assert(spark.read.parquet(first.dest).count() == lines.size)
   }
 
-  /** A Parquet footer, opened with parquet-hadoop directly. */
-  def footer(f: Path): org.apache.parquet.hadoop.metadata.ParquetMetadata = {
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(f.toUri), new org.apache.hadoop.conf.Configuration()))
-    try reader.getFooter finally reader.close()
+  /** One column chunk of a data file as parquet-hadoop reads it: codec,
+    * every encoding, the encodings of its data pages (not the dictionary
+    * page) and, from the offset index, its page count.
+    */
+  final case class Chunk(path: String, codec: String, encodings: Seq[String],
+                         dataEncodings: Seq[String], pages: Int) {
+    def dictionaryOnly: Boolean = dataEncodings.nonEmpty && dataEncodings.forall(_.endsWith("DICTIONARY"))
+    def noDictionary: Boolean = dataEncodings.nonEmpty && !dataEncodings.exists(_.endsWith("DICTIONARY"))
   }
 
-  /** Per data file: key/value metadata and each column's codec and
-    * encodings, in file-name order.
+  /** Per data file: key/value metadata and its column chunks, in file-name
+    * order. Footer and offset index are read with parquet-hadoop directly.
     */
-  def footers(dir: String): Seq[(Map[String, String], Seq[String])] = {
+  def footers(dir: String): Seq[(Map[String, String], Seq[Chunk])] = {
     import scala.jdk.CollectionConverters._
+    def names[T](es: java.util.Collection[T]) = es.asScala.toSeq.map(_.toString).sorted
     Files.list(java.nio.file.Paths.get(dir)).toArray.map(_.asInstanceOf[Path])
       .filter(_.getFileName.toString.endsWith(".parquet")).sortBy(_.getFileName.toString)
-      .map(footer).map { m =>
-        (m.getFileMetaData.getKeyValueMetaData.asScala.toMap,
-          m.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala.map(c =>
-            s"${c.getPath} ${c.getCodec} ${c.getEncodings.asScala.toSeq.map(_.toString).sorted}")))
+      .map { f =>
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f.toUri), new org.apache.hadoop.conf.Configuration()))
+        try {
+          val m = reader.getFooter
+          (m.getFileMetaData.getKeyValueMetaData.asScala.toMap,
+            m.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala.map(c =>
+              Chunk(c.getPath.toDotString, c.getCodec.toString, names(c.getEncodings),
+                names(c.getEncodingStats.getDataEncodings),
+                reader.readOffsetIndex(c).getPageCount))))
+        } finally reader.close()
       }.toSeq
+  }
+
+  /** The chunks of `column` across the data files under `dir`. */
+  def chunks(dir: String, column: String): Seq[Chunk] =
+    footers(dir).flatMap(_._2.filter(_.path == column))
+
+  /** Line `i` of a busy day, at `second` past midnight of 3 Feb 2021: its
+    * own IP, requester, request id, key, request and sizes; one of three
+    * operations, two statuses and one of 900 total times, hashed from `i`.
+    */
+  def busyLine(i: Int, second: Int): String = {
+    val t = java.time.LocalTime.ofSecondOfDay(second)
+    val op = Seq("REST.GET.OBJECT", "REST.PUT.OBJECT", "REST.HEAD.OBJECT")(i % 3)
+    f"owner bucket1 [03/Feb/2021:${t.getHour}%02d:${t.getMinute}%02d:${t.getSecond}%02d +0000] " +
+      f"10.${i >> 16 & 255}.${i >> 8 & 255}.${i & 255} arn:aws:iam::${100000 + i}:user/u$i " +
+      f"REQ$i%016X $op logs/svc${i % 3}/2019/01/01/part-$i.gz " +
+      "\"GET /logs/part-" + i + ".gz HTTP/1.1\" " +
+      s"${if (i % 7 == 0) 404 else 200} - ${1000 + i * 37L} ${5000 + i * 91L} ${1 + (i * 2654435761L >>> 16) % 900} 5 " +
+      "\"-\" \"agent/1.0\" -"
+  }
+
+  /** 10k busy lines at distinct seconds, compacted into two files. */
+  lazy val spreadDay: (Seq[String], Compacter.Config) = {
+    val tmp = Files.createTempDirectory("graft-spread-day")
+    val lines = (0 until 10000).map(i => busyLine(i, i * 8))
+    writeObjects(tmp.resolve("raw"), "bucket1", "2021-02-03", lines, 4)
+    (lines, Compacter.Config(tmp.resolve("raw").toString, "bucket1",
+      tmp.resolve("out").toString, numOutputFiles = 2))
   }
 
   test("DayWriter writes what Spark's Parquet writer writes") {
@@ -438,6 +478,60 @@ class CompacterSpec extends SparkTestBase {
       }
     val blank = footers(tmp.resolve("ours-0-3/dt=2021-02-03").toString)
     assert(blank.size == 1 && blank.head._2.isEmpty, "a blank day is one schema-only file")
+  }
+
+  test("the page bound reaches the writer: high-cardinality columns go PLAIN, low keep their dictionary") {
+    val (lines, cfg) = spreadDay
+    Seq(cfg, cfg.copy(destRoot = cfg.destRoot + "-z", zorderBy = Seq("request_time", "requester")))
+      .foreach { c =>
+        val stats = Compacter.compactDayWithStats(spark, c, "2021-02-03").get
+        assert(stats.rows == lines.size && stats.files == 2)
+        val path = if (c.zorderBy.isEmpty) "time-sorted" else "z-order"
+        val ids = chunks(stats.dest, "request_id")
+        assert(ids.size == 2 && ids.forall(_.pages > 1),
+          s"$path: request_id pages $ids")
+        assert(ids.forall(_.noDictionary), s"$path: request_id data encodings $ids")
+        Seq("operation", "http_status").foreach { col =>
+          val cs = chunks(stats.dest, col)
+          assert(cs.size == 2 && cs.forall(_.dictionaryOnly), s"$path: $col data encodings $cs")
+        }
+      }
+  }
+
+  test("a busy day keeps the dictionaries that pay: 20k rows over 300 seconds in one file") {
+    val tmp = Files.createTempDirectory("graft-busy-day")
+    val lines = (0 until 20000).map(i => busyLine(i, 36000 + i % 300)) ++
+      (0 until 900).map(i => s"corrupt line $i")
+    writeObjects(tmp.resolve("raw"), "bucket1", "2021-02-03", lines, 4)
+    val cfg = Compacter.Config(tmp.resolve("raw").toString, "bucket1",
+      tmp.resolve("out").toString, numOutputFiles = 1)
+    val dest = Compacter.compactDay(spark, cfg, "2021-02-03").get
+    // request_time repeats ~67 times a second. Corrupt lines have no
+    // request_time, so they sort first: a 1000-row first page holds only
+    // 100 values of total_time, too few to show that its 900-value
+    // dictionary pays; 32 KiB of values is 4096 of them
+    Seq("request_time", "total_time", "operation").foreach { col =>
+      val Seq(c) = chunks(dest, col)
+      assert(c.pages > 1 && c.dictionaryOnly, s"$col $c")
+    }
+    val Seq(id) = chunks(dest, "request_id")
+    assert(id.noDictionary, s"request_id $id")
+  }
+
+  test("a narrow request_time range reads only the pages that can hold it") {
+    val (lines, cfg) = spreadDay
+    val dest = Compacter.compactDay(spark, cfg, "2021-02-03").get
+    // the day's last hour, 451 rows, lies in the last page of each file;
+    // a file's 5k request_time values (40 KB) fill a 32 KiB page first
+    val hour = spark.read.parquet(dest).filter(expr(
+      "request_time BETWEEN TIMESTAMP'2021-02-03 21:00:00' AND TIMESTAMP'2021-02-03 22:00:00'"))
+    val kept = hour.collect().length
+    val scanned = collect(hour.queryExecution.executedPlan) {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s.metrics("numOutputRows").value
+    }.sum
+    assert(kept == 451)
+    assert(scanned >= kept && scanned < lines.size / 2,
+      s"the scan produced $scanned of the day's ${lines.size} rows for $kept kept")
   }
 
   test("DayWriter publishes exactly the files the job returned, with _SUCCESS") {
