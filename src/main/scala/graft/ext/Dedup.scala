@@ -517,7 +517,7 @@ object Dedup {
     * or re-crawled document arriving within the watermark is dropped; one
     * arriving later is a new observation by declaration (the watermark IS
     * the dedup contract under unbounded input). Works unchanged over any
-    * `readStream` source, including the `accesslog` DSv2 micro-batch.
+    * `readStream` source, including `readStream.format("accesslog")`.
     */
   def exactDedupStream(docs: DataFrame, textCol: String,
                        eventTimeCol: String,

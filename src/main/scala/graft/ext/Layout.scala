@@ -274,7 +274,8 @@ object Layout {
     *
     * At 10⁶ files this is a metadata scan of a few KB per file spread
     * over executors — the driver never holds footers, only the file
-    * list (the ListerBench-audited bound).
+    * list (the listing bound measured in docs/SCALE.md, "Driver
+    * metadata path at real file counts").
     */
   def rowGroupStats(spark: org.apache.spark.sql.SparkSession, path: String,
                     longCol: String): DataFrame = {

@@ -10,7 +10,7 @@ import graft.ext.{Dedup, Retrieval, Similarity, TextStats}
 import graft.logs.LogLineParser
 import Support._
 
-/** Gate registry — reference parity (SURVEY.md SS2.1-2.9): log parse, Days Apart, core SQL surface, compaction shape, the access-log DSv2 source.
+/** Gate registry — reference parity (SURVEY.md SS2.1-2.9): log parse, Days Apart, core SQL surface, compaction shape, the `accesslog` file format.
   * Entries are verbatim from the pre-split SparkEntry.scala
   * (round-11 refactor; zero behavior change).
   */
@@ -144,9 +144,9 @@ private[graft] object ParityGates extends GateFamily {
         .sortWithinPartitions("request_time")
     }),
 
-    // §2.1 ext — the DataSource V2 `accesslog` provider end-to-end: raw
-    // text files on disk → one scan node emitting the typed 19-column
-    // frame (parse inside the source, column pruning reaching the regex)
+    // §2.1 ext — the `accesslog` file format end-to-end: raw text files
+    // on disk → one scan node emitting the typed 19-column frame (parse
+    // inside the reader, column pruning reaching the parse)
     // → aggregate. The write is part of the measured work on purpose: it
     // is the reference's whole pipeline (text in, typed analytics out).
     "q62_accesslog_source" -> ((s, dir) => {
@@ -270,7 +270,7 @@ private[graft] object ParityGates extends GateFamily {
     "q31_compact_shape" -> ParsedOracle,
 
     // aggregate over the expected parsed table (parse ∘ format = identity;
-    // the DSv2 source must agree with the same oracle as q10's parser)
+    // the accesslog format must agree with the same oracle as q10's parser)
     // NOTE: ParsedOracle is concatenated, not interpolated inside a
     // stripMargin block — its `||` continuation lines would be eaten by a
     // second stripMargin pass.

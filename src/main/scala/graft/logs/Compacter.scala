@@ -6,8 +6,9 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation,
   InMemoryFileIndex, PartitionSpec}
-import org.apache.spark.sql.execution.datasources.text.TextFileFormat
-import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.types.StructType
+
+import graft.sources.AccessLogDataSource
 
 /** Per-day raw-log → Parquet compaction: the reference's
   * `convert_s3_access_logs_to_parquet`
@@ -16,14 +17,15 @@ import org.apache.spark.sql.types.{StringType, StructType}
   * Differences by design (not behavior):
   *  - one SparkSession reused across days (the reference stops/starts a
   *    session per day, an artifact, reference `:184-196,263-266`);
-  *  - no RDD / Python-worker hop: a text scan + pure column
-  *    expressions, whole plan in Catalyst/Tungsten codegen;
+  *  - no RDD / Python-worker hop: one `accesslog` scan
+  *    ([[graft.sources.AccessLogDataSource]]) parses each line as it reads
+  *    it, and the rest of the plan runs in Catalyst/Tungsten codegen;
   *  - each day is listed once: the scan reuses the lister's statuses;
   *  - Parquet pages hold at most [[DayWriter.PageBytes]], where
   *    the reference keeps Spark's 1 MiB page: parquet-mr then drops a
   *    high-cardinality column's dictionary after its first page, not at
   *    file close after hashing every value ([[DayWriter]]);
-  *  - ingest parallelism comes from the text source's file splitting
+  *  - ingest parallelism comes from Spark's file splitting and packing
   *    (`spark.sql.files.maxPartitionBytes`) instead of
   *    `parallelize(paths, 100)` (reference `:214`).
   *
@@ -141,12 +143,12 @@ object Compacter {
     s"${cfg.destRoot}/${cfg.sourceBucket}/dt=$dt"
 
   /** Read + parse exactly the listed raw log objects (no write). The scan
-    * is a text `HadoopFsRelation` over an `InMemoryFileIndex` whose status
-    * cache returns the listed statuses, so Spark runs no existence check and
-    * no leaf-file listing job (bare paths would be statted again). Assumes
-    * S3 access-log objects are immutable once delivered, so a listed length
-    * is final; an object gone since listing fails the scan loudly
-    * (`ignoreMissingFiles` stays off) rather than dropping its rows.
+    * is an `accesslog` `HadoopFsRelation` over an `InMemoryFileIndex` whose
+    * status cache returns the listed statuses, so Spark runs no existence
+    * check and no leaf-file listing job (bare paths would be statted
+    * again). Assumes S3 access-log objects are immutable once delivered, so
+    * a listed length is final; an object gone since listing fails the scan
+    * loudly (`ignoreMissingFiles` stays off) rather than dropping its rows.
     */
   def readListed(spark: SparkSession, listed: Seq[FileStatus]): DataFrame = {
     val byPath = listed.map(st => st.getPath -> Array(st)).toMap
@@ -157,10 +159,10 @@ object Compacter {
     }
     val index = new InMemoryFileIndex(spark, listed.map(_.getPath), Map.empty, None,
       listedOnly, Some(PartitionSpec.emptySpec))
-    val text = HadoopFsRelation(index, partitionSchema = new StructType(),
-      dataSchema = new StructType().add("value", StringType), bucketSpec = None,
-      fileFormat = new TextFileFormat, options = Map.empty)(spark)
-    LogLineParser.parse(LogLineParser.dropBlankLines(spark.baseRelationToDataFrame(text)))
+    val logs = HadoopFsRelation(index, partitionSchema = new StructType(),
+      dataSchema = AccessLogSchema.schema, bucketSpec = None,
+      fileFormat = new AccessLogDataSource, options = Map.empty)(spark)
+    spark.baseRelationToDataFrame(logs)
   }
 
   /** Per-day compaction outcome: where it wrote and what it saw. The

@@ -4,8 +4,8 @@ import java.util.regex.Pattern
 
 /** Hand-rolled tokenizer for the S3 access-log grammar over a line's UTF-8
   * bytes, with a regex fallback — the tokenizer under the parse kernel
-  * ([[graft.functions.ParseAccessLog]]), the `parse_log_line` SQL function
-  * and the `accesslog` DSv2 reader.
+  * ([[graft.functions.ParseAccessLog]] and the `accesslog` file format)
+  * and the `parse_log_line` SQL function.
   *
   * The 18-group pattern ([[LogLineParser.Pattern]]) is structurally simple:
   * space-separated tokens of three shapes (`\S+` runs, one `\[[^\]]*\]`

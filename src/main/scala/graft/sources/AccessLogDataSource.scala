@@ -1,458 +1,124 @@
 package graft.sources
 
-import java.io.{BufferedReader, InputStreamReader}
-import java.nio.charset.StandardCharsets
-
-import scala.collection.mutable
-
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.hadoop.io.compress.CompressionCodecFactory
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownRequiredColumns, SupportsReportStatistics}
-import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructType}
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.hadoop.fs.FileStatus
+import org.apache.hadoop.mapreduce.Job
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{SQLContext, SparkSession}
+import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.execution.datasources.{HadoopFileLinesReader, OutputWriterFactory,
+  PartitionedFile, TextBasedFileFormat}
+import org.apache.spark.sql.execution.streaming.Source
+import org.apache.spark.sql.execution.streaming.runtime.FileStreamSource
+import org.apache.spark.sql.sources.{DataSourceRegister, Filter, StreamSourceProvider}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.functions.{AccessLogKernel, RequestTime}
 import graft.logs.AccessLogSchema
 
-/** DataSource V2 provider for raw S3 server-side access logs:
+/** Raw S3 server-side access logs as a Spark file format:
   *
-  * {{{ spark.read.format("accesslog").load(dir) }}}
+  * {{{
+  * spark.read.format("accesslog").load(dir)
+  * spark.readStream.format("accesslog").load(dir)
+  * }}}
   *
-  * yields the canonical 19-column frame of `AccessLogSchema` directly from
-  * raw log text — the reference's read-then-parse two-step
-  * (`scripts/oss_s3_server_side_logging_compacter.py:154-171,214-218`)
-  * collapsed into ONE Spark scan node, so the parse participates in
-  * Catalyst planning instead of running above it:
+  * yields the canonical 19-column frame of `AccessLogSchema` straight from
+  * the raw log text — the reference's read-then-parse two-step
+  * (`scripts/oss_s3_server_side_logging_compacter.py:154-171,214-218`) as
+  * ONE scan node. The compacter reads its listed day through it too
+  * ([[graft.logs.Compacter.readListed]]), so batch reads, the compacter and
+  * the stream share one raw-log scan.
   *
-  *  - '''column pruning''' reaches the scan ([[SupportsPushDownRequiredColumns]]):
-  *    `select(operation)` emits rows of one field, not 19 — the
-  *    slides' "19 columns stored, ~7 referenced" observation applied to the
-  *    RAW-text path, which the reference could never prune;
-  *  - '''size-balanced splits''': files are first-fit bin-packed into
-  *    partitions capped at `spark.sql.files.maxPartitionBytes` (many tiny
-  *    log objects per task, big objects alone), the same strategy Spark's
-  *    own `FilePartition` uses — at 100 TB this is what keeps a million
-  *    small S3 objects from becoming a million tasks;
-  *  - '''driver memory''': listing streams through `RemoteIterator`
-  *    (pagination, slides "Clue #3") — only (path, size) pairs are held;
-  *  - semantics are bit-identical to [[LogLineParser.parse]] over
-  *    `spark.read.text` (PERMISSIVE `error_line`, sentinel nulls,
-  *    second-precision timestamps in the session time zone): both run the
-  *    same kernel, and the spec asserts it cross-path.
+  * Spark's file source does everything around the parse: listing (hidden
+  * `_`/`.` paths skipped), packing files into splits
+  * (`spark.sql.files.maxPartitionBytes` and `openCostInBytes`), splitting
+  * uncompressed files at line boundaries, decompression, the stream's
+  * seen-file log, and evaluating every pushed filter above the scan. The
+  * format adds the parse: blank lines are dropped (the reference strips and
+  * skips empties, `:165-167`), every other line goes once through
+  * [[AccessLogKernel.parse]] in the session time zone — the kernel under
+  * [[graft.logs.LogLineParser.parse]], so both paths give identical rows —
+  * and the scan emits only the required columns: `select(operation)`
+  * carries one field per row, a pure count none.
+  *
+  * The schema is fixed: the reader maps columns by their `AccessLogSchema`
+  * position, so any other user-specified schema is rejected.
   *
   * Registered as short name `accesslog` via META-INF/services.
   */
-final class AccessLogDataSource extends TableProvider with DataSourceRegister {
+final class AccessLogDataSource extends TextBasedFileFormat with DataSourceRegister
+    with StreamSourceProvider {
+
   override def shortName(): String = "accesslog"
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    AccessLogSchema.schema
+  override def toString: String = shortName()
 
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: java.util.Map[String, String]): Table =
-    new AccessLogTable(AccessLogDataSource.paths(properties))
+  override def inferSchema(spark: SparkSession, options: Map[String, String],
+      files: Seq[FileStatus]): Option[StructType] = Some(AccessLogSchema.schema)
 
-  override def supportsExternalMetadata(): Boolean = false
+  override def prepareWrite(spark: SparkSession, job: Job, options: Map[String, String],
+      dataSchema: StructType): OutputWriterFactory =
+    throw new UnsupportedOperationException("the accesslog format is read-only")
+
+  override protected def buildReader(spark: SparkSession, dataSchema: StructType,
+      partitionSchema: StructType, requiredSchema: StructType, filters: Seq[Filter],
+      options: Map[String, String], hadoopConf: Configuration)
+      : PartitionedFile => Iterator[InternalRow] = {
+    AccessLogDataSource.requireFixedSchema(Some(dataSchema))
+    val conf = spark.sparkContext.broadcast(new SerializableConfiguration(hadoopConf))
+    val time = new RequestTime(getSqlConf(spark).sessionLocalTimeZone)
+    val ordinals = requiredSchema.map(f => AccessLogSchema.columns.indexOf(f.name))
+    (file: PartitionedFile) => {
+      val reader = new HadoopFileLinesReader(file, conf.value.value)
+      Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => reader.close()))
+      val lines = reader.map(t => UTF8String.fromBytes(t.getBytes, 0, t.getLength))
+        .filter(AccessLogKernel.nonBlank)
+      if (ordinals.isEmpty) {
+        val empty = new UnsafeRow(0)
+        lines.map(_ => empty)
+      } else {
+        // a view of the required fields of the parsed row: the inherited
+        // buildReaderWithPartitionValues copies it into an UnsafeRow
+        val pruned = ProjectingInternalRow(requiredSchema, ordinals)
+        lines.map { line => pruned.project(AccessLogKernel.parse(line, time)); pruned }
+      }
+    }
+  }
+
+  override def sourceSchema(sqlContext: SQLContext, schema: Option[StructType],
+      providerName: String, parameters: Map[String, String]): (String, StructType) = {
+    AccessLogDataSource.requireFixedSchema(schema)
+    (s"FileSource[${AccessLogDataSource.path(parameters)}]", AccessLogSchema.schema)
+  }
+
+  /** Spark's own file stream over this format: each micro-batch reads the
+    * files its seen-file log (kept under `metadataPath`) has not recorded
+    * yet, `maxFilesPerTrigger` at most. [[sourceSchema]] has already
+    * checked a user-specified schema.
+    */
+  override def createSource(sqlContext: SQLContext, metadataPath: String,
+      schema: Option[StructType], providerName: String,
+      parameters: Map[String, String]): Source =
+    new FileStreamSource(
+      sqlContext.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      AccessLogDataSource.path(parameters), classOf[AccessLogDataSource].getName,
+      AccessLogSchema.schema, Nil, metadataPath, parameters)
 }
 
 object AccessLogDataSource {
-  /** `load(path)` puts a single `path`; `load(p1, p2, …)` a JSON-array
-    * `paths`. Both may appear together.
-    */
-  private[sources] def paths(props: java.util.Map[String, String]): Seq[String] = {
-    val one = Option(props.get("path")).toSeq
-    val many = Option(props.get("paths")).toSeq.flatMap { json =>
-      // the value is produced by Spark itself (JacksonGenerator over
-      // Array[String]) — a flat array of strings, no nesting
-      org.json4s.jackson.JsonMethods.parse(json) match {
-        case org.json4s.JArray(vs) => vs.collect { case org.json4s.JString(s) => s }
-        case _ => Seq.empty
-      }
-    }
-    val all = one ++ many
-    require(all.nonEmpty, "accesslog source requires a path")
-    all
-  }
-}
 
-final class AccessLogTable(paths: Seq[String]) extends Table with SupportsRead {
-  override def name(): String = s"accesslog(${paths.mkString(",")})"
-  override def schema(): StructType = AccessLogSchema.schema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new AccessLogScanBuilder(paths)
-}
+  private def path(parameters: Map[String, String]): String =
+    parameters.getOrElse("path",
+      throw new IllegalArgumentException("the accesslog stream requires a path"))
 
-final class AccessLogScanBuilder(paths: Seq[String])
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with org.apache.spark.sql.connector.read.SupportsPushDownFilters {
-  private var required: StructType = AccessLogSchema.schema
-  private var pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    // empty pruned schema (pure count) still needs row multiplicity: keep
-    // zero fields and emit empty rows — GenericInternalRow(0) per line
-    required = requiredSchema
-
-  /** Filters the reader can evaluate are applied PRE-materialization (a
-    * failing row never becomes an InternalRow), but every filter is also
-    * returned for Spark-side re-evaluation — the reader's apply is an
-    * optimization, never the only line of defense, so partial/conservative
-    * evaluation (unknown → keep) is always safe.
-    */
-  override def pushFilters(filters: Array[org.apache.spark.sql.sources.Filter])
-      : Array[org.apache.spark.sql.sources.Filter] = {
-    pushed = filters.filter(f => AccessLogFilterEval.compile(f).isDefined)
-    filters
-  }
-
-  override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] = pushed
-
-  override def build(): Scan = new AccessLogScan(paths, required, pushed)
-}
-
-/** Driver-side listing + split planning shared by the batch and
-  * micro-batch paths.
-  */
-private[graft] object AccessLogFiles {
-
-  /** Streams RemoteIterator listings; hidden files AND files under hidden
-    * directories (`_`/`.` prefixed path segments below the load root —
-    * `_temporary`, `.staging`, Spark's convention, matched by
-    * InMemoryFileIndex) are skipped. Only (path, size) pairs are held.
-    */
-  def list(paths: Seq[String]): Seq[(String, Long)] = {
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    val out = mutable.ArrayBuffer.empty[(String, Long)]
-    paths.foreach { p =>
-      val path = new Path(p)
-      val fs = path.getFileSystem(conf)
-      val root = fs.getFileStatus(path)
-      // every path segment strictly below the root must be visible
-      def visibleUnderRoot(f: Path): Boolean = {
-        var cur = f
-        while (cur != null && cur.toString != root.getPath.toString) {
-          val n = cur.getName
-          if (n.startsWith("_") || n.startsWith(".")) return false
-          cur = cur.getParent
-        }
-        cur != null
-      }
-      val statuses: Iterator[FileStatus] =
-        if (root.isDirectory) {
-          val it = fs.listFiles(path, true)
-          Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
-        } else Iterator(root)
-      statuses.foreach { st =>
-        if (st.isFile && (!root.isDirectory || visibleUnderRoot(st.getPath)))
-          out += ((st.getPath.toString, st.getLen))
-      }
-    }
-    out.toSeq
-  }
-
-  def hadoopConfMap(): Map[String, String] = {
-    val hc = SparkSession.active.sessionState.newHadoopConf()
-    val it = hc.iterator()
-    val m = mutable.Map.empty[String, String]
-    while (it.hasNext) { val e = it.next(); m += (e.getKey -> e.getValue) }
-    m.toMap
-  }
-
-  /** Reader factory capturing the per-query driver state (Hadoop conf,
-    * session timezone, pushed filters) ONCE — the factory serializes once
-    * per stage, so partitions stay paths-only instead of each dragging a
-    * ~1000-entry conf map through the scheduler.
-    */
-  def readerFactory(required: StructType,
-                    pushed: Seq[org.apache.spark.sql.sources.Filter])
-      : AccessLogReaderFactory =
-    AccessLogReaderFactory(required, pushed, hadoopConfMap(),
-      SparkSession.active.sessionState.conf.sessionLocalTimeZone)
-
-  /** Best-fit-decreasing bin-packing by size (compressed files count
-    * whole: they can't split anyway). Bins index by REMAINING CAPACITY
-    * in a TreeMap — each file lands in the fullest bin that still fits
-    * (smallest remaining ≥ len) in O(log bins), so a 10⁶-key day packs
-    * in n·log n driver time. The first-fit linear bin scan this
-    * replaces was O(n·bins): measured 18 s for 10⁵ files across 5×10⁴
-    * bins (tools.ListerBench's many-bins probe), which at the
-    * reference's >1M-key regime would be a ~30-minute driver stall.
-    * Ties on remaining capacity break by bin creation index —
-    * deterministic packing for any input order (the input is sorted by
-    * (size desc, path) first).
-    */
-  def binPack(files: Seq[(String, Long)]): Array[InputPartition] = {
-    val maxBytes = SparkSession.active.sessionState.conf.filesMaxPartitionBytes
-    val bins = mutable.ArrayBuffer.empty[mutable.ArrayBuffer[(String, Long)]]
-    // (remaining, binIdx) — ceiling lookup finds the tightest fit
-    val byRemaining = new java.util.TreeMap[(Long, Int), Int](
-      Ordering.Tuple2[Long, Int])
-    files.sortBy { case (p, len) => (-len, p) }.foreach { case f @ (_, len) =>
-      val key = byRemaining.ceilingKey((len, Int.MinValue))
-      if (key == null) {
-        bins += mutable.ArrayBuffer(f)
-        if (maxBytes - len > 0)
-          byRemaining.put((maxBytes - len, bins.size - 1), bins.size - 1)
-      } else {
-        val idx = byRemaining.remove(key)
-        bins(idx) += f
-        val rem = key._1 - len
-        if (rem > 0) byRemaining.put((rem, idx), idx)
-      }
-    }
-    bins.map(b => AccessLogInputPartition(b.map(_._1).toArray)
-      : InputPartition).toArray
-  }
-}
-
-final class AccessLogScan(paths: Seq[String], required: StructType,
-                          pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
-    extends Scan with Batch with SupportsReportStatistics {
-
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"accesslog ${paths.mkString(",")} ReadSchema: ${required.fieldNames.mkString("[", ",", "]")}" +
-      (if (pushed.isEmpty) "" else s" PushedFilters: ${pushed.mkString("[", ",", "]")}")
-
-  private lazy val files: Seq[(String, Long)] = AccessLogFiles.list(paths)
-
-  override def planInputPartitions(): Array[InputPartition] =
-    AccessLogFiles.binPack(files)
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    AccessLogFiles.readerFactory(required, pushed.toSeq)
-
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new AccessLogMicroBatchStream(paths, required)
-
-  override def estimateStatistics(): Statistics = new Statistics {
-    override def sizeInBytes(): java.util.OptionalLong =
-      java.util.OptionalLong.of(files.map(_._2).sum)
-    override def numRows(): java.util.OptionalLong = java.util.OptionalLong.empty()
-  }
-}
-
-/** Streaming (micro-batch) ingest of a growing log directory:
-  *
-  * {{{ spark.readStream.format("accesslog").load(dir) }}}
-  *
-  * Offset model: the HIGH-WATERMARK OF FILE PATHS in lexicographic order.
-  * S3 server-side access-log objects are named
-  * `YYYY-MM-DD-HH-MM-SS-<id>` (FIXTURES.md §1; the reference lists them
-  * by date prefix, `scripts/...:212-213`), so path order IS arrival
-  * order and a name watermark is a legal, restart-stable offset: a batch
-  * is the files in `(startWatermark, endWatermark]`, reprocessing after
-  * a crash replans exactly the same file set, and no per-file seen-map
-  * has to grow without bound (the failure mode of Spark's generic
-  * FileStreamSource at millions of files). Files that appear with names
-  * BELOW the watermark are ignored by design — same contract as the
-  * reference's per-day prefix listing.
-  */
-final class AccessLogMicroBatchStream(paths: Seq[String], required: StructType)
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
-  import org.apache.spark.sql.connector.read.streaming.Offset
-
-  private case class NameWatermark(w: String) extends Offset {
-    override def json(): String = w
-  }
-
-  override def initialOffset(): Offset = NameWatermark("")
-
-  // Offsets must never regress: a transiently empty/short listing (S3
-  // eventual consistency, directory momentarily recreated) would
-  // otherwise move the watermark backwards and make a later trigger
-  // replan — and re-emit — already-committed files.
-  private var highWater: String = ""
-
-  override def latestOffset(): Offset = {
-    val fs = AccessLogFiles.list(paths)
-    if (fs.nonEmpty) highWater = Ordering[String].max(highWater, fs.map(_._1).max)
-    NameWatermark(highWater)
-  }
-
-  override def deserializeOffset(json: String): Offset = {
-    // restart path: re-arm the monotonic guard from the checkpoint
-    highWater = Ordering[String].max(highWater, json)
-    NameWatermark(json)
-  }
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val lo = start.asInstanceOf[NameWatermark].w
-    val hi = end.asInstanceOf[NameWatermark].w
-    val batch = AccessLogFiles.list(paths)
-      .filter { case (p, _) => p > lo && p <= hi }
-    AccessLogFiles.binPack(batch)
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    AccessLogFiles.readerFactory(required, Seq.empty)
-
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
-}
-
-final case class AccessLogInputPartition(files: Array[String])
-    extends InputPartition
-
-final case class AccessLogReaderFactory(required: StructType,
-    pushed: Seq[org.apache.spark.sql.sources.Filter],
-    conf: Map[String, String], sessionTimeZone: String)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new AccessLogPartitionReader(partition.asInstanceOf[AccessLogInputPartition],
-      required, pushed, conf, sessionTimeZone)
-}
-
-/** Streams each file line-by-line through the parse kernel
-  * ([[graft.functions.AccessLogKernel]], the one implementation of the
-  * group → typed-column rules, shared with [[LogLineParser.parse]]) and
-  * emits only the pruned fields.
-  */
-final class AccessLogPartitionReader(part: AccessLogInputPartition,
-                                     required: StructType,
-                                     pushed: Seq[org.apache.spark.sql.sources.Filter],
-                                     conf: Map[String, String],
-                                     sessionTimeZone: String)
-    extends PartitionReader[InternalRow] {
-
-  private val hadoopConf = {
-    val c = new Configuration(false)
-    conf.foreach { case (k, v) => c.set(k, v) }
-    c
-  }
-  private val codecs = new CompressionCodecFactory(hadoopConf)
-  // Timestamps resolve in the SESSION timezone, as on the text+parse path
-  private val time = new RequestTime(sessionTimeZone)
-  // the row builder copies the pruned fields only, by canonical position
-  private val positions: Array[Int] =
-    required.fieldNames.map(AccessLogSchema.columns.indexOf(_))
-  private val types: Array[DataType] = positions.map(AccessLogSchema.schema(_).dataType)
-
-  // compiled keep-predicates over the typed row: a row failing one is
-  // skipped before the pruned row materializes
-  private val keeps: Array[InternalRow => Boolean] =
-    pushed.flatMap(AccessLogFilterEval.compile).toArray
-
-  private var fileIdx = -1
-  private var reader: BufferedReader = _
-  private var parsed: InternalRow = _
-
-  private def nextReader(): Boolean = {
-    if (reader != null) { reader.close(); reader = null }
-    fileIdx += 1
-    if (fileIdx >= part.files.length) false
-    else {
-      val path = new Path(part.files(fileIdx))
-      val fs = path.getFileSystem(hadoopConf)
-      val raw = fs.open(path)
-      val in = Option(codecs.getCodec(path))
-        .map(_.createInputStream(raw).asInstanceOf[java.io.InputStream])
-        .getOrElse(raw)
-      reader = new BufferedReader(new InputStreamReader(in, StandardCharsets.UTF_8))
-      true
-    }
-  }
-
-  override def next(): Boolean = {
-    while (true) {
-      if (reader == null && !nextReader()) return false
-      val line = reader.readLine()
-      if (line == null) { reader.close(); reader = null }
-      else {
-        val utf8 = UTF8String.fromString(line)
-        // blank lines dropped (reference strips + skips empties, :165-167);
-        // parse here so pushed filters can reject pre-materialization
-        if (AccessLogKernel.nonBlank(utf8)) {
-          parsed = AccessLogKernel.parse(utf8, time)
-          var keep = true
-          var k = 0
-          while (keep && k < keeps.length) { keep = keeps(k)(parsed); k += 1 }
-          if (keep) return true
-        }
-      }
-    }
-    false
-  }
-
-  override def get(): InternalRow = {
-    val vals = new Array[Any](positions.length)
-    var i = 0
-    while (i < vals.length) {
-      vals(i) = parsed.get(positions(i), types(i))
-      i += 1
-    }
-    new GenericInternalRow(vals)
-  }
-
-  override def close(): Unit = if (reader != null) { reader.close(); reader = null }
-}
-
-/** Conservative reader-side evaluation of pushed-down filters over the
-  * typed row. Unsupported filters compile to None and are left entirely to
-  * Spark; supported ones ALSO remain Spark-evaluated (see
-  * [[AccessLogScanBuilder.pushFilters]]), so this only ever has to be
-  * sound on the rows it DROPS: a dropped row must be one the equivalent
-  * Catalyst predicate would reject (null comparisons reject in SQL).
-  */
-private[sources] object AccessLogFilterEval {
-  import org.apache.spark.sql.sources._
-
-  private def column(c: String): Option[(Int, DataType)] = {
-    val i = AccessLogSchema.columns.indexOf(c)
-    if (i < 0) None else Some((i, AccessLogSchema.schema(i).dataType))
-  }
-
-  private def string(c: String): Option[InternalRow => String] = column(c).collect {
-    case (i, StringType) => (r: InternalRow) =>
-      if (r.isNullAt(i)) null else r.getUTF8String(i).toString
-  }
-
-  private def number(c: String): Option[InternalRow => java.lang.Long] = column(c).collect {
-    case (i, IntegerType) => (r: InternalRow) =>
-      if (r.isNullAt(i)) null else java.lang.Long.valueOf(r.getInt(i).toLong)
-    case (i, LongType) => (r: InternalRow) =>
-      if (r.isNullAt(i)) null else java.lang.Long.valueOf(r.getLong(i))
-  }
-
-  private def toLong(v: Any): Option[Long] = v match {
-    case i: Int => Some(i.toLong)
-    case l: Long => Some(l)
-    case s: Short => Some(s.toLong)
-    case b: Byte => Some(b.toLong)
-    case _ => None
-  }
-
-  private def compare(c: String, v: Any)(ok: (Long, Long) => Boolean)
-      : Option[InternalRow => Boolean] =
-    for (n <- number(c); lv <- toLong(v))
-      yield (r: InternalRow) => { val x = n(r); x != null && ok(x.longValue, lv) }
-
-  def compile(f: Filter): Option[InternalRow => Boolean] = f match {
-    case EqualTo(c, v: String) => string(c).map(s => (r: InternalRow) => s(r) == v)
-    case In(c, vs) if vs.forall(_.isInstanceOf[String]) =>
-      val set = vs.map(_.asInstanceOf[String]).toSet
-      string(c).map(s => (r: InternalRow) => { val x = s(r); x != null && set.contains(x) })
-    case StringStartsWith(c, p) =>
-      string(c).map(s => (r: InternalRow) => { val x = s(r); x != null && x.startsWith(p) })
-    case IsNotNull(c) => column(c).map { case (i, _) => (r: InternalRow) => !r.isNullAt(i) }
-    case IsNull(c) => column(c).map { case (i, _) => (r: InternalRow) => r.isNullAt(i) }
-    case EqualTo(c, v) => compare(c, v)(_ == _)
-    case GreaterThan(c, v) => compare(c, v)(_ > _)
-    case GreaterThanOrEqual(c, v) => compare(c, v)(_ >= _)
-    case LessThan(c, v) => compare(c, v)(_ < _)
-    case LessThanOrEqual(c, v) => compare(c, v)(_ <= _)
-    case _ => None
+  /** A user-specified schema must have `AccessLogSchema`'s names and types. */
+  private def requireFixedSchema(schema: Option[StructType]): Unit = schema.foreach { s =>
+    def shape(t: StructType) = t.map(f => (f.name, f.dataType))
+    require(shape(s) == shape(AccessLogSchema.schema),
+      s"accesslog has the fixed schema ${AccessLogSchema.schema.toDDL}; got ${s.toDDL}")
   }
 }

@@ -6,29 +6,26 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
-import graft.logs.LogLineParser
-
 /** Structured Streaming ingest for access logs — the streaming layer the
   * reference does not have (strictly daily batch, SURVEY.md §2.10) but
-  * that layers cleanly on this engine because parsing is pure column
-  * expressions: `LogLineParser.parse` works unchanged under `readStream`.
+  * that layers cleanly on this engine because the batch reader's
+  * `accesslog` format streams too ([[graft.sources.AccessLogDataSource]]).
   *
-  * Scale stance: the file source lists incrementally (maxFilesPerTrigger
-  * bounds a micro-batch); the windowed aggregation is a streaming state
-  * store keyed by (window, operation) — cardinality ~ operations ×
-  * retained windows, bounded by the watermark; the parquet sink commits
-  * per micro-batch with exactly-once file-sink semantics.
+  * Scale stance: Spark's file stream source lists incrementally
+  * (maxFilesPerTrigger bounds a micro-batch); the windowed aggregation is
+  * a streaming state store keyed by (window, operation) — cardinality ~
+  * operations × retained windows, bounded by the watermark; the parquet
+  * sink commits per micro-batch with exactly-once file-sink semantics.
   */
 object LogStream {
 
   /** Raw line stream from a directory → canonical 19-column stream. */
   def parsedStream(spark: SparkSession, dir: String,
-                   maxFilesPerTrigger: Int = 100): DataFrame = {
-    val raw = spark.readStream
+                   maxFilesPerTrigger: Int = 100): DataFrame =
+    spark.readStream
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .text(dir)
-    LogLineParser.parse(LogLineParser.dropBlankLines(raw))
-  }
+      .format("accesslog")
+      .load(dir)
 
   /** 1-day tumbling-window operation counts with a late-data watermark
     * (the streaming twin of the reference's per-day batch determinism:
