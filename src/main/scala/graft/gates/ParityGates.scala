@@ -150,8 +150,7 @@ private[graft] object ParityGates extends GateFamily {
     // → aggregate. The write is part of the measured work on purpose: it
     // is the reference's whole pipeline (text in, typed analytics out).
     "q62_accesslog_source" -> ((s, dir) => {
-      val outDir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft-accesslog-" + dir.replaceAll("[^A-Za-z0-9.]", "_")).toString
+      val outDir = scratchDir("graft-q62") + "/raw"
       syntheticLogLines(tbl(s, dir, "events"))
         .write.mode("overwrite").text(outDir)
       s.read.format("accesslog").load(outDir)

@@ -246,8 +246,10 @@ private[graft] object StreamingGates extends GateFamily {
       val batches = (0 to 2).map(i => words(docs.filter(col("doc_id") % 3 === i)))
       val probes = words(docs.filter(col("doc_id") % 89 === 0))
       val store = scratchDir("graft-q225") + "/cms"
-      streaming.StreamingFreqSketch.byBatch(s, batches, store, "word",
-          probes, "word", width = 512, minCount = 80L)
+      streaming.CellSketchMaintainer.replay(s, batches, store,
+          streaming.CellSketch.Cms("word", width = 512))
+        .whole(_.estimate(_, probes, "word"))
+        .filter(col("est") >= 80L)
         .orderBy("item")
     }),
 
@@ -269,9 +271,11 @@ private[graft] object StreamingGates extends GateFamily {
       val probes = ev.filter(col("user_id") % 97 === 0)
         .select("event_type", "user_id")
       val store = scratchDir("graft-q273") + "/cms"
-      streaming.StreamingFreqSketch.byBatchBy(s, batches, store,
-          "event_type", "user_id", probes, "event_type", "user_id",
-          width = 256, minCount = 2L)
+      streaming.CellSketchMaintainer.replay(s, batches, store,
+          streaming.CellSketch.Cms("user_id", width = 256),
+          groupCol = Some("event_type"))
+        .whole(_.estimate(_, probes, "user_id", Some("event_type")))
+        .filter(col("est") >= 2L)
         .orderBy("grp", "item")
     }),
 
@@ -292,9 +296,9 @@ private[graft] object StreamingGates extends GateFamily {
       val batches = (0L to 2L).map(i =>
         vals.filter(col("b") === i).select("v"))
       val store = scratchDir("graft-q276") + "/hdr"
-      streaming.StreamingHdr.byBatchWindow(s, batches, store, "v",
-          Seq(0.5, 0.99), window = 2, subBits = 5,
-          decayHalfLife = Some(1))
+      streaming.CellSketchMaintainer.replay(s, batches, store,
+          streaming.CellSketch.Hdr("v", subBits = 5), windowed = true)
+        .windows(2, decayHalfLife = Some(1))(_.quantiles(_, Seq(0.5, 0.99)))
         .orderBy("batch_id", "kind", "q")
     }),
 
@@ -315,9 +319,10 @@ private[graft] object StreamingGates extends GateFamily {
         ev.filter(col("event_id") % 3 === i).select("user_id"))
       val probes = ev.filter(col("user_id") % 97 === 0).select("user_id")
       val store = scratchDir("graft-q275") + "/cms"
-      streaming.StreamingFreqSketch.byBatchWindow(s, batches, store,
-          "user_id", probes, "user_id", width = 256, window = 2,
-          minCount = 1L, decayHalfLife = Some(1))
+      streaming.CellSketchMaintainer.replay(s, batches, store,
+          streaming.CellSketch.Cms("user_id", width = 256), windowed = true)
+        .windows(2, decayHalfLife = Some(1))(_.estimate(_, probes, "user_id"))
+        .filter(col("est") >= 1L)
         .orderBy("batch_id", "kind", "item")
     }),
 
@@ -339,10 +344,12 @@ private[graft] object StreamingGates extends GateFamily {
       val probes = ev.filter(col("user_id") % 97 === 0)
         .select("event_type", "user_id")
       val store = scratchDir("graft-q278") + "/cms"
-      streaming.StreamingFreqSketch.byBatchWindowBy(s, batches, store,
-          "event_type", "user_id", probes, "event_type", "user_id",
-          width = 256, window = 2, minCount = 1L,
-          decayHalfLife = Some(1))
+      streaming.CellSketchMaintainer.replay(s, batches, store,
+          streaming.CellSketch.Cms("user_id", width = 256),
+          groupCol = Some("event_type"), windowed = true)
+        .windows(2, decayHalfLife = Some(1))(
+          _.estimate(_, probes, "user_id", Some("event_type")))
+        .filter(col("est") >= 1L)
         .orderBy("batch_id", "kind", "grp", "item")
     }),
 
@@ -363,9 +370,10 @@ private[graft] object StreamingGates extends GateFamily {
       val batches = (0L to 2L).map(i =>
         vals.filter(col("b") === i).select("g", "v"))
       val store = scratchDir("graft-q279") + "/hdr"
-      streaming.StreamingHdr.byBatchWindowBy(s, batches, store, "g",
-          "v", Seq(0.5, 0.99), window = 2, subBits = 5,
-          decayHalfLife = Some(1))
+      streaming.CellSketchMaintainer.replay(s, batches, store,
+          streaming.CellSketch.Hdr("v", subBits = 5),
+          groupCol = Some("g"), windowed = true)
+        .windows(2, decayHalfLife = Some(1))(_.quantiles(_, Seq(0.5, 0.99)))
         .orderBy("batch_id", "kind", "grp", "q")
     }),
 
@@ -417,8 +425,9 @@ private[graft] object StreamingGates extends GateFamily {
       val batches = (0L to 2L).map(i =>
         vals.filter(col("b") === i).select("v"))
       val store = scratchDir("graft-q247") + "/hdr"
-      streaming.StreamingHdr.byBatch(s, batches, store, "v",
-          Seq(0.5, 0.9, 0.99), subBits = 5)
+      streaming.CellSketchMaintainer.replay(s, batches, store,
+          streaming.CellSketch.Hdr("v", subBits = 5))
+        .states((m, u) => m.sketch.quantiles(m.read(u), Seq(0.5, 0.9, 0.99)))
         .orderBy("batch_id", "q")
     }),
 
@@ -439,8 +448,10 @@ private[graft] object StreamingGates extends GateFamily {
       val batches = (0L to 2L).map(i =>
         ev.filter(col("b") === i).select("item"))
       val store = scratchDir("graft-q252") + "/hll"
-      val est = streaming.StreamingHll.byBatch(s, batches, store,
-        "item", p = 8, window = 2)
+      val est = streaming.CellSketchMaintainer.replay(s, batches, store,
+          streaming.CellSketch.Hll("item", p = 8), windowed = true)
+        .states((m, u) => m.sketch.estimates(m.read(u),
+          m.read(u, Some(math.max(0L, u - 2)))))
       val di = ev.select(col("b"), col("item")).distinct()
       val exact = di
         .select(col("b"), col("item"),
@@ -457,7 +468,7 @@ private[graft] object StreamingGates extends GateFamily {
     }),
 
     // streaming ext — cross-batch t-digest: continuous quantiles over
-    // an UNBOUNDED real domain (the StreamingHdr complement) with ONE
+    // an UNBOUNDED real domain (the HDR complement) with ONE
     // ≤ δ+1-row digest as total state. The fold is a strict per-batch
     // left fold (digest_i = recluster(digest_{i-1} ∪ summarize(batch)))
     // — a pure function of the batch sequence — so the oracle unrolls
@@ -628,8 +639,11 @@ private[graft] object StreamingGates extends GateFamily {
       val batches = (0L to 2L).map(i =>
         ev.filter(col("b") === i).select("t", "item"))
       val store = scratchDir("graft-q270") + "/hll"
-      val est = graft.streaming.StreamingHll.byBatchBy(s, batches, store,
-        "t", "item", p = 8, window = 2)
+      val est = streaming.CellSketchMaintainer.replay(s, batches, store,
+          streaming.CellSketch.Hll("item", p = 8), groupCol = Some("t"),
+          windowed = true)
+        .states((m, u) => m.sketch.estimates(m.read(u),
+          m.read(u, Some(math.max(0L, u - 2)))))
       val di = ev.select(col("b"), col("t"), col("item")).distinct()
       val exact = di
         .select(col("b"), col("t"), col("item"),
@@ -661,8 +675,9 @@ private[graft] object StreamingGates extends GateFamily {
       val batches = (0L to 2L).map(i =>
         vals.filter(col("b") === i).select("g", "v"))
       val store = scratchDir("graft-q271") + "/hdr"
-      graft.streaming.StreamingHdr.byBatchBy(s, batches, store, "g", "v",
-          Seq(0.5, 0.99), subBits = 5)
+      streaming.CellSketchMaintainer.replay(s, batches, store,
+          streaming.CellSketch.Hdr("v", subBits = 5), groupCol = Some("g"))
+        .states((m, u) => m.sketch.quantiles(m.read(u), Seq(0.5, 0.99)))
         .orderBy("batch_id", "grp", "q")
     }),
 

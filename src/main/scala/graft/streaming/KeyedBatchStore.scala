@@ -11,7 +11,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * shuffles the base — only the (tiny) batch keys move to meet it —
   * and repeated content folds at compaction, it never accumulates rows.
   * Merge modes: DISTINCT keys (default); with `countCol` set, a BIGINT
-  * payload sum-merged per key (cumulative frequency stores); with
+  * payload sum-merged per key (cumulative frequency stores, the counted
+  * sketches of [[CellSketchMaintainer]]); with
   * `extraCols` set, DISTINCT whole rows of (key, extras) — posting
   * stores like [[StreamingMinhashLsh]]'s (band key → doc id) index,
   * still bucketed by `keyCol` so probe joins never shuffle the base.
@@ -121,7 +122,8 @@ final class KeyedBatchStore(spark: SparkSession, storePath: String,
         .agg(org.apache.spark.sql.functions.sum(
           org.apache.spark.sql.functions.col(c)).as(c))
     }
-    // retention hook (batch-tagged stores): rows failing the caller's
+    // retention hook (batch-tagged stores: [[CellSketchMaintainer]],
+    // [[StreamingMinhashLsh]]): rows failing the caller's
     // keep-predicate for this compaction frontier are dropped HERE —
     // the fold is the only moment the base is rewritten anyway, so
     // expiry is free, and state stops growing with stream lifetime
@@ -173,11 +175,11 @@ final class KeyedBatchStore(spark: SparkSession, storePath: String,
   def maxStoredBatchId(): Option[Long] =
     (deltas.ids() ++ compacted.ids().map(_ - 1L)).reduceOption(_ max _)
 
-  /** Fail fast on batch-id REGRESSION (the check accumulator
-    * `update`s run before appending): because the batch id is folded
-    * into stored keys, a restarted stream's cells would silently
-    * interleave under old ids — corrupting any `[fromBatch, uptoBatch)`
-    * windowed read (a cumulative read stays a harmless union).
+  /** Fail fast on batch-id REGRESSION (the check
+    * [[CellSketchMaintainer.update]] runs before appending): a restarted
+    * stream would overwrite the old batch's delta, double-count
+    * sum-merged keys after it, and interleave batch-tagged keys under
+    * old ids — corrupting any `[fromBatch, uptoBatch)` windowed read.
     */
   def requireNoRegression(batchId: Long): Unit =
     VersionedDir.requireNoRegression(storePath, maxStoredBatchId(), batchId)

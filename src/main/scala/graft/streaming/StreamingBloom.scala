@@ -2,84 +2,16 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.ext.SetSketch
-
-/** Continuous Bloom filter: cross-batch SET-membership accumulation
-  * with state bounded at `mBits` rows no matter how many distinct
-  * items the stream ever carries — the novelty screen of a continuous
-  * crawl ("have we fetched this URL / seen this doc hash before?"),
-  * where [[StreamingFreqSketch]] answers "how often" and this answers
-  * "ever?" with the no-false-negative contract: an item reported
-  * NOVEL truly is (its bits were not all set by batches before it);
-  * false "seen" verdicts only ever cost a recheck, never a loss.
-  *
-  * State rides the shared [[KeyedBatchStore]] LSM in DISTINCT-key
-  * mode, keyed by the bit position: per-batch deltas are each batch's
-  * OWN bit set (≤ mBits rows), compaction folds them by distinct —
-  * which is EXACTLY `bloomMerge`, so the accumulated filter equals the
-  * one-shot filter of the concatenated stream (the mergeability
-  * [[graft.ext.SetSketchSpec]] pins on the batch operator), and the
-  * store inherits retry-idempotence and restart recovery.
+/** Continuous novelty screening over a [[CellSketch.Bloom]] maintainer
+  * — "have we fetched this URL / seen this doc hash before?" — where a
+  * CMS answers "how often" and this answers "ever?" with the
+  * no-false-negative contract: an item reported NOVEL truly is (its
+  * bits were not all set by batches before it); false "seen" verdicts
+  * only ever cost a recheck, never a loss. State is ≤ `mBits` distinct
+  * bit rows however many items stream by.
   */
 object StreamingBloom {
-
-  /** Driver-held handle on the accumulating filter store. */
-  final class BloomAccumulator(spark: SparkSession, storePath: String,
-                               itemCol: String, mBits: Int,
-                               compactEvery: Int = 8) {
-    require(mBits >= 64, s"mBits must be >= 64, got $mBits")
-    // numBuckets=1: the whole filter is at most mBits rows — one
-    // bucket keeps the store a single small file per version
-    private val store = new KeyedBatchStore(spark, storePath, "bit",
-      "BIGINT", compactEvery, numBuckets = 1)
-
-    /** The accumulated bit relation over batches < `uptoBatch`. */
-    def bits(uptoBatch: Long): DataFrame =
-      store.parts(uptoBatch)
-        .reduceOption(_ unionByName _)
-        .map(_.select(col("bit")).distinct())
-        .getOrElse(spark.sql(
-          "SELECT CAST(NULL AS BIGINT) AS bit WHERE FALSE"))
-
-    /** Membership screen of a probe frame against the accumulated
-      * filter — `(item, hits, maybe)`, `maybe = false` proving the
-      * item was never appended before `uptoBatch`.
-      */
-    def contains(probes: DataFrame, uptoBatch: Long): DataFrame =
-      SetSketch.bloomContains(bits(uptoBatch), probes, itemCol, mBits)
-
-    /** Append one batch's bit set. */
-    def update(batch: DataFrame, batchId: Long): Unit = synchronized {
-      store.maybeCompact(batchId)
-      store.append(SetSketch.bloomSketch(batch, itemCol, mBits), batchId)
-    }
-
-    /** foreachBatch adapter: screen-then-append is the caller's
-      * composition (`contains(batch, id)` before `update(batch, id)`)
-      * — this adapter only accumulates.
-      */
-    def asForeachBatch: (DataFrame, Long) => Unit =
-      (batch, id) => update(batch, id)
-  }
-
-  /** Attach the accumulator to a stream; probe `contains` between/after
-    * batches.
-    */
-  def start(stream: DataFrame, storePath: String, itemCol: String,
-            mBits: Int = 8192,
-            queryName: String = "graft-stream-bloom",
-            checkpoint: Option[String] = None)
-      : (StreamingQuery, BloomAccumulator) = {
-    val acc = new BloomAccumulator(stream.sparkSession, storePath,
-      itemCol, mBits)
-    val writer = stream.writeStream
-      .queryName(queryName)
-      .foreachBatch(acc.asForeachBatch)
-    checkpoint.foreach(writer.option("checkpointLocation", _))
-    (writer.start(), acc)
-  }
 
   /** Batch replay — the oracle-gateable twin: for each batch IN ORDER,
     * screen its distinct items against the filter accumulated from the
@@ -93,9 +25,10 @@ object StreamingBloom {
               storePath: String, itemCol: String,
               mBits: Int): DataFrame = {
     require(batches.nonEmpty, "byBatch needs at least one batch")
-    val acc = new BloomAccumulator(spark, storePath, itemCol, mBits)
+    val bloom = CellSketch.Bloom(itemCol, mBits)
+    val acc = new CellSketchMaintainer(spark, storePath, bloom)
     val perBatch = batches.zipWithIndex.map { case (b, i) =>
-      val screened = acc.contains(b, i.toLong)
+      val screened = bloom.contains(acc.read(i.toLong), b)
         .agg(count(lit(1)).as("n_items"),
           sum(when(!col("maybe"), 1L).otherwise(0L)).as("n_novel"))
         .select(lit(i.toLong).as("batch_id"), col("n_items"),

@@ -10,7 +10,7 @@ import graft.ext.Similarity
 /** Continuously-maintained IVF index — the streaming form of
   * [[graft.ext.Similarity.ivfAssign]]'s frozen-quantizer append (and
   * the similarity family's member of the streaming-accumulator suite:
-  * StreamingHll / StreamingHdr / StreamingTDigest): each micro-batch of
+  * CellSketchMaintainer / StreamingTDigest): each micro-batch of
   * vectors is assigned to its Voronoi cell by one kernel scan and
   * written as its own postings delta; search probes everything ingested
   * so far. Nothing ever re-ASSIGNS, existing postings never move, and

@@ -96,7 +96,7 @@ object StreamingMinhashLsh {
       retainAtCompact = keep)
 
     /** Batches strictly below this id may have been evicted by
-      * retention (the [[StreamingFreqSketch]] horizon rule: eviction
+      * retention (the [[CellSketchMaintainer]] horizon rule: eviction
       * only happens at a fold, so everything at or above
       * `latestCompactedUpTo − keepBatches` is still fully probed).
       */

@@ -9,7 +9,7 @@ import graft.ext.TDigest
 /** Continuous t-digest quantiles: cross-batch percentile tracking for
   * UNBOUNDED/REAL value domains with FIXED-SIZE state — the streaming
   * twin of [[graft.ext.TDigest]] and the real-domain complement to
-  * [[StreamingHdr]] (whose bucket histogram covers non-negative
+  * [[CellSketch.Hdr]] (whose bucket histogram covers non-negative
   * integers only). State is ONE digest of ≤ δ+1 centroid rows no
   * matter how many values the stream ever carries; every read reports
   * the exact `[vmin, vmax]` bracket per quantile, and the bracket
@@ -27,7 +27,7 @@ import graft.ext.TDigest
   * merge-on-read store, where the merge TREE would shift with
   * compaction timing and change the exact centroid cuts), so the
   * DuckDB oracle replays the whole stream bit-for-bit by unrolling
-  * the same fold. Unlike [[StreamingHdr]]'s bucket store, the
+  * the same fold. Unlike [[CellSketch.Hdr]]'s bucket store, the
   * accumulated digest is NOT equal to the one-shot digest of the
   * concatenated stream (rank re-clustering is lossy by design); the
   * contract that matters — and that the spec pins per batch — is the
@@ -233,7 +233,7 @@ object StreamingTDigest {
       * (≤ window × shards × (δ+1) summary rows; the cumulative fold
       * cannot answer this because rank re-clustering is not
       * invertible — expiry needs the members kept, the
-      * [[StreamingHll]] windowed-read argument for quantiles).
+      * [[CellSketch.Hll]] windowed-read argument for quantiles).
       */
     def quantilesWindow(qs: Seq[Double], uptoBatch: Long,
                         fromBatch: Long = 0L): DataFrame =

@@ -24,7 +24,7 @@ class AccessLogDataSourceSpec extends SparkTestBase {
   )
 
   private def writeFixture(): String = {
-    val dir = Files.createTempDirectory("accesslog-src")
+    val dir = tempDir("accesslog-src")
     Files.write(dir.resolve("part1.log"),
       lines.take(3).mkString("\n").getBytes("UTF-8"))
     Files.write(dir.resolve("part2.log"),
@@ -98,7 +98,7 @@ class AccessLogDataSourceSpec extends SparkTestBase {
   }
 
   test("gzip-compressed log files decode through the codec factory") {
-    val dir = Files.createTempDirectory("accesslog-gz")
+    val dir = tempDir("accesslog-gz")
     val gz = new java.util.zip.GZIPOutputStream(
       java.nio.file.Files.newOutputStream(dir.resolve("day.log.gz")))
     gz.write(lines.mkString("\n").getBytes("UTF-8")); gz.close()
@@ -108,7 +108,7 @@ class AccessLogDataSourceSpec extends SparkTestBase {
   }
 
   test("empty directory yields an empty frame, not an error") {
-    val dir = Files.createTempDirectory("accesslog-empty")
+    val dir = tempDir("accesslog-empty")
     assert(spark.read.format("accesslog").load(dir.toString).count() == 0)
   }
 
@@ -124,7 +124,7 @@ class AccessLogDataSourceSpec extends SparkTestBase {
   }
 
   test("readStream.format(accesslog): name-watermark micro-batches pick up new files") {
-    val dir = Files.createTempDirectory("accesslog-stream")
+    val dir = tempDir("accesslog-stream")
     def writeDay(name: String, reqId: String): Unit =
       Files.write(dir.resolve(name),
         s"""own bkt [06/Feb/2019:00:00:38 +0000] ip r $reqId REST.GET.OBJECT k "GET / HTTP/1.1" 200 - 1 2 3 4 "-" "ua" -"""
@@ -136,7 +136,7 @@ class AccessLogDataSourceSpec extends SparkTestBase {
       .select("request_id", "operation")
       .writeStream.format("memory").queryName("acclog_stream")
       .option("checkpointLocation",
-        Files.createTempDirectory("accesslog-ckpt").toString)
+        tempDir("accesslog-ckpt").toString)
       .start()
     try {
       q.processAllAvailable()
@@ -190,8 +190,8 @@ class AccessLogDataSourceSpec extends SparkTestBase {
   }
 
   test("stream: a rewritten processed file and a restart on the same checkpoint add no rows") {
-    val dir = Files.createTempDirectory("accesslog-seen")
-    val ckpt = Files.createTempDirectory("accesslog-seen-ckpt").toString
+    val dir = tempDir("accesslog-seen")
+    val ckpt = tempDir("accesslog-seen-ckpt").toString
     def writeLog(name: String, reqId: String): Unit =
       Files.write(dir.resolve(name), lines.head.replace("REQ1", reqId).getBytes("UTF-8"))
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -254,7 +254,7 @@ class AccessLogDataSourceSpec extends SparkTestBase {
   }
 
   test("bin-packing: many small files collapse into few partitions") {
-    val dir = Files.createTempDirectory("accesslog-bins")
+    val dir = tempDir("accesslog-bins")
     (0 until 50).foreach { i =>
       Files.write(dir.resolve(f"f$i%03d.log"), lines.head.getBytes("UTF-8"))
     }

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
@@ -11,19 +9,19 @@ class StreamingBloomSpec extends SparkTestBase {
   import spark.implicits._
 
   private def tmp(tag: String): String =
-    Files.createTempDirectory(s"graft-sbloom-$tag").toString + "/store"
+    tempDir(s"graft-sbloom-$tag").toString + "/store"
 
   private val b0 = (0 until 300).map(i => s"k$i")
   private val b1 = (150 until 450).map(i => s"k$i") // 150 repeats, 150 new
   private val b2 = (0 until 450).map(i => s"k$i")   // all repeats
 
   test("accumulated bits equal the one-shot sketch of the concatenation") {
-    val acc = new StreamingBloom.BloomAccumulator(spark, tmp("merge"),
-      "it", mBits = 4096, compactEvery = 2)
+    val acc = new CellSketchMaintainer(spark, tmp("merge"),
+      CellSketch.Bloom("it", mBits = 4096), compactEvery = 2)
     Seq(b0, b1, b2).zipWithIndex.foreach { case (b, i) =>
       acc.update(b.toDF("it"), i.toLong)
     }
-    val got = acc.bits(3L).as[Long].collect().toSet
+    val got = acc.read(3L).as[Long].collect().toSet
     val want = SetSketch.bloomSketch((b0 ++ b1 ++ b2).toDF("it"), "it",
       mBits = 4096).as[Long].collect().toSet
     assert(got == want)
@@ -49,15 +47,31 @@ class StreamingBloomSpec extends SparkTestBase {
 
   test("contains after accumulation: every member maybe, absent mostly not") {
     val store = tmp("contains")
-    val acc = new StreamingBloom.BloomAccumulator(spark, store, "it",
-      mBits = 8192, compactEvery = 2)
+    val acc = new CellSketchMaintainer(spark, store,
+      CellSketch.Bloom("it", mBits = 8192), compactEvery = 2)
     Seq(b0, b1).zipWithIndex.foreach { case (b, i) =>
       acc.update(b.toDF("it"), i.toLong)
     }
-    val ct = acc.contains((0 until 900).map(i => s"k$i").toDF("it"), 2L)
+    val ct = acc.sketch.contains(acc.read(2L),
+        (0 until 900).map(i => s"k$i").toDF("it"))
       .select("item", "maybe").as[(String, Boolean)].collect().toMap
     (0 until 450).foreach(i => assert(ct(s"k$i"), s"member k$i absent"))
     val fp = (450 until 900).count(i => ct(s"k$i"))
     assert(fp < 90, s"$fp/450 false positives")
+  }
+
+  test("a restarted stream without its checkpoint fails fast instead of " +
+      "overwriting batch 0's bits") {
+    val store = tmp("regress")
+    val acc = new CellSketchMaintainer(spark, store,
+      CellSketch.Bloom("it", mBits = 4096))
+    acc.update(b0.toDF("it"), 0L)
+    acc.update(b1.toDF("it"), 1L)
+    val fresh = new CellSketchMaintainer(spark, store,
+      CellSketch.Bloom("it", mBits = 4096))
+    val e = intercept[IllegalArgumentException] {
+      fresh.update(b2.toDF("it"), 0L)
+    }
+    assert(e.getMessage.contains("checkpointLocation"), e.getMessage)
   }
 }

@@ -10,7 +10,7 @@ class StreamingFreqSketchSpec extends SparkTestBase {
   import spark.implicits._
 
   private def tmpStore(): String =
-    java.nio.file.Files.createTempDirectory("graft-cms").toString + "/cms"
+    tempDir("graft-cms").toString + "/cms"
 
   private val corpus = {
     val rnd = new scala.util.Random(43)
@@ -20,8 +20,9 @@ class StreamingFreqSketchSpec extends SparkTestBase {
   test("byBatch fold equals the one-shot corpus sketch estimate") {
     val batches = corpus.grouped(1000).map(_.toDF("word")).toSeq
     val probes = corpus.distinct.toDF("word")
-    val streamed = StreamingFreqSketch.byBatch(spark, batches, tmpStore(),
-        "word", probes, "word", width = 256, minCount = 0L)
+    val streamed = CellSketchMaintainer.replay(spark, batches, tmpStore(),
+        CellSketch.Cms("word", width = 256))
+      .whole(_.estimate(_, probes, "word")).filter(col("est") >= 0L)
       .as[(String, Long)].collect().toMap
     val oneShot = FreqSketch.cmsEstimate(
         FreqSketch.cmsSketch(corpus.toDF("word"), "word", width = 256),
@@ -35,38 +36,40 @@ class StreamingFreqSketchSpec extends SparkTestBase {
 
   test("retry idempotence: a replayed batch never double-counts") {
     val store = tmpStore()
-    val acc = new StreamingFreqSketch.SketchAccumulator(spark, store,
-      "word", width = 128)
+    val acc = new CellSketchMaintainer(spark, store,
+      CellSketch.Cms("word", width = 128))
     val batch = Seq("x", "x", "y").toDF("word")
     acc.update(batch, 0L)
     acc.update(batch, 0L) // foreachBatch retry of the SAME batch id
     acc.update(Seq("x").toDF("word"), 1L)
-    val est = acc.estimate(Seq("x", "y").toDF("word"), "word", 2L)
+    val est = acc.sketch.estimate(acc.read(2L), Seq("x", "y").toDF("word"),
+        "word")
       .as[(String, Long)].collect().toMap
     assert(est == Map("x" -> 3L, "y" -> 1L))
   }
 
   test("restart: a fresh accumulator on the same path sees prior state") {
     val store = tmpStore()
-    val acc1 = new StreamingFreqSketch.SketchAccumulator(spark, store,
-      "word", width = 128, compactEvery = 2)
+    val acc1 = new CellSketchMaintainer(spark, store,
+      CellSketch.Cms("word", width = 128), compactEvery = 2)
     (0 until 4).foreach(i => acc1.update(Seq("hot", "cold").toDF("word"), i.toLong))
-    val acc2 = new StreamingFreqSketch.SketchAccumulator(spark, store,
-      "word", width = 128, compactEvery = 2)
+    val acc2 = new CellSketchMaintainer(spark, store,
+      CellSketch.Cms("word", width = 128), compactEvery = 2)
     acc2.update(Seq("hot").toDF("word"), 4L)
-    val est = acc2.estimate(Seq("hot", "cold").toDF("word"), "word", 5L)
+    val est = acc2.sketch.estimate(acc2.read(5L),
+        Seq("hot", "cold").toDF("word"), "word")
       .as[(String, Long)].collect().toMap
     assert(est == Map("hot" -> 5L, "cold" -> 4L))
   }
 
   test("state stays cell-bounded however many distinct items stream by") {
     val store = tmpStore()
-    val acc = new StreamingFreqSketch.SketchAccumulator(spark, store,
-      "word", width = 64, compactEvery = 2)
+    val acc = new CellSketchMaintainer(spark, store,
+      CellSketch.Cms("word", width = 64), compactEvery = 2)
     (0 until 4).foreach { i =>
       acc.update((0 until 500).map(j => s"item_${i}_$j").toDF("word"), i.toLong)
     }
-    assert(acc.sketch(4L).count() <= FreqSketch.Depth * 64L)
+    assert(acc.read(4L).count() <= FreqSketch.Depth * 64L)
   }
 
   test("grouped fold equals the one-shot per-group sketch; groups are " +
@@ -77,9 +80,10 @@ class StreamingFreqSketchSpec extends SparkTestBase {
     val batches = rows.grouped(1000)
       .map(_.toDF("g", "word")).toSeq
     val probes = rows.distinct.toDF("g", "word")
-    val streamed = StreamingFreqSketch.byBatchBy(spark, batches,
-        tmpStore(), "g", "word", probes, "g", "word",
-        width = 256, minCount = 0L)
+    val streamed = CellSketchMaintainer.replay(spark, batches,
+        tmpStore(), CellSketch.Cms("word", width = 256), groupCol = Some("g"))
+      .whole(_.estimate(_, probes, "word", Some("g")))
+      .filter(col("est") >= 0L)
       .as[(String, String, Long)].collect()
       .map(r => (r._1, r._2) -> r._3).toMap
     val oneShot = FreqSketch.cmsEstimateBy(
@@ -108,8 +112,8 @@ class StreamingFreqSketchSpec extends SparkTestBase {
   test("windowed store: window reads equal the one-shot sketch of the " +
       "window's own batches; decay scales by freshness; guards hold") {
     val store = tmpStore()
-    val acc = new StreamingFreqSketch.SketchAccumulator(spark, store,
-      "word", width = 128, compactEvery = 2, windowed = true)
+    val acc = new CellSketchMaintainer(spark, store,
+      CellSketch.Cms("word", width = 128), compactEvery = 2, windowed = true)
     val b = Seq(
       Seq("old", "old", "old", "both"),   // batch 0
       Seq("both", "mid"),                 // batch 1
@@ -123,21 +127,23 @@ class StreamingFreqSketchSpec extends SparkTestBase {
     // window [1, 3): batch 0 expired — "old" gone, counts are the
     // window's own (min over slices never under the window truth, and
     // for this tiny fixture there are no collisions to over-count)
-    val w = est(acc.estimateWindow(probes, "word", 3L, 1L))
+    val w = est(acc.sketch.estimate(acc.read(3L, Some(1L)), probes, "word"))
     assert(w == Map("old" -> 0L, "mid" -> 1L, "new" -> 2L, "both" -> 2L),
       s"window estimates wrong: $w")
     // window read equals the ONE-SHOT sketch of exactly those batches
     val oneShot = est(FreqSketch.cmsEstimate(
       FreqSketch.cmsSketch((b(1) ++ b(2)).toDF("word"), "word", 128),
       probes, "word", 128))
-    assert(est(acc.estimateWindow(probes, "word", 3L, 1L)) == oneShot)
+    assert(est(acc.sketch.estimate(acc.read(3L, Some(1L)), probes, "word"))
+      == oneShot)
     // decay halfLife 1 over 3 batches: factors 1/2/4 —
     // old: 3·1, mid: 1·2, new: 2·4, both: 1+2+4
-    val d = est(acc.estimateDecayed(probes, "word", 3L, 1))
+    val d = est(acc.sketch.estimate(acc.read(3L, halfLifeBatches = Some(1)),
+      probes, "word"))
     assert(d == Map("old" -> 3L, "mid" -> 2L, "new" -> 8L, "both" -> 7L),
       s"decayed estimates wrong: $d")
     // cumulative read still works on a windowed store
-    assert(est(acc.estimate(probes, "word", 3L)) ==
+    assert(est(acc.sketch.estimate(acc.read(3L), probes, "word")) ==
       Map("old" -> 3L, "mid" -> 1L, "new" -> 2L, "both" -> 3L))
     // batch-id regression fails fast (ids live in the cell keys)
     val e = intercept[IllegalArgumentException] {
@@ -145,16 +151,17 @@ class StreamingFreqSketchSpec extends SparkTestBase {
     }
     assert(e.getMessage.contains("checkpointLocation"))
     // a PLAIN store refuses windowed/decayed reads
-    val plain = new StreamingFreqSketch.SketchAccumulator(spark,
-      tmpStore(), "word", width = 128)
+    val plain = new CellSketchMaintainer(spark,
+      tmpStore(), CellSketch.Cms("word", width = 128))
     plain.update(Seq("x").toDF("word"), 0L)
     val e2 = intercept[IllegalArgumentException] {
-      plain.estimateWindow(probes, "word", 1L, 0L)
+      plain.sketch.estimate(plain.read(1L, Some(0L)), probes, "word")
     }
     assert(e2.getMessage.contains("windowed store"))
     // decay span cap fails loud
     val e3 = intercept[IllegalArgumentException] {
-      acc.estimateDecayed(probes, "word", 100L, 1)
+      acc.sketch.estimate(acc.read(100L, halfLifeBatches = Some(1)), probes,
+        "word")
     }
     assert(e3.getMessage.contains("decay span"))
   }
@@ -168,9 +175,9 @@ class StreamingFreqSketchSpec extends SparkTestBase {
     // execution with FileNotFoundException
     val batches = (0 until 10).map(i => Seq.fill(i + 1)(s"w$i").toDF("word"))
     val probes = (0 until 10).map(i => s"w$i").toDF("word")
-    val rows = StreamingFreqSketch.byBatchWindow(spark, batches,
-        tmpStore(), "word", probes, "word", width = 128, window = 2,
-        minCount = 1L)
+    val rows = CellSketchMaintainer.replay(spark, batches,
+        tmpStore(), CellSketch.Cms("word", width = 128), windowed = true)
+      .windows(2)(_.estimate(_, probes, "word")).filter(col("est") >= 1L)
       .as[(Long, String, String, Long)].collect()
     // every batch state reports exactly its 2-batch window: at batch i,
     // w_i (i+1 copies) and w_{i-1} (i copies) are the only survivors
@@ -186,8 +193,8 @@ class StreamingFreqSketchSpec extends SparkTestBase {
   test("cumulative store also rejects batch-id regression: counts are " +
       "sum-merged, a renumbered stream would lose batch 0 and " +
       "double-count the rest") {
-    val acc = new StreamingFreqSketch.SketchAccumulator(spark, tmpStore(),
-      "word", width = 128)
+    val acc = new CellSketchMaintainer(spark, tmpStore(),
+      CellSketch.Cms("word", width = 128))
     acc.update(Seq("a").toDF("word"), 0L)
     acc.update(Seq("b").toDF("word"), 1L)
     val e = intercept[IllegalArgumentException] {
@@ -196,7 +203,7 @@ class StreamingFreqSketchSpec extends SparkTestBase {
     assert(e.getMessage.contains("checkpointLocation"))
     // a RETRY of the latest id stays allowed (idempotent overwrite)
     acc.update(Seq("b").toDF("word"), 1L)
-    assert(acc.estimate(Seq("a", "b").toDF("word"), "word", 2L)
+    assert(acc.sketch.estimate(acc.read(2L), Seq("a", "b").toDF("word"), "word")
       .as[(String, Long)].collect().toMap == Map("a" -> 1L, "b" -> 1L))
   }
 
@@ -209,9 +216,12 @@ class StreamingFreqSketchSpec extends SparkTestBase {
     val batches = b.map(_.toDF("g", "word"))
     val probes = Seq(("a", "x"), ("a", "y"), ("b", "x"), ("b", "y"))
       .toDF("g", "word")
-    val rows = StreamingFreqSketch.byBatchWindowBy(spark, batches,
-        tmpStore(), "g", "word", probes, "g", "word", width = 128,
-        window = 2, minCount = 0L, decayHalfLife = Some(1))
+    val rows = CellSketchMaintainer.replay(spark, batches,
+        tmpStore(), CellSketch.Cms("word", width = 128), groupCol = Some("g"),
+        windowed = true)
+      .windows(2, decayHalfLife = Some(1))(
+        _.estimate(_, probes, "word", Some("g")))
+      .filter(col("est") >= 0L)
       .as[(Long, String, String, String, Long)].collect()
       .map(r => (r._1, r._2, r._3, r._4) -> r._5).toMap
     // window [1, 3): a sees x once (batch 2), y once (batch 1);
@@ -233,8 +243,8 @@ class StreamingFreqSketchSpec extends SparkTestBase {
   test("keepBatches retention: folds evict expired cells, state stays " +
       "bounded, reads into the evicted range fail loud") {
     val store = tmpStore()
-    val acc = new StreamingFreqSketch.SketchAccumulator(spark, store,
-      "word", width = 128, compactEvery = 2, windowed = true,
+    val acc = new CellSketchMaintainer(spark, store,
+      CellSketch.Cms("word", width = 128), compactEvery = 2, windowed = true,
       keepBatches = 2)
     // 8 batches, each with a distinct word repeated (i+1) times
     (0 until 8).foreach { i =>
@@ -252,28 +262,30 @@ class StreamingFreqSketchSpec extends SparkTestBase {
     assert(tags.toSeq == Seq(4L, 5L, 6L, 7L), s"stored tags: ${tags.toSeq}")
     // in-retention window reads stay EXACT vs the one-shot sketch
     val probes = (0 until 8).map(i => s"w$i").toDF("word")
-    val got = acc.estimateWindow(probes, "word", 8L, 6L)
+    val got = acc.sketch.estimate(acc.read(8L, Some(6L)), probes, "word")
       .as[(String, Long)].collect().toMap
     assert(got("w6") == 7L && got("w7") == 8L && got("w3") == 0L)
     // reads reaching evicted batches fail loud: windowed below the
     // horizon, cumulative (fromBatch 0), and default-fromBatch decayed
     Seq(
-      () => acc.estimateWindow(probes, "word", 8L, 3L),
-      () => acc.estimate(probes, "word", 8L),
-      () => acc.estimateDecayed(probes, "word", 8L, 1)
+      () => acc.sketch.estimate(acc.read(8L, Some(3L)), probes, "word"),
+      () => acc.sketch.estimate(acc.read(8L), probes, "word"),
+      () => acc.sketch.estimate(acc.read(8L, halfLifeBatches = Some(1)),
+        probes, "word")
     ).foreach { read =>
       val e = intercept[IllegalArgumentException](read())
       assert(e.getMessage.contains("evicted by retention"),
         e.getMessage)
     }
     // decayed read WITH an explicit in-retention fromBatch works
-    val d = acc.estimateDecayed(probes, "word", 8L, 1, fromBatch = 6L)
+    val d = acc.sketch.estimate(acc.read(8L, Some(6L), Some(1)), probes,
+        "word")
       .as[(String, Long)].collect().toMap
     assert(d("w6") == 7L && d("w7") == 16L, s"decayed: $d") // 7·1, 8·2
     // a retention store must be windowed; keepBatches >= 0
     intercept[IllegalArgumentException] {
-      new StreamingFreqSketch.SketchAccumulator(spark, tmpStore(),
-        "word", width = 128, keepBatches = 2)
+      new CellSketchMaintainer(spark, tmpStore(),
+        CellSketch.Cms("word", width = 128), keepBatches = 2)
     }
   }
 
@@ -281,9 +293,9 @@ class StreamingFreqSketchSpec extends SparkTestBase {
       "independently — a group alive only in expired batches vanishes " +
       "from the store, live groups keep exact window reads") {
     val store = tmpStore()
-    val acc = new StreamingFreqSketch.SketchAccumulator(spark, store,
-      "word", width = 128, compactEvery = 2, groupCol = Some("g"),
-      windowed = true, keepBatches = 2)
+    val acc = new CellSketchMaintainer(spark, store,
+      CellSketch.Cms("word", width = 128), compactEvery = 2,
+      groupCol = Some("g"), windowed = true, keepBatches = 2)
     // group "old" appears ONLY in batches 0-1; "live" in every batch
     (0 until 8).foreach { i =>
       val rows = Seq.fill(i + 1)(("live", s"w$i")) ++
@@ -310,14 +322,15 @@ class StreamingFreqSketchSpec extends SparkTestBase {
     // live group's in-retention window reads stay exact
     val probes = (0 until 8).flatMap(i =>
       Seq(("live", s"w$i"), ("old", s"w$i"))).toDF("pg", "pw")
-    val got = acc.estimateWindowBy(probes, "pg", "pw", 8L, 6L)
+    val got = acc.sketch.estimate(acc.read(8L, Some(6L)), probes, "pw",
+        Some("pg"))
       .as[(String, String, Long)].collect()
       .map { case (g, w, e) => (g, w) -> e }.toMap
     assert(got(("live", "w6")) == 7L && got(("live", "w7")) == 8L)
     assert(got(("live", "w0")) == 0L && got(("old", "w0")) == 0L)
     // reads reaching evicted batches still fail loud on the grouped path
     val e = intercept[IllegalArgumentException] {
-      acc.estimateWindowBy(probes, "pg", "pw", 8L, 3L)
+      acc.sketch.estimate(acc.read(8L, Some(3L)), probes, "pw", Some("pg"))
     }
     assert(e.getMessage.contains("evicted by retention"), e.getMessage)
   }
@@ -325,16 +338,16 @@ class StreamingFreqSketchSpec extends SparkTestBase {
   test("live stream: estimates accumulate across micro-batches") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[String]
-    val (query, acc) = StreamingFreqSketch.start(
-      mem.toDF().select(col("value").as("word")), tmpStore(), "word",
-      width = 128)
+    val (query, acc) = CellSketchMaintainer.start(
+      mem.toDF().select(col("value").as("word")), tmpStore(),
+      CellSketch.Cms("word", width = 128))
     try {
       mem.addData("a", "b", "a")
       query.processAllAvailable()
       mem.addData("a")
       query.processAllAvailable()
-      val est = acc.estimate(Seq("a", "b").toDF("word"), "word",
-          uptoBatch = Long.MaxValue)
+      val est = acc.sketch.estimate(acc.read(uptoBatch = Long.MaxValue),
+          Seq("a", "b").toDF("word"), "word")
         .as[(String, Long)].collect().toMap
       assert(est == Map("a" -> 3L, "b" -> 1L))
     } finally query.stop()

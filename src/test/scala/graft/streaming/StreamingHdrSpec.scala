@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import graft.SparkTestBase
 import graft.ext.FreqSketch
 
@@ -9,7 +7,7 @@ class StreamingHdrSpec extends SparkTestBase {
   import spark.implicits._
 
   private def tmp(tag: String): String =
-    Files.createTempDirectory(s"graft-shdr-$tag").toString + "/store"
+    tempDir(s"graft-shdr-$tag").toString + "/store"
 
   // three batches shifting the distribution upward so running
   // quantiles must move
@@ -18,21 +16,22 @@ class StreamingHdrSpec extends SparkTestBase {
   private val b2 = (0 until 1000).map(i => 10000L + i % 50000)
 
   test("accumulated histogram equals the one-shot histogram") {
-    val acc = new StreamingHdr.HdrAccumulator(spark, tmp("merge"), "v",
-      subBits = 5, compactEvery = 2)
+    val acc = new CellSketchMaintainer(spark, tmp("merge"),
+      CellSketch.Hdr("v", subBits = 5), compactEvery = 2)
     Seq(b0, b1, b2).zipWithIndex.foreach { case (b, i) =>
       acc.update(b.toDF("v"), i.toLong)
     }
-    val got = acc.histogram(3L).as[(Long, Long)].collect().toSet
+    val got = acc.read(3L).as[(Long, Long)].collect().toSet
     val want = FreqSketch.hdrHistogram((b0 ++ b1 ++ b2).toDF("v"), "v",
       subBits = 5).as[(Long, Long)].collect().toSet
     assert(got == want)
   }
 
   test("byBatch running quantiles: true quantile inside [lo, hi], moving up") {
-    val rows = StreamingHdr.byBatch(spark,
+    val rows = CellSketchMaintainer.replay(spark,
         Seq(b0.toDF("v"), b1.toDF("v"), b2.toDF("v")),
-        tmp("run"), "v", Seq(0.5, 0.99), subBits = 5)
+        tmp("run"), CellSketch.Hdr("v", subBits = 5))
+      .states((m, u) => m.sketch.quantiles(m.read(u), Seq(0.5, 0.99)))
       .orderBy("batch_id", "q")
       .as[(Long, Double, Long, Long, Long, Long)].collect()
     assert(rows.length == 6)
@@ -55,19 +54,19 @@ class StreamingHdrSpec extends SparkTestBase {
     def gb(b: Seq[Long]) = b.zipWithIndex
       .map { case (v, i) => (if (i % 2 == 0) "ep:a" else "ep:b", v + (i % 2) * 1000L) }
       .toDF("g", "v")
-    val acc = new StreamingHdr.HdrAccumulator(spark, tmp("grp"), "v",
-      subBits = 5, compactEvery = 2, groupCol = Some("g"))
+    val acc = new CellSketchMaintainer(spark, tmp("grp"),
+      CellSketch.Hdr("v", subBits = 5), compactEvery = 2, groupCol = Some("g"))
     Seq(b0, b1, b2).zipWithIndex.foreach { case (b, i) =>
       acc.update(gb(b), i.toLong)
     }
-    val got = acc.histogramBy(3L).as[(String, Long, Long)].collect().toSet
+    val got = acc.read(3L).as[(String, Long, Long)].collect().toSet
     val all = gb(b0).unionByName(gb(b1)).unionByName(gb(b2))
     val want = FreqSketch.hdrHistogramBy(all, "g", "v", subBits = 5)
       .as[(String, Long, Long)].collect().toSet
     assert(got == want && got.map(_._1) == Set("ep:a", "ep:b"))
     // per-group quantile picks bound each group's true quantile
     val qs = Seq(0.5, 0.99)
-    val picks = acc.quantilesBy(qs, 3L)
+    val picks = acc.sketch.quantiles(acc.read(3L), qs)
       .select("grp", "q", "lo", "hi")
       .as[(String, Double, Long, Long)].collect()
     assert(picks.length == 4, "2 groups x 2 quantiles")
@@ -78,18 +77,13 @@ class StreamingHdrSpec extends SparkTestBase {
       val t = vs(math.max(0, math.ceil(q * vs.size).toInt - 1))
       assert(lo <= t && t <= hi, s"$g q$q: true $t outside [$lo, $hi]")
     }
-    // mode guards
-    intercept[IllegalArgumentException] { acc.histogram(3L) }
-    val plain = new StreamingHdr.HdrAccumulator(spark, tmp("plain"), "v")
-    plain.update(b0.toDF("v"), 0L)
-    intercept[IllegalArgumentException] { plain.histogramBy(1L) }
   }
   test("windowed reads expire old batches; decay weights the multiset; " +
       "guards hold") {
-    val rows = StreamingHdr.byBatchWindow(spark,
+    val rows = CellSketchMaintainer.replay(spark,
         Seq(b0.toDF("v"), b1.toDF("v"), b2.toDF("v")),
-        tmp("win"), "v", Seq(0.5, 0.99), window = 2, subBits = 5,
-        decayHalfLife = Some(1))
+        tmp("win"), CellSketch.Hdr("v", subBits = 5), windowed = true)
+      .windows(2, decayHalfLife = Some(1))(_.quantiles(_, Seq(0.5, 0.99)))
       .orderBy("batch_id", "kind", "q")
       .as[(Long, String, Double, Long, Long, Long, Long)].collect()
     // window states: [b0], [b0,b1], [b1,b2] — rank/bounds answer the
@@ -127,17 +121,19 @@ class StreamingHdrSpec extends SparkTestBase {
       "decay must shift p50 toward recent batches")
     // guards: windowed reads on a plain store are refused, decay span
     // capped
-    val plain = new StreamingHdr.HdrAccumulator(spark, tmp("plain"), "v")
+    val plain = new CellSketchMaintainer(spark, tmp("plain"),
+      CellSketch.Hdr("v"))
     plain.update(b0.toDF("v"), 0L)
     val e = intercept[IllegalArgumentException] {
-      plain.quantilesWindow(Seq(0.5), 1L, 0L)
+      plain.sketch.quantiles(plain.read(1L, Some(0L)), Seq(0.5))
     }
     assert(e.getMessage.contains("windowed store"))
-    val acc = new StreamingHdr.HdrAccumulator(spark, tmp("cap"), "v",
-      windowed = true)
+    val acc = new CellSketchMaintainer(spark, tmp("cap"),
+      CellSketch.Hdr("v"), windowed = true)
     acc.update(b0.toDF("v"), 0L)
     val e2 = intercept[IllegalArgumentException] {
-      acc.quantilesDecayed(Seq(0.5), 100L, 1)
+      acc.sketch.quantiles(acc.read(100L, halfLifeBatches = Some(1)),
+        Seq(0.5))
     }
     assert(e2.getMessage.contains("decay span"))
   }
@@ -150,8 +146,9 @@ class StreamingHdrSpec extends SparkTestBase {
     // plans still referenced and the final union failed at execution
     val batches = (0 until 10)
       .map(i => (0 until 100).map(j => i * 100L + j).toDF("v"))
-    val running = StreamingHdr.byBatch(spark, batches, tmp("long"), "v",
-        Seq(0.5), subBits = 5)
+    val running = CellSketchMaintainer.replay(spark, batches, tmp("long"),
+        CellSketch.Hdr("v", subBits = 5))
+      .states((m, u) => m.sketch.quantiles(m.read(u), Seq(0.5)))
       .as[(Long, Double, Long, Long, Long, Long)].collect()
     assert(running.length == 10)
     running.foreach { case (bid, q, rank, _, lo, hi) =>
@@ -162,8 +159,9 @@ class StreamingHdrSpec extends SparkTestBase {
       assert(truth >= lo && truth <= hi,
         s"batch $bid: true $truth outside [$lo, $hi]")
     }
-    val windowed = StreamingHdr.byBatchWindow(spark, batches,
-        tmp("longwin"), "v", Seq(0.5), window = 2, subBits = 5)
+    val windowed = CellSketchMaintainer.replay(spark, batches,
+        tmp("longwin"), CellSketch.Hdr("v", subBits = 5), windowed = true)
+      .windows(2)(_.quantiles(_, Seq(0.5)))
       .as[(Long, String, Double, Long, Long, Long, Long)].collect()
     assert(windowed.length == 10)
     windowed.foreach { case (bid, _, q, rank, _, lo, hi) =>
@@ -184,10 +182,11 @@ class StreamingHdrSpec extends SparkTestBase {
       if (i % 2 == 0) ("lo", v) else ("hi", v + 1000000L)
     }
     val batches = Seq(gb(b0), gb(b1), gb(b2))
-    val rows = StreamingHdr.byBatchWindowBy(spark,
-        batches.map(_.toDF("g", "v")), tmp("gwin"), "g", "v",
-        Seq(0.5, 0.99), window = 2, subBits = 5,
-        decayHalfLife = Some(1))
+    val rows = CellSketchMaintainer.replay(spark,
+        batches.map(_.toDF("g", "v")), tmp("gwin"),
+        CellSketch.Hdr("v", subBits = 5), groupCol = Some("g"),
+        windowed = true)
+      .windows(2, decayHalfLife = Some(1))(_.quantiles(_, Seq(0.5, 0.99)))
       .as[(Long, String, String, Double, Long, Long, Long, Long)]
       .collect()
     val windows = Seq(batches(0), batches(0) ++ batches(1),
@@ -224,8 +223,8 @@ class StreamingHdrSpec extends SparkTestBase {
       "live groups keep exact window picks") {
     import org.apache.spark.sql.functions._
     val store = tmp("gkeep")
-    val acc = new StreamingHdr.HdrAccumulator(spark, store, "v",
-      subBits = 5, compactEvery = 2, groupCol = Some("g"),
+    val acc = new CellSketchMaintainer(spark, store,
+      CellSketch.Hdr("v", subBits = 5), compactEvery = 2, groupCol = Some("g"),
       windowed = true, keepBatches = 2)
     // group "old" records values ONLY in batches 0-1; "live" in all
     (0 until 8).foreach { i =>
@@ -250,7 +249,7 @@ class StreamingHdrSpec extends SparkTestBase {
         s"${cells.map(_._2).distinct.toSeq}")
     // the live group's in-retention window pick answers its own multiset
     // {700, 700, 800, 800}: q=0.5 → rank 2 → true value 700
-    val picks = acc.quantilesWindowBy(Seq(0.5), 8L, 6L)
+    val picks = acc.sketch.quantiles(acc.read(8L, Some(6L)), Seq(0.5))
       .select("grp", "q", "lo", "hi")
       .as[(String, Double, Long, Long)].collect()
     assert(picks.map(_._1).toSeq == Seq("live"),
@@ -260,7 +259,7 @@ class StreamingHdrSpec extends SparkTestBase {
     }
     // grouped reads below the horizon fail loud
     val e = intercept[IllegalArgumentException] {
-      acc.quantilesWindowBy(Seq(0.5), 8L, 3L)
+      acc.sketch.quantiles(acc.read(8L, Some(3L)), Seq(0.5))
     }
     assert(e.getMessage.contains("evicted by retention"), e.getMessage)
   }
@@ -269,8 +268,9 @@ class StreamingHdrSpec extends SparkTestBase {
       "bounded, reads into the evicted range fail loud") {
     import org.apache.spark.sql.functions.{col, substring_index}
     val store = tmp("retain")
-    val acc = new StreamingHdr.HdrAccumulator(spark, store, "v",
-      subBits = 5, compactEvery = 2, windowed = true, keepBatches = 2)
+    val acc = new CellSketchMaintainer(spark, store,
+      CellSketch.Hdr("v", subBits = 5), compactEvery = 2, windowed = true,
+      keepBatches = 2)
     // 8 batches, batch i holding 100 values around i·1000
     (0 until 8).foreach { i =>
       acc.update((0 until 100).map(j => i * 1000L + j).toDF("v"), i.toLong)
@@ -285,7 +285,7 @@ class StreamingHdrSpec extends SparkTestBase {
     // the in-retention window read answers exactly its own multiset
     val w = (6 * 1000 until 6 * 1000 + 100).map(_.toLong) ++
       (7 * 1000 until 7 * 1000 + 100).map(_.toLong)
-    acc.quantilesWindow(Seq(0.5, 0.99), 8L, 6L)
+    acc.sketch.quantiles(acc.read(8L, Some(6L)), Seq(0.5, 0.99))
       .select("q", "rank", "lo", "hi")
       .as[(Double, Long, Long, Long)].collect()
       .foreach { case (q, rank, lo, hi) =>
@@ -297,16 +297,17 @@ class StreamingHdrSpec extends SparkTestBase {
       }
     // evicted-range reads fail loud: windowed, cumulative, decayed
     Seq(
-      () => acc.quantilesWindow(Seq(0.5), 8L, 3L),
-      () => acc.quantiles(Seq(0.5), 8L),
-      () => acc.quantilesDecayed(Seq(0.5), 8L, 1)
+      () => acc.sketch.quantiles(acc.read(8L, Some(3L)), Seq(0.5)),
+      () => acc.sketch.quantiles(acc.read(8L), Seq(0.5)),
+      () => acc.sketch.quantiles(acc.read(8L, halfLifeBatches = Some(1)),
+        Seq(0.5))
     ).foreach { read =>
       val e = intercept[IllegalArgumentException](read())
       assert(e.getMessage.contains("evicted by retention"), e.getMessage)
     }
     // explicit in-retention decayed read works: multiset 2·b7 + 1·b6
     val decayed = (w.take(100) ++ w.drop(100) ++ w.drop(100)).sorted
-    acc.quantilesDecayed(Seq(0.5), 8L, 1, fromBatch = 6L)
+    acc.sketch.quantiles(acc.read(8L, Some(6L), Some(1)), Seq(0.5))
       .select("q", "rank", "lo", "hi")
       .as[(Double, Long, Long, Long)].collect()
       .foreach { case (q, rank, lo, hi) =>
@@ -317,7 +318,7 @@ class StreamingHdrSpec extends SparkTestBase {
       }
     // retention requires a windowed store
     intercept[IllegalArgumentException] {
-      new StreamingHdr.HdrAccumulator(spark, tmp("bad"), "v",
+      new CellSketchMaintainer(spark, tmp("bad"), CellSketch.Hdr("v"),
         keepBatches = 2)
     }
   }
@@ -325,17 +326,18 @@ class StreamingHdrSpec extends SparkTestBase {
   test("batch-id regression fails fast instead of losing a delta") {
     // counts are SUM-merged: a restarted-from-0 stream would OVERWRITE
     // the real batch-0 delta (losing its counts) and double-count later
-    val acc = new StreamingHdr.HdrAccumulator(spark, tmp("regress"), "v")
+    val acc = new CellSketchMaintainer(spark, tmp("regress"),
+      CellSketch.Hdr("v"))
     acc.update(b0.toDF("v"), 0L)
     acc.update(b1.toDF("v"), 1L)
-    val before = acc.histogram(2L).agg(
+    val before = acc.read(2L).agg(
       org.apache.spark.sql.functions.sum("cnt")).head().getLong(0)
     val err = intercept[IllegalArgumentException] {
       acc.update(b1.toDF("v"), 0L)
     }
     assert(err.getMessage.contains("checkpointLocation"),
       s"message must point at checkpoint/storePath reuse: ${err.getMessage}")
-    assert(acc.histogram(2L).agg(
+    assert(acc.read(2L).agg(
       org.apache.spark.sql.functions.sum("cnt")).head().getLong(0) == before)
   }
 }

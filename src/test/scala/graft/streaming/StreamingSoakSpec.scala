@@ -25,8 +25,7 @@ class StreamingSoakSpec extends SparkTestBase {
   import spark.implicits._
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-soak-$tag")
-      .toString + "/store"
+    tempDir(s"graft-soak-$tag").toString + "/store"
 
   private def line(day: Int, op: String, key: String, bytes: Long): String =
     s"own bkt [${f"$day%02d"}/Feb/2019:01:00:00 +0000] 10.0.0.1 " +
@@ -47,12 +46,12 @@ class StreamingSoakSpec extends SparkTestBase {
     val window = 4
     val cmsStore = tmp("cms")
     val hdrStore = tmp("hdr")
-    val cms = new StreamingFreqSketch.SketchAccumulator(spark, cmsStore,
-      "key", width = 64, compactEvery = 4, windowed = true,
+    val cms = new CellSketchMaintainer(spark, cmsStore,
+      CellSketch.Cms("key", width = 64), compactEvery = 4, windowed = true,
       keepBatches = 6)
-    val hdr = new StreamingHdr.HdrAccumulator(spark, hdrStore,
-      "bytes_sent", subBits = 4, compactEvery = 4, windowed = true,
-      keepBatches = 6)
+    val hdr = new CellSketchMaintainer(spark, hdrStore,
+      CellSketch.Hdr("bytes_sent", subBits = 4), compactEvery = 4,
+      windowed = true, keepBatches = 6)
     val mem = MemoryStream[String]
     val parsed = LogLineParser.parse(
       LogLineParser.dropBlankLines(mem.toDF().toDF("value")))
@@ -83,9 +82,9 @@ class StreamingSoakSpec extends SparkTestBase {
     assert(filesAtEnd <= filesAtHalf + 8,
       s"store files grew with stream length: $filesAtHalf -> $filesAtEnd")
     // PLANS: a window read's scan fan-in is bounded the same way
-    val cmsWindow = cms.estimateWindow(
-      (0 until nBatches).map(i => s"k$i").toDF("key"), "key",
-      nBatches.toLong, (nBatches - window).toLong)
+    val cmsWindow = cms.sketch.estimate(
+      cms.read(nBatches.toLong, Some((nBatches - window).toLong)),
+      (0 until nBatches).map(i => s"k$i").toDF("key"), "key")
     assert(cmsWindow.inputFiles.length <= 12,
       s"window-read plan fans into ${cmsWindow.inputFiles.length} files")
     // HORIZON READS: the last-4-batches window equals the one-shot
@@ -97,8 +96,9 @@ class StreamingSoakSpec extends SparkTestBase {
     }
     val hdrTruth = (nBatches - window until nBatches)
       .flatMap(i => Seq.fill(i % 5 + 1)(100L * (i + 1))).sorted
-    hdr.quantilesWindow(Seq(0.5, 0.99), nBatches.toLong,
-        (nBatches - window).toLong)
+    hdr.sketch.quantiles(
+        hdr.read(nBatches.toLong, Some((nBatches - window).toLong)),
+        Seq(0.5, 0.99))
       .select("q", "rank", "lo", "hi")
       .as[(Double, Long, Long, Long)].collect()
       .foreach { case (q, rank, lo, hi) =>
@@ -109,9 +109,10 @@ class StreamingSoakSpec extends SparkTestBase {
       }
     // reads past the horizon STILL fail loud at batch 50
     Seq(
-      () => cms.estimateWindow(Seq("k0").toDF("key"), "key",
-        nBatches.toLong, 0L),
-      () => hdr.quantilesWindow(Seq(0.5), nBatches.toLong, 0L)
+      () => cms.sketch.estimate(cms.read(nBatches.toLong, Some(0L)),
+        Seq("k0").toDF("key"), "key"),
+      () => hdr.sketch.quantiles(hdr.read(nBatches.toLong, Some(0L)),
+        Seq(0.5))
     ).foreach { read =>
       val e = intercept[IllegalArgumentException](read())
       assert(e.getMessage.contains("evicted by retention"), e.getMessage)
