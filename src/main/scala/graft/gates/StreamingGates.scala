@@ -449,7 +449,7 @@ private[graft] object StreamingGates extends GateFamily {
         ev.filter(col("b") === i).select("item"))
       val store = scratchDir("graft-q252") + "/hll"
       val est = streaming.CellSketchMaintainer.replay(s, batches, store,
-          streaming.CellSketch.Hll("item", p = 8), windowed = true)
+          streaming.CellSketch.Hll("item", p = 8))
         .states((m, u) => m.sketch.estimates(m.read(u),
           m.read(u, Some(math.max(0L, u - 2)))))
       val di = ev.select(col("b"), col("item")).distinct()
@@ -640,8 +640,7 @@ private[graft] object StreamingGates extends GateFamily {
         ev.filter(col("b") === i).select("t", "item"))
       val store = scratchDir("graft-q270") + "/hll"
       val est = streaming.CellSketchMaintainer.replay(s, batches, store,
-          streaming.CellSketch.Hll("item", p = 8), groupCol = Some("t"),
-          windowed = true)
+          streaming.CellSketch.Hll("item", p = 8), groupCol = Some("t"))
         .states((m, u) => m.sketch.estimates(m.read(u),
           m.read(u, Some(math.max(0L, u - 2)))))
       val di = ev.select(col("b"), col("t"), col("item")).distinct()

@@ -14,9 +14,12 @@ import graft.ext.{FreqSketch, SetSketch}
   * @param fields  the cell-key fields in key order, with their SQL types
   * @param counted whether cells carry a BIGINT `cnt` that sum-merges
   *                (otherwise the store keeps distinct cells)
+  * @param alwaysTagged whether every cell key leads with the batch tag
+  *                even when the maintainer is not `windowed`
   */
 abstract class CellSketch(val fields: Seq[(String, String)],
-                          val counted: Boolean) {
+                          val counted: Boolean,
+                          val alwaysTagged: Boolean = false) {
 
   /** One batch's own sketch: `grp` first when grouped, then `fields`,
     * then `cnt` when counted.
@@ -41,13 +44,13 @@ object CellSketch {
 
   /** Distinct counting: `(bucket, rho)` registers, max-folded per
     * bucket ([[FreqSketch.hllMergeBy]]). State is ≤ 2^p rows per batch
-    * (× groups). Max-merge is not invertible, so a sliding window needs
-    * a windowed maintainer: the batch tag is the only way a register
-    * table forgets.
+    * (× groups). Max-merge is not invertible, so the batch tag is the
+    * only way a register table forgets: HLL cells are always tagged,
+    * and every HLL maintainer serves window reads.
     */
   final case class Hll(itemCol: String, p: Int = 8)
       extends CellSketch(Seq("bucket" -> "INT", "rho" -> "INT"),
-        counted = false) {
+        counted = false, alwaysTagged = true) {
     require(p >= 4 && p <= 12, s"p must be in [4, 12], got $p")
 
     def summarize(batch: DataFrame, groupCol: Option[String]): DataFrame =

@@ -14,7 +14,8 @@ import org.apache.spark.sql.types.StructType
   * its own delta) and restart recovery (state lives on disk).
   *
   * Cell key: `[batch:]fields[:grp]`, joined by `:`.
-  *  - `windowed` leads with the batch id, zero-padded to 9 digits so
+  *  - `windowed` (always, for a sketch that is `alwaysTagged`) leads
+  *    with the batch id, zero-padded to 9 digits so
   *    string order follows numeric order: reads over `[fromBatch,
   *    uptoBatch)` fold only the batches in range, and decayed reads
   *    weight counts by age. Counters could subtract, but subtraction
@@ -38,13 +39,14 @@ final class CellSketchMaintainer[S <: CellSketch](
     groupCol: Option[String] = None, windowed: Boolean = false,
     keepBatches: Int = 0, compactEvery: Int = 8) {
   require(keepBatches >= 0, s"keepBatches must be >= 0, got $keepBatches")
-  require(keepBatches == 0 || windowed,
+  private val tagged = windowed || sketch.alwaysTagged
+  require(keepBatches == 0 || tagged,
     "keepBatches retention only applies to a windowed store (a " +
       "cumulative store folds every batch into one sketch — there is " +
       "nothing batch-tagged to expire)")
 
   private val keyParts =
-    (if (windowed) 1 else 0) + sketch.fields.size + groupCol.size
+    (if (tagged) 1 else 0) + sketch.fields.size + groupCol.size
   private val (keyCol, keyType) =
     if (keyParts == 1) sketch.fields.head else "cell" -> "STRING"
   private val countCol = if (sketch.counted) Some("cnt") else None
@@ -85,7 +87,7 @@ final class CellSketchMaintainer[S <: CellSketch](
     val key =
       if (keyParts == 1) col(keyCol)
       else concat_ws(":",
-        (if (windowed) Seq(tag(lit(batchId))) else Nil) ++
+        (if (tagged) Seq(tag(lit(batchId))) else Nil) ++
           sketch.fields.map(f => col(f._1)) ++
           groupCol.map(_ => col("grp")): _*).as("cell")
     store.append(cells.select(key +: countCol.map(col).toSeq: _*), batchId)
@@ -102,7 +104,7 @@ final class CellSketchMaintainer[S <: CellSketch](
     */
   def read(uptoBatch: Long, fromBatch: Option[Long] = None,
            halfLifeBatches: Option[Int] = None): DataFrame = {
-    require(windowed || (fromBatch.isEmpty && halfLifeBatches.isEmpty),
+    require(tagged || (fromBatch.isEmpty && halfLifeBatches.isEmpty),
       "windowed/decayed reads need a windowed store " +
         "(CellSketchMaintainer(windowed = true))")
     val from = fromBatch.getOrElse(0L)
@@ -134,7 +136,7 @@ final class CellSketchMaintainer[S <: CellSketch](
           if (from == 0L) stored else stored.filter(cellTag >= tag(lit(from)))
         val weighted = weight.fold(ranged)(f =>
           ranged.withColumn("cnt", col("cnt") * f(cellTag.cast("long"))))
-        val first = if (windowed) 1 else 0
+        val first = if (tagged) 1 else 0
         weighted.select(
           groupCol.map(_ => element_at(split(col("cell"), ":", keyParts),
             keyParts).as("grp")).toSeq ++
@@ -167,25 +169,21 @@ final class CellSketchMaintainer[S <: CellSketch](
   /** foreachBatch adapter. */
   def asForeachBatch: (DataFrame, Long) => Unit =
     (batch, id) => update(batch, id)
+
+  /** Attach this maintainer to a stream; `read` between or after
+    * batches.
+    */
+  def start(stream: DataFrame, queryName: String = "graft-stream-sketch",
+            checkpoint: Option[String] = None): StreamingQuery = {
+    val writer = stream.writeStream
+      .queryName(queryName)
+      .foreachBatch(asForeachBatch)
+    checkpoint.foreach(writer.option("checkpointLocation", _))
+    writer.start()
+  }
 }
 
 object CellSketchMaintainer {
-
-  /** Attach a maintainer to a stream; `read` between or after batches. */
-  def start[S <: CellSketch](
-      stream: DataFrame, storePath: String, sketch: S,
-      groupCol: Option[String] = None,
-      queryName: String = "graft-stream-sketch",
-      checkpoint: Option[String] = None)
-      : (StreamingQuery, CellSketchMaintainer[S]) = {
-    val m = new CellSketchMaintainer(stream.sparkSession, storePath,
-      sketch, groupCol)
-    val writer = stream.writeStream
-      .queryName(queryName)
-      .foreachBatch(m.asForeachBatch)
-    checkpoint.foreach(writer.option("checkpointLocation", _))
-    (writer.start(), m)
-  }
 
   /** Batch replay — the oracle-gateable twin of a stream: fold
     * `batches` in order (batch i under id i) into a fresh maintainer on

@@ -23,24 +23,13 @@ object StreamingBloom {
     */
   def byBatch(spark: SparkSession, batches: Seq[DataFrame],
               storePath: String, itemCol: String,
-              mBits: Int): DataFrame = {
-    require(batches.nonEmpty, "byBatch needs at least one batch")
-    val bloom = CellSketch.Bloom(itemCol, mBits)
-    val acc = new CellSketchMaintainer(spark, storePath, bloom)
-    val perBatch = batches.zipWithIndex.map { case (b, i) =>
-      val screened = bloom.contains(acc.read(i.toLong), b)
+              mBits: Int): DataFrame =
+    // a replay never folds, so read(u − 1) is the filter before batch
+    // u − 1: the screen never sees the batch it is screening
+    CellSketchMaintainer.replay(spark, batches, storePath,
+        CellSketch.Bloom(itemCol, mBits))
+      .states((m, u) => m.sketch.contains(m.read(u - 1),
+          batches((u - 1).toInt))
         .agg(count(lit(1)).as("n_items"),
-          sum(when(!col("maybe"), 1L).otherwise(0L)).as("n_novel"))
-        .select(lit(i.toLong).as("batch_id"), col("n_items"),
-          col("n_novel"))
-      // materialize the screen BEFORE folding the batch in — the
-      // accumulator must not see the batch it is screening
-      val rows = screened.collect()
-      acc.update(b, i.toLong)
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toIndexedSeq, 1),
-        screened.schema)
-    }
-    perBatch.reduce(_ unionByName _)
-  }
+          sum(when(!col("maybe"), 1L).otherwise(0L)).as("n_novel")))
 }

@@ -107,6 +107,20 @@ class StreamingFreqSketchSpec extends SparkTestBase {
     }
     // the ':'-bearing group value round-trips the cell key intact
     assert(streamed.keys.exists(_._1 == "a:grp"))
+    // a grouped read needs the probes' group column, a plain read
+    // refuses one
+    val grouped = new CellSketchMaintainer(spark, tmpStore(),
+      CellSketch.Cms("word", width = 256), groupCol = Some("g"))
+    grouped.update(batches.head, 0L)
+    intercept[IllegalArgumentException] {
+      grouped.sketch.estimate(grouped.read(1L), probes, "word")
+    }
+    val plain = new CellSketchMaintainer(spark, tmpStore(),
+      CellSketch.Cms("word", width = 256))
+    plain.update(batches.head.select("word"), 0L)
+    intercept[IllegalArgumentException] {
+      plain.sketch.estimate(plain.read(1L), probes, "word", Some("g"))
+    }
   }
 
   test("windowed store: window reads equal the one-shot sketch of the " +
@@ -338,9 +352,9 @@ class StreamingFreqSketchSpec extends SparkTestBase {
   test("live stream: estimates accumulate across micro-batches") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[String]
-    val (query, acc) = CellSketchMaintainer.start(
-      mem.toDF().select(col("value").as("word")), tmpStore(),
+    val acc = new CellSketchMaintainer(spark, tmpStore(),
       CellSketch.Cms("word", width = 128))
+    val query = acc.start(mem.toDF().select(col("value").as("word")))
     try {
       mem.addData("a", "b", "a")
       query.processAllAvailable()

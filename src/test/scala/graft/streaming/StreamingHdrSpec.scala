@@ -77,6 +77,12 @@ class StreamingHdrSpec extends SparkTestBase {
       val t = vs(math.max(0, math.ceil(q * vs.size).toInt - 1))
       assert(lo <= t && t <= hi, s"$g q$q: true $t outside [$lo, $hi]")
     }
+    // a read carries grp exactly when the maintainer is grouped
+    assert(acc.read(3L).columns.head == "grp")
+    val plain = new CellSketchMaintainer(spark, tmp("plain"),
+      CellSketch.Hdr("v"))
+    plain.update(b0.toDF("v"), 0L)
+    assert(!plain.read(1L).columns.contains("grp"))
   }
   test("windowed reads expire old batches; decay weights the multiset; " +
       "guards hold") {

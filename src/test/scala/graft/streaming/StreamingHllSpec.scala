@@ -15,7 +15,7 @@ class StreamingHllSpec extends SparkTestBase {
 
   test("cumulative registers equal the one-shot sketch of the concatenation") {
     val acc = new CellSketchMaintainer(spark, tmp("merge"),
-      CellSketch.Hll("it", p = 8), windowed = true, compactEvery = 2)
+      CellSketch.Hll("it", p = 8), compactEvery = 2)
     Seq(b0, b1, b2).zipWithIndex.foreach { case (b, i) =>
       acc.update(b.toDF("it"), i.toLong)
     }
@@ -27,7 +27,7 @@ class StreamingHllSpec extends SparkTestBase {
 
   test("windowed registers equal the one-shot sketch of the window") {
     val acc = new CellSketchMaintainer(spark, tmp("win"),
-      CellSketch.Hll("it", p = 8), windowed = true, compactEvery = 8)
+      CellSketch.Hll("it", p = 8), compactEvery = 8)
     Seq(b0, b1, b2).zipWithIndex.foreach { case (b, i) =>
       acc.update(b.toDF("it"), i.toLong)
     }
@@ -41,7 +41,7 @@ class StreamingHllSpec extends SparkTestBase {
   test("byBatch: cumulative grows, window expires, estimates track truth") {
     val rows = CellSketchMaintainer.replay(spark,
         Seq(b0.toDF("it"), b1.toDF("it"), b2.toDF("it")),
-        tmp("run"), CellSketch.Hll("it", p = 8), windowed = true)
+        tmp("run"), CellSketch.Hll("it", p = 8))
       .states((m, u) => m.sketch.estimates(m.read(u),
         m.read(u, Some(math.max(0L, u - 2)))))
       .orderBy("batch_id").as[(Long, Double, Double)].collect()
@@ -66,8 +66,7 @@ class StreamingHllSpec extends SparkTestBase {
       .map { case (it, i) => (if (i % 2 == 0) "g:a" else "g:b", it) }
       .toDF("g", "it")
     val acc = new CellSketchMaintainer(spark, tmp("grp"),
-      CellSketch.Hll("it", p = 8), compactEvery = 2, groupCol = Some("g"),
-      windowed = true)
+      CellSketch.Hll("it", p = 8), compactEvery = 2, groupCol = Some("g"))
     Seq(b0, b1, b2).zipWithIndex.foreach { case (b, i) =>
       acc.update(gb(b), i.toLong)
     }
@@ -92,14 +91,19 @@ class StreamingHllSpec extends SparkTestBase {
       assert(est(g) > truth(g) / 2.0 && est(g) < truth(g) * 2.0,
         s"$g: ${est(g)} vs ${truth(g)}")
     }
+    // a read carries grp exactly when the maintainer is grouped
+    assert(acc.read(3L).columns.head == "grp")
+    val plain = new CellSketchMaintainer(spark, tmp("plain"),
+      CellSketch.Hll("it"))
+    plain.update(b0.toDF("it"), 0L)
+    assert(!plain.read(1L).columns.contains("grp"))
   }
   test("keepBatches retention: folds evict expired registers, state stays " +
       "bounded, reads into the evicted range fail loud") {
     import org.apache.spark.sql.functions._
     val store = tmp("keep")
     val acc = new CellSketchMaintainer(spark, store,
-      CellSketch.Hll("it", p = 8), compactEvery = 2, windowed = true,
-      keepBatches = 2)
+      CellSketch.Hll("it", p = 8), compactEvery = 2, keepBatches = 2)
     // 8 batches of disjoint item ranges
     val batches = (0 until 8).map(i =>
       (i * 500 until (i + 1) * 500).map(n => s"k$n"))
@@ -134,7 +138,7 @@ class StreamingHllSpec extends SparkTestBase {
     // grouped retention stores guard their reads the same way
     val gacc = new CellSketchMaintainer(spark, tmp("keepg"),
       CellSketch.Hll("it", p = 8), compactEvery = 2, groupCol = Some("g"),
-      windowed = true, keepBatches = 2)
+      keepBatches = 2)
     batches.zipWithIndex.foreach { case (b, i) =>
       gacc.update(b.zipWithIndex.map { case (it, j) =>
         (if (j % 2 == 0) "a" else "b", it) }.toDF("g", "it"), i.toLong)
@@ -153,11 +157,11 @@ class StreamingHllSpec extends SparkTestBase {
     // accumulator's DEFAULT compactEvery=8, update 8 folded batches 0–7
     // and the final union of per-state lazy frames failed at execution
     // with FileNotFoundException; replays must pin compactEvery past
-    // the batch count (the StreamingFreqSketch.byBatchWindow discipline)
+    // the batch count (the replay driver's discipline)
     val batches = (0 until 10).map(i =>
       (i * 400 until (i + 1) * 400).map(n => s"k$n").toDF("it"))
     val rows = CellSketchMaintainer.replay(spark, batches, tmp("replay"),
-        CellSketch.Hll("it", p = 8), windowed = true)
+        CellSketch.Hll("it", p = 8))
       .states((m, u) => m.sketch.estimates(m.read(u),
         m.read(u, Some(math.max(0L, u - 3)))))
       .orderBy("batch_id").as[(Long, Double, Double)].collect()
@@ -171,8 +175,7 @@ class StreamingHllSpec extends SparkTestBase {
     val grows = CellSketchMaintainer.replay(spark,
         batches.map(_.withColumn("g",
           org.apache.spark.sql.functions.lit("g1"))),
-        tmp("replayg"), CellSketch.Hll("it", p = 8), groupCol = Some("g"),
-        windowed = true)
+        tmp("replayg"), CellSketch.Hll("it", p = 8), groupCol = Some("g"))
       .states((m, u) => m.sketch.estimates(m.read(u),
         m.read(u, Some(math.max(0L, u - 3)))))
       .orderBy("batch_id").as[(Long, String, Double, Double)].collect()
@@ -185,7 +188,7 @@ class StreamingHllSpec extends SparkTestBase {
     // WITHOUT its checkpoint re-numbers from 0 and would interleave new
     // registers under old ids, corrupting [from, upto) windowed reads
     val acc = new CellSketchMaintainer(spark, tmp("regress"),
-      CellSketch.Hll("it", p = 8), windowed = true, compactEvery = 8)
+      CellSketch.Hll("it", p = 8), compactEvery = 8)
     acc.update(b0.toDF("it"), 0L)
     acc.update(b1.toDF("it"), 1L)
     val err = intercept[IllegalArgumentException] {
