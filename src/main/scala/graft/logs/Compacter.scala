@@ -3,9 +3,11 @@ package graft.logs
 import java.time.LocalDate
 
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation,
-  InMemoryFileIndex, PartitionSpec}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.{FilePartition, FileScanRDD, PartitionedFile}
+import org.apache.spark.sql.graft.RowFrames
 import org.apache.spark.sql.types.StructType
 
 import graft.sources.AccessLogDataSource
@@ -25,12 +27,17 @@ import graft.sources.AccessLogDataSource
   *    the reference keeps Spark's 1 MiB page: parquet-mr then drops a
   *    high-cardinality column's dictionary after its first page, not at
   *    file close after hashing every value ([[DayWriter]]);
-  *  - ingest parallelism comes from Spark's file splitting and packing
-  *    (`spark.sql.files.maxPartitionBytes`) instead of
-  *    `parallelize(paths, 100)` (reference `:214`).
+  *  - no exchange: the scan cuts the listed objects into one byte range per
+  *    output file ([[readListed]]), so one stage reads, parses, sorts and
+  *    writes each file, where the reference parallelizes paths 100 ways
+  *    (`:214`) and then shuffles every row with `repartition(numOutputFiles)`
+  *    to pick its file. Parse parallelism is thus the day's file count, as
+  *    the reference's write stage already was. A compressed object cannot
+  *    be split, so it is read whole by one range, and a day of them writes
+  *    at most one file per object.
   *
   * Behavior preserved:
-  *  - `repartition(numOutputFiles)` then `sortWithinPartitions(request_time)`
+  *  - numOutputFiles files per day, each `sortWithinPartitions(request_time)`
   *    — partition-LOCAL sort so Parquet row groups are time-clustered without
   *    a global range exchange (the reference's "Hotfix" comment, `:253-258`);
   *  - snappy Parquet, TIMESTAMP_MILLIS, `dt=` encoded in the destination
@@ -142,27 +149,60 @@ object Compacter {
   def destinationFor(cfg: Config, dt: String): String =
     s"${cfg.destRoot}/${cfg.sourceBucket}/dt=$dt"
 
-  /** Read + parse exactly the listed raw log objects (no write). The scan
-    * is an `accesslog` `HadoopFsRelation` over an `InMemoryFileIndex` whose
-    * status cache returns the listed statuses, so Spark runs no existence
-    * check and no leaf-file listing job (bare paths would be statted
-    * again). Assumes S3 access-log objects are immutable once delivered, so
-    * a listed length is final; an object gone since listing fails the scan
-    * loudly (`ignoreMissingFiles` stays off) rather than dropping its rows.
+  /** Read + parse exactly the listed raw log objects (no write), as
+    * `numSplits` partitions of about equal raw bytes ([[splits]]). Each
+    * partition is read by the `accesslog` reader on a `FileScanRDD`, so
+    * Spark runs no existence check, no leaf-file listing job and no split
+    * packing of its own. Assumes S3 access-log objects are immutable once
+    * delivered, so a listed length is final; an object gone since listing
+    * fails the scan loudly (`ignoreMissingFiles` stays off) rather than
+    * dropping its rows.
     */
-  def readListed(spark: SparkSession, listed: Seq[FileStatus]): DataFrame = {
-    val byPath = listed.map(st => st.getPath -> Array(st)).toMap
-    val listedOnly = new FileStatusCache {
-      override def getLeafFiles(path: Path): Option[Array[FileStatus]] = byPath.get(path)
-      override def putLeafFiles(path: Path, leafFiles: Array[FileStatus]): Unit = ()
-      override def invalidateAll(): Unit = ()
+  def readListed(spark: SparkSession, listed: Seq[FileStatus], numSplits: Int): DataFrame = {
+    val format = new AccessLogDataSource
+    val schema = AccessLogSchema.schema
+    val read = format.buildReader(spark, schema, new StructType(), schema, Nil, Map.empty,
+      spark.sessionState.newHadoopConf())
+    val parts = splits(listed, numSplits, format.isSplitable(spark, Map.empty, _))
+    RowFrames.ofRows(spark, new FileScanRDD(spark, read, parts, schema), schema)
+  }
+
+  /** The listed objects in name order, cut into `n` contiguous byte ranges
+    * whose sizes differ by at most one byte. A range owns the lines that
+    * start inside it: Spark's line reader drops a split's partial first
+    * line and finishes its last one, so each cut inside an object is handed
+    * to it one byte early, on the newline that ends the line before. An
+    * object that cannot be split (compressed) goes whole into the range
+    * where it starts, and a range can then hold no object.
+    */
+  private[logs] def splits(listed: Seq[FileStatus], n: Int,
+                           splittable: Path => Boolean): Seq[FilePartition] = {
+    require(n > 0, s"need at least one split, got $n")
+    val total = listed.map(_.getLen).sum
+    // cut(i) = floor(i * total / n), without overflowing a Long
+    val cut = (0 to n).map(i => total / n * i + total % n * i / n)
+    val parts = Array.fill(n)(Array.newBuilder[PartitionedFile])
+    var at = 0L
+    var i = 0
+    listed.sortBy(_.getPath.toString).filter(_.getLen > 0).foreach { st =>
+      val len = st.getLen
+      def range(start: Long, end: Long) = PartitionedFile(InternalRow.empty,
+        SparkPath.fromPath(st.getPath), start, end - start, Array.empty[String],
+        st.getModificationTime, len)
+      while (cut(i + 1) <= at) i += 1
+      if (!splittable(st.getPath)) parts(i) += range(0, len)
+      else {
+        var j = i
+        while (j < n && cut(j) < at + len) {
+          val start = math.max(cut(j) - at - 1, 0L)
+          val end = if (cut(j + 1) >= at + len) len else cut(j + 1) - at - 1
+          if (end > start) parts(j) += range(start, end)
+          j += 1
+        }
+      }
+      at += len
     }
-    val index = new InMemoryFileIndex(spark, listed.map(_.getPath), Map.empty, None,
-      listedOnly, Some(PartitionSpec.emptySpec))
-    val logs = HadoopFsRelation(index, partitionSchema = new StructType(),
-      dataSchema = AccessLogSchema.schema, bucketSpec = None,
-      fileFormat = new AccessLogDataSource, options = Map.empty)(spark)
-    spark.baseRelationToDataFrame(logs)
+    parts.indices.map(p => FilePartition(p, parts(p).result()))
   }
 
   /** Per-day compaction outcome: where it wrote and what it saw. The
@@ -197,10 +237,9 @@ object Compacter {
     val bytesIn = listed.map(_.getLen).sum
     val numFiles = outputFilesFor(cfg, bytesIn)
     configure(spark)
-    val parsed = readListed(spark, listed)
+    val parsed = readListed(spark, listed, numFiles)
     val files = if (cfg.zorderBy.isEmpty) {
-      DayWriter.write(parsed.repartition(numFiles).sortWithinPartitions("request_time"),
-        dest, cfg.compression)
+      DayWriter.write(parsed.sortWithinPartitions("request_time"), dest, cfg.compression)
     } else {
       // the zorder path needs boundary/sampling passes BEFORE the write
       // (quantile collect + range-partitioner sketch) — cache the parsed

@@ -29,20 +29,21 @@ import graft.logs.AccessLogSchema
   * yields the canonical 19-column frame of `AccessLogSchema` straight from
   * the raw log text — the reference's read-then-parse two-step
   * (`scripts/oss_s3_server_side_logging_compacter.py:154-171,214-218`) as
-  * ONE scan node. The compacter reads its listed day through it too
-  * ([[graft.logs.Compacter.readListed]]), so batch reads, the compacter and
-  * the stream share one raw-log scan.
+  * ONE scan node. The compacter reads its listed day through the same
+  * reader ([[graft.logs.Compacter.readListed]], which cuts the day into its
+  * own byte ranges, one per output file), so batch reads, the compacter and
+  * the stream share one raw-log parse.
   *
-  * Spark's file source does everything around the parse: listing (hidden
-  * `_`/`.` paths skipped), packing files into splits
-  * (`spark.sql.files.maxPartitionBytes` and `openCostInBytes`), splitting
-  * uncompressed files at line boundaries, decompression, the stream's
-  * seen-file log, and evaluating every pushed filter above the scan. The
-  * format adds the parse: blank lines are dropped (the reference strips and
-  * skips empties, `:165-167`), every other line goes once through
-  * [[AccessLogKernel.parse]] in the session time zone — the kernel under
-  * [[graft.logs.LogLineParser.parse]], so both paths give identical rows —
-  * and the scan emits only the required columns: `select(operation)`
+  * For `load` and the stream, Spark's file source does everything around
+  * the parse: listing (hidden `_`/`.` paths skipped), packing files into
+  * splits (`spark.sql.files.maxPartitionBytes` and `openCostInBytes`),
+  * splitting uncompressed files at line boundaries, decompression, the
+  * stream's seen-file log, and evaluating every pushed filter above the
+  * scan. The format adds the parse: blank lines are dropped (the reference
+  * strips and skips empties, `:165-167`), every other line goes once
+  * through [[AccessLogKernel.parse]] in the session time zone — the kernel
+  * under [[graft.logs.LogLineParser.parse]], so both paths give identical
+  * rows — and the scan emits only the required columns: `select(operation)`
   * carries one field per row, a pure count none.
   *
   * The schema is fixed: the reader maps columns by their `AccessLogSchema`
@@ -64,7 +65,11 @@ final class AccessLogDataSource extends TextBasedFileFormat with DataSourceRegis
       dataSchema: StructType): OutputWriterFactory =
     throw new UnsupportedOperationException("the accesslog format is read-only")
 
-  override protected def buildReader(spark: SparkSession, dataSchema: StructType,
+  /** Public, where Spark's is protected: the compacter reads its own byte
+    * ranges through it. Each row is a view of the parsed line, which the
+    * scan above copies once.
+    */
+  override def buildReader(spark: SparkSession, dataSchema: StructType,
       partitionSchema: StructType, requiredSchema: StructType, filters: Seq[Filter],
       options: Map[String, String], hadoopConf: Configuration)
       : PartitionedFile => Iterator[InternalRow] = {

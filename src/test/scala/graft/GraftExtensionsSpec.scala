@@ -189,15 +189,15 @@ class GraftExtensionsSpec extends AnyFunSuite
     val dir = new org.apache.hadoop.fs.Path(lineFile(lines))
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val listed = fs.listStatus(dir).toSeq.filter(_.getPath.getName.endsWith(".txt"))
-    val df = graft.logs.Compacter.readListed(spark, listed)
-      .repartition(3).sortWithinPartitions("request_time")
+    val df = graft.logs.Compacter.readListed(spark, listed, 3)
+      .sortWithinPartitions("request_time")
     assert(df.queryExecution.toRdd.count() == 200)
     // the accesslog reader parses each non-blank line as it emits it: no
     // parse projection runs above the scan
     val plan = df.queryExecution.executedPlan
     assert(!plan.toString.contains("parse_access_log"), plan.toString)
     val scanned = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
-      .collect(plan) { case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+      .collect(plan) { case s: org.apache.spark.sql.execution.RDDScanExec =>
         s.metrics("numOutputRows").value }
     assert(scanned == Seq(200L), s"scan rows $scanned for 200 non-blank lines:\n$plan")
   }

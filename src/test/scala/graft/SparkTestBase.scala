@@ -56,6 +56,9 @@ object SparkTestBase {
   // One session for the whole forked test JVM — suite-per-session churn
   // dominates test wall-clock otherwise.
   lazy val session: SparkSession = {
+    // the session lives as long as the JVM, and so does its warehouse
+    val warehouse = java.nio.file.Files.createTempDirectory("graft-wh").toFile
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(warehouse))
     val s = SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")
@@ -63,8 +66,7 @@ object SparkTestBase {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
+      .config("spark.sql.warehouse.dir", warehouse.toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

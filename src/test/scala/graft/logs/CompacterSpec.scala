@@ -4,7 +4,11 @@ import java.nio.file.{Files, Path}
 
 import graft.SparkTestBase
 import graft.analysis.DaysApart
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.sql.execution.{RDDScanExec, SparkPlanInfo}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.FilePartition
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 
 /** End-to-end golden test (SURVEY.md §5.3): raw log dir → compact →
@@ -326,14 +330,124 @@ class CompacterSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       (0 until 12).map(i => logLine(3, i, s"logs/svc/2019/01/01/p$i.gz")), 4)
     val listed = LogFileLister.listDayStatuses(tmp.toString, "bucket1", dt)
     assert(listed.size == 4)
-    assert(Compacter.readListed(spark, listed).count() == 12)
+    assert(Compacter.readListed(spark, listed, 2).count() == 12)
     val gone = listed(1).getPath
     Files.delete(java.nio.file.Paths.get(gone.toUri))
-    val e = intercept[Exception](Compacter.readListed(spark, listed).collect())
+    val e = intercept[Exception](Compacter.readListed(spark, listed, 2).collect())
     val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
     assert(chain.exists(t => t.isInstanceOf[java.io.FileNotFoundException] ||
       String.valueOf(t.getMessage).contains(gone.getName)),
       s"expected a missing-file error naming ${gone.getName}, got $e")
+  }
+
+  /** Line `i` of a day whose lines all have the same length. */
+  def fixedLine(i: Int): String =
+    f"owner bucket1 [03/Feb/2021:${i / 60 % 24}%02d:${i % 60}%02d:00 +0000] 1.2.3.4 " +
+      f"arn:aws:iam::1:user/u REQ$i%06d REST.GET.OBJECT logs/svc/2019/01/01/p$i%06d.gz " +
+      "\"GET /x HTTP/1.1\" 200 - 1024 2048 10 5 \"-\" \"agent/1.0\" -"
+
+  /** Rows per Parquet file under `dest`, in part-number order. */
+  def fileRows(dest: String): Seq[Long] =
+    Files.list(java.nio.file.Paths.get(dest)).toArray.map(_.toString)
+      .filter(_.endsWith(".parquet")).sorted.toSeq.map(spark.read.parquet(_).count())
+
+  test("a time-sorted day is one job of one stage: scan, sort and write, no exchange") {
+    val tmp = tempDir("graft-one-stage")
+    val dt = "2021-02-03"
+    writeObjects(tmp.resolve("raw"), "bucket1", dt, (0 until 300).map(fixedLine), 7)
+    val cfg = Compacter.Config(tmp.resolve("raw").toString, "bucket1",
+      tmp.resolve("out").toString, numOutputFiles = 4)
+    val plans = new java.util.concurrent.LinkedBlockingQueue[SparkPlanInfo]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.put(s.sparkPlanInfo)
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val (stats, jobs) = try jobsDuring(Compacter.compactDayWithStats(spark, cfg, dt).get)
+      finally spark.sparkContext.removeSparkListener(listener)
+    assert(stats.rows == 300 && stats.files == 4)
+    assert(jobs.map(_.stageInfos.size) == Seq(1), "stages per job")
+    def nodes(p: SparkPlanInfo): Seq[String] = p.nodeName +: p.children.flatMap(nodes)
+    val Seq(plan) = plans.toArray(Array.empty[SparkPlanInfo]).toSeq.map(nodes)
+    assert(plan.contains("Sort") && !plan.exists(_.contains("Exchange")), s"plan nodes $plan")
+  }
+
+  test("cuts inside objects and lines: every raw line once, equal lines balance within one row") {
+    import spark.implicits._
+    // objects of uneven line counts, every line the same length: 200 lines
+    // in 7 ranges cut inside lines, 210 lines in 7 ranges cut on line starts
+    Seq("mid-line" -> Seq(37, 53, 11, 80, 19), "line-start" -> Seq(30, 60, 45, 75))
+      .foreach { case (label, counts) =>
+        val tmp = tempDir(s"graft-cuts-$label")
+        val dt = "2021-02-03"
+        val dir = tmp.resolve("raw/bucket1")
+        Files.createDirectories(dir)
+        val lines = (0 until counts.sum).map(fixedLine)
+        counts.scanLeft(0)(_ + _).sliding(2).zipWithIndex.foreach { case (Seq(a, b), k) =>
+          Files.write(dir.resolve(s"$dt-00-00-0$k-OBJ$k"),
+            lines.slice(a, b).map(_ + "\n").mkString.getBytes)
+        }
+        // the day's byte offsets where ranges meet: inside objects, and
+        // inside lines or not
+        val width = lines.head.length + 1
+        val cuts = (1 until 7).map(i => lines.size * width * i / 7)
+        val objectEnds = counts.scanLeft(0)(_ + _).map(_ * width).toSet
+        assert(cuts.exists(!objectEnds(_)), s"$label: every cut at an object's end")
+        assert(cuts.exists(_ % width != 0) == (label == "mid-line"), s"$label: cuts $cuts")
+        val cfg = Compacter.Config(tmp.resolve("raw").toString, "bucket1",
+          tmp.resolve("out").toString, numOutputFiles = 7)
+        val dest = Compacter.compactDay(spark, cfg, dt).get
+        val expected = LogLineParser.parse(lines.toDF("value")).collect().map(_.toString).sorted
+        assert(spark.read.parquet(dest).collect().map(_.toString).sorted.sameElements(expected),
+          s"$label: row multiset")
+        val rows = fileRows(dest)
+        assert(rows.size == 7 && rows.max - rows.min <= 1, s"$label: rows per file $rows")
+      }
+  }
+
+  test("a .gz object is read whole by one split: no row lost, at most one file per object") {
+    val tmp = tempDir("graft-gz-day")
+    val dt = "2021-02-03"
+    val dir = tmp.resolve("raw/bucket1")
+    Files.createDirectories(dir)
+    val lines = (0 until 90).map(fixedLine)
+    Seq(0 until 10, 10 until 70, 70 until 90).zipWithIndex.foreach { case (r, k) =>
+      val out = new java.util.zip.GZIPOutputStream(
+        Files.newOutputStream(dir.resolve(s"$dt-00-00-0$k-OBJ$k.gz")))
+      try out.write(r.map(lines(_) + "\n").mkString.getBytes) finally out.close()
+    }
+    val listed = LogFileLister.listDayStatuses(tmp.resolve("raw").toString, "bucket1", dt)
+    val scan = Compacter.readListed(spark, listed, 5).queryExecution.executedPlan
+      .collectFirst { case s: RDDScanExec => s.rdd }.get
+    val ranges = scan.partitions.toSeq.flatMap(_.asInstanceOf[FilePartition].files)
+    assert(ranges.size == 3 && ranges.forall(f => f.start == 0 && f.length == f.fileSize),
+      s"split .gz objects: $ranges")
+    val cfg = Compacter.Config(tmp.resolve("raw").toString, "bucket1",
+      tmp.resolve("out").toString, numOutputFiles = 5)
+    val stats = Compacter.compactDayWithStats(spark, cfg, dt).get
+    assert(stats.rows == 90 && stats.files <= 3, s"$stats")
+    assert(spark.read.parquet(stats.dest).count() == 90)
+    assertFilesTimeSorted(stats.dest, stats.files)
+  }
+
+  test("re-compacting one listing writes files with identical content") {
+    val tmp = tempDir("graft-recompact")
+    val dt = "2021-02-03"
+    val lines = (0 until 400).map(i => busyLine(i, (i * 7919) % 86400)) :+ "corrupt line"
+    writeObjects(tmp.resolve("raw"), "bucket1", dt, lines, 6)
+    def run(out: String): Seq[Array[Byte]] = {
+      val cfg = Compacter.Config(tmp.resolve("raw").toString, "bucket1",
+        tmp.resolve(out).toString, numOutputFiles = 4)
+      val dest = java.nio.file.Paths.get(Compacter.compactDay(spark, cfg, dt).get)
+      Files.list(dest).toArray.map(_.asInstanceOf[Path])
+        .filter(_.getFileName.toString.endsWith(".parquet"))
+        .sortBy(_.getFileName.toString).toSeq.map(Files.readAllBytes)
+    }
+    val (first, second) = (run("a"), run("b"))
+    assert(first.size == 4 && second.size == 4)
+    first.zip(second).foreach { case (x, y) => assert(x.sameElements(y)) }
   }
 
   test("CLI prints one JSON line per day") {
@@ -461,8 +575,8 @@ class CompacterSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
         writeRawDay(raw, "b", dt, (0 until n).map(i =>
           logLine(3, (i * 5) % 24, s"logs/svc${i % 3}/2019/01/01/p$i.gz")))
         val listed = LogFileLister.listDayStatuses(raw.toString, "b", dt)
-        def frame() = Compacter.readListed(spark, listed)
-          .repartition(numFiles).sortWithinPartitions("request_time")
+        def frame() = Compacter.readListed(spark, listed, numFiles)
+          .sortWithinPartitions("request_time")
         val ours = tmp.resolve(s"ours-$n-$numFiles/dt=$dt").toString
         val theirs = tmp.resolve(s"spark-$n-$numFiles/dt=$dt").toString
         Compacter.configure(spark)
@@ -540,7 +654,7 @@ class CompacterSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     writeRawDay(tmp.resolve("raw"), "b", dt,
       (0 until 20).map(i => logLine(3, i % 24, s"logs/svc/2019/01/01/p$i.gz")))
     val frame = Compacter.readListed(spark,
-      LogFileLister.listDayStatuses(tmp.resolve("raw").toString, "b", dt)).repartition(2)
+      LogFileLister.listDayStatuses(tmp.resolve("raw").toString, "b", dt), 2)
     val dest = tmp.resolve(s"out/dt=$dt")
     val staged = DayWriter.stage(frame, dest.toString, "snappy")
     assert(!Files.exists(dest), "staging must not touch dt=")
