@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSessionExtensions, SparkSessionExtensionsProvider}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.types.{IntegerType, LongType}
@@ -17,11 +17,15 @@ import graft.functions.{MinHashSignature, ParseLogLine, SimHash, VectorDot, Word
   * SELECT minhash_signature(word_ngrams(split(text, ' '), 3), 64, 42) ...
   * }}}
   *
-  * Activate with `.withExtensions(new GraftExtensions)` on the builder or
-  * `--conf spark.sql.extensions=graft.GraftExtensions` (the standard
-  * mechanism for cluster-wide installs — no code changes at call sites).
+  * The jar installs itself: it registers this class as a
+  * `SparkSessionExtensionsProvider` (`META-INF/services`), which
+  * `SparkSession.Builder` loads into every session it builds with the jar
+  * on its classpath. `.withExtensions(new GraftExtensions)` and
+  * `--conf spark.sql.extensions=graft.GraftExtensions` still work, and
+  * install nothing twice: `apply` installs once per
+  * `SparkSessionExtensions`.
   */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
+class GraftExtensions extends SparkSessionExtensionsProvider {
 
   private def info(name: String, usage: String): ExpressionInfo =
     new ExpressionInfo(classOf[GraftExtensions].getName, "", name, usage, "", "", "", "", "", "", "built-in")
@@ -40,7 +44,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       s"$what must be a long literal, got $other")
   }
 
-  override def apply(ext: SparkSessionExtensions): Unit = {
+  override def apply(ext: SparkSessionExtensions): Unit =
+    if (GraftExtensions.installed.add(ext)) install(ext)
+
+  private def install(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction((FunctionIdentifier("vec_dot"),
       info("vec_dot", "vec_dot(a, b) - dot product of two float/double arrays"),
       (args: Seq[Expression]) => VectorDot(args(0), args(1))))
@@ -87,5 +94,21 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectColumnar(_ => new org.apache.spark.sql.execution.ColumnarRule {
       override def preColumnarTransitions = graft.plans.DedupFilterSubexprs
     })
+
+    // Size a small linear query's shuffles from its input bytes (the Days
+    // Apart aggregate and sort over one compacted day) instead of the
+    // session's partition count; see the rule's scaladoc.
+    ext.injectQueryStagePrepRule(graft.plans.SizeShuffles(_))
   }
+}
+
+object GraftExtensions {
+  /** The extension sets already installed on. Spark applies every source
+    * of extensions (the service loader, `spark.sql.extensions`,
+    * `withExtensions`) to one set per session, so one session can meet
+    * this class more than once. Weak: a set lives as long as its session.
+    */
+  private val installed = java.util.Collections.newSetFromMap(
+    java.util.Collections.synchronizedMap(
+      new java.util.WeakHashMap[SparkSessionExtensions, java.lang.Boolean]))
 }

@@ -2,7 +2,8 @@ package graft.plans
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, NamedExpression, PlanExpression, PredicateHelper, RLike, RegExpExtract, RegExpExtractAll, RegExpReplace}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, NamedExpression, NamedLambdaVariable, PlanExpression, PredicateHelper, RLike, RegExpExtract, RegExpExtractAll, RegExpReplace}
+import org.apache.spark.sql.catalyst.expressions.objects.LambdaVariable
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{FilterExec, ProjectExec, SparkPlan}
 
@@ -51,7 +52,9 @@ import graft.functions.{ParseAccessLog, ParseLogLine, PathDate}
   *  - only line-parse and regex-class kernels ([[ParseAccessLog]],
   *    [[ParseLogLine]], [[PathDate]], RegExp*, RLike) — cheap arithmetic
   *    is not worth the indirection;
-  *  - only deterministic, non-foldable subtrees with no subqueries;
+  *  - only deterministic, non-foldable subtrees with no subqueries and no
+  *    lambda variables (a subtree inside a higher-order function's lambda
+  *    is bound per element, and is null when evaluated outside it);
   *  - innermost-first: a repeated subtree containing another repeated
   *    subtree is skipped (its copies collapse to attribute references
   *    once the inner one is shared — the line parse inside `path_date`
@@ -71,8 +74,10 @@ object DedupFilterSubexprs extends Rule[SparkPlan] with PredicateHelper {
   }
 
   private def eligible(e: Expression): Boolean =
-    e.deterministic && !e.foldable &&
-      e.find(_.isInstanceOf[PlanExpression[_]]).isEmpty
+    e.deterministic && !e.foldable && e.find {
+      case _: PlanExpression[_] | _: NamedLambdaVariable | _: LambdaVariable => true
+      case _ => false
+    }.isEmpty
 
   /** Expensive deterministic subtrees by canonical form, with their count. */
   private def expensive(es: Seq[Expression]): mutable.LinkedHashMap[Expression, (Expression, Int)] = {

@@ -16,17 +16,6 @@ import org.apache.spark.sql.functions._
   */
 class AqeSkewSpec extends SparkTestBase {
 
-  private def withConf(pairs: (String, String)*)(body: => Unit): Unit = {
-    val saved = pairs.map { case (k, _) =>
-      k -> scala.util.Try(spark.conf.get(k)).toOption
-    }
-    try { pairs.foreach { case (k, v) => spark.conf.set(k, v) }; body }
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   /** Hot key 0 on 80% of 200k fat-payload rows — one shuffle partition
     * dwarfs the rest. The skewed side is the LEFT (stream) side and the
     * hint pins the RIGHT (build) side, exactly the Dedup sweep shape.

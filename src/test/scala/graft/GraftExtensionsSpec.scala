@@ -1,43 +1,35 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.graft.ExtensionRules
 
-/** The custom kernels must be reachable from PURE SQL once the extension
-  * is installed. Extensions bind at session BUILD: getOrCreate would
-  * silently reuse another suite's extension-less active session, so this
-  * spec detaches the active/default sessions, builds its own against the
-  * shared SparkContext, and restores the previous ones after.
+import graft.plans.SizeShuffles
+
+/** The custom kernels must be reachable from PURE SQL, and the rules
+  * active, in a session built with no extension conf: the jar's
+  * `META-INF/services` entry installs [[GraftExtensions]] into every
+  * session, the shared test session included.
   */
-class GraftExtensionsSpec extends AnyFunSuite
-    with org.scalatest.BeforeAndAfterAll {
+class GraftExtensionsSpec extends SparkTestBase {
 
-  private var prevDefault: Option[SparkSession] = None
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    prevDefault = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-ext-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+  test("a plain builder's session resolves parse_log_line and holds SizeShuffles once") {
+    assert(spark.sql("SELECT parse_log_line('nope') IS NULL").collect()(0).getBoolean(0))
+    val prep = spark.sessionState.adaptiveRulesHolder.queryStagePrepRules
+    assert(prep.count(_.isInstanceOf[SizeShuffles]) == 1, prep.toString)
   }
 
-  override def afterAll(): Unit = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    prevDefault.foreach { s =>
-      SparkSession.setDefaultSession(s)
-      SparkSession.setActiveSession(s)
-    }
-    super.afterAll()
+  test("installing twice on one extension set (service loader + spark.sql.extensions) installs once") {
+    def rules(ext: SparkSessionExtensions) = ExtensionRules.of(ext, spark)
+    val once = new SparkSessionExtensions
+    new GraftExtensions()(once)
+    val twice = new SparkSessionExtensions
+    new GraftExtensions()(twice)
+    new GraftExtensions()(twice)
+    // the optimizer, post-planner, stage-prep and columnar rule, each once
+    assert(rules(once).size == 4, rules(once).toString)
+    assert(rules(twice).size == 4, rules(twice).toString)
+    assert(rules(twice).count(_.isInstanceOf[SizeShuffles]) == 1)
+    assert(rules(twice).count(_ == graft.functions.CollapsePathDate) == 1)
   }
 
   test("vec_dot from SQL") {
@@ -104,14 +96,14 @@ class GraftExtensionsSpec extends AnyFunSuite
     Seq("logs/svc/2019/3/4/part-0.tgz", "logs/svc/2019/03/04/05/p.tgz",
       "no digits here", "a/1/b").foreach(k => assert(got(k).isEmpty, k))
 
-    // bit-identical to the unfused form (plain session, no extensions)
-    val plain = graft.SparkTestBase.session
-    val expected = plain.createDataset(keys)(org.apache.spark.sql.Encoders.STRING)
-      .toDF("key")
-      .select(col("key"), try_to_timestamp(
-        array_join(regexp_extract_all(col("key"), lit("/(\\d+)"), lit(1)), "-"),
-        lit("yyyy-MM-dd")).as("d"))
-      .collect().map(r => r.getString(0) -> Option(r.getTimestamp(1))).toMap
+    // bit-identical to the unfused form (the rule excluded)
+    val expected = withConf("spark.sql.optimizer.excludedRules" -> "graft.functions.CollapsePathDate") {
+      val unfused = spark.createDataset(keys)(org.apache.spark.sql.Encoders.STRING)
+        .toDF("key")
+        .select(col("key"), composite.as("d"))
+      assert(!unfused.queryExecution.optimizedPlan.toString.contains("path_date"))
+      unfused.collect().map(r => r.getString(0) -> Option(r.getTimestamp(1))).toMap
+    }
     assert(got == expected)
   }
 
@@ -211,6 +203,19 @@ class GraftExtensionsSpec extends AnyFunSuite
     val (calls, rows) = kernelCalls(q)
     assert(rows == 50)
     assert(calls == 200, s"$calls kernel calls for 200 lines:\n${q.queryExecution.executedPlan}")
+  }
+
+  test("DedupFilterSubexprs: a regex over a lambda variable stays inside its lambda") {
+    import org.apache.spark.sql.functions._
+    // one per-element rlike, which predicate pushdown copies from the
+    // projection into the filter below it
+    val query = concat(lit("utm_a=1&b="), col("id").cast("string"))
+    val q = spark.range(0, 40)
+      .select(size(filter(split(query, "&"), p => !p.rlike("^utm_"))).as("n"))
+      .filter(col("n") === 1)
+    assert(q.collect().map(_.getInt(0)).toSeq == Seq.fill(40)(1))
+    assert(!q.queryExecution.executedPlan.toString.contains("_graft_filter_cse"),
+      q.queryExecution.executedPlan.toString)
   }
 
   test("DedupFilterSubexprs: cheap first conjunct blocks the rewrite (short-circuit guard)") {

@@ -26,6 +26,18 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
     finally tempDirs.forEach(d =>
       org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
 
+  /** Run `body` with the session confs `pairs` set, restoring each
+    * conf's previous value (or its unset state) after.
+    */
+  def withConf[T](pairs: (String, String)*)(body: => T): T = {
+    val saved = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try { pairs.foreach { case (k, v) => spark.conf.set(k, v) }; body }
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** Job property holding `SparkContext.setJobDescription`'s text. */
   val JobDescription = "spark.job.description"
 
