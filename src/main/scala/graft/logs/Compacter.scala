@@ -3,12 +3,13 @@ package graft.logs
 import java.time.LocalDate
 
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.{FilePartition, FileScanRDD, PartitionedFile}
 import org.apache.spark.sql.graft.RowFrames
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.sources.AccessLogDataSource
 
@@ -23,6 +24,12 @@ import graft.sources.AccessLogDataSource
   *    ([[graft.sources.AccessLogDataSource]]) parses each line as it reads
   *    it, and the rest of the plan runs in Catalyst/Tungsten codegen;
   *  - each day is listed once: the scan reuses the lister's statuses;
+  *  - each day ships one Hadoop conf: the write's prepared conf is
+  *    broadcast once ([[DayWriter.prepared]]) and the scan opens every
+  *    raw object on it, one copy per task
+  *    ([[graft.sources.AccessLogDataSource.reader]]), where Spark's text
+  *    read and write command each ship their own, and its line reader
+  *    copies the conf for every object;
   *  - Parquet pages hold at most [[DayWriter.PageBytes]], where
   *    the reference keeps Spark's 1 MiB page: parquet-mr then drops a
   *    high-cardinality column's dictionary after its first page, not at
@@ -153,16 +160,19 @@ object Compacter {
     * `numSplits` partitions of about equal raw bytes ([[splits]]). Each
     * partition is read by the `accesslog` reader on a `FileScanRDD`, so
     * Spark runs no existence check, no leaf-file listing job and no split
-    * packing of its own. Assumes S3 access-log objects are immutable once
-    * delivered, so a listed length is final; an object gone since listing
-    * fails the scan loudly (`ignoreMissingFiles` stays off) rather than
-    * dropping its rows.
+    * packing of its own. Objects are opened on `conf`, a broadcast Hadoop
+    * conf that must outlive every job over the frame; the compacter passes
+    * its day's write conf ([[DayWriter.Day]]). Assumes S3 access-log
+    * objects are immutable once delivered, so a listed length is final; an
+    * object gone since listing fails the scan loudly (`ignoreMissingFiles`
+    * stays off) rather than dropping its rows.
     */
-  def readListed(spark: SparkSession, listed: Seq[FileStatus], numSplits: Int): DataFrame = {
-    val format = new AccessLogDataSource
+  def readListed(spark: SparkSession, listed: Seq[FileStatus], numSplits: Int,
+                 conf: Broadcast[SerializableConfiguration]): DataFrame = {
     val schema = AccessLogSchema.schema
-    val read = format.buildReader(spark, schema, new StructType(), schema, Nil, Map.empty,
-      spark.sessionState.newHadoopConf())
+    val read = AccessLogDataSource.reader(conf, spark.sessionState.conf.sessionLocalTimeZone,
+      schema)
+    val format = new AccessLogDataSource
     val parts = splits(listed, numSplits, format.isSplitable(spark, Map.empty, _))
     RowFrames.ofRows(spark, new FileScanRDD(spark, read, parts, schema), schema)
   }
@@ -214,18 +224,13 @@ object Compacter {
   final case class DayStats(dest: String, rows: Long, corruptRows: Long,
                             files: Int = 0, bytesIn: Long = 0L, bytesOut: Long = 0L)
 
-  /** Compact one day's raw files into `destRoot/sourceBucket/dt=<dt>/`.
-    * Returns the destination path, or None if the day had no raw objects
-    * (no-op, nothing written).
-    */
-  def compactDay(spark: SparkSession, cfg: Config, dt: String): Option[String] =
-    compactDayWithStats(spark, cfg, dt).map(_.dest)
-
-  /** As `compactDay`, additionally reporting what the day's write tasks
-    * counted: rows, corrupt rows, files and bytes. The day is written by
-    * [[DayWriter]] (staged, then published whole); on the zorder path the
-    * parsed frame is cached so the boundary/sketch passes and the write
-    * still read the raw text once.
+  /** Compact one day's raw files into `destRoot/sourceBucket/dt=<dt>/`,
+    * reporting what the day's write tasks counted: rows, corrupt rows,
+    * files and bytes. None if the day had no raw objects (no-op, nothing
+    * written). The day is written by [[DayWriter]] (staged, then published
+    * whole), and its scan opens the raw objects on the write's broadcast
+    * conf; on the zorder path the parsed frame is cached so the
+    * boundary/sketch passes and the write still read the raw text once.
     */
   def compactDayWithStats(spark: SparkSession, cfg: Config,
                           dt: String): Option[DayStats] = {
@@ -237,18 +242,20 @@ object Compacter {
     val bytesIn = listed.map(_.getLen).sum
     val numFiles = outputFilesFor(cfg, bytesIn)
     configure(spark)
-    val parsed = readListed(spark, listed, numFiles)
-    val files = if (cfg.zorderBy.isEmpty) {
-      DayWriter.write(parsed.sortWithinPartitions("request_time"), dest, cfg.compression)
-    } else {
-      // the zorder path needs boundary/sampling passes BEFORE the write
-      // (quantile collect + range-partitioner sketch) — cache the parsed
-      // frame so the raw text is read and parsed once, not three times
-      val cached = parsed.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try DayWriter.write(graft.ext.Layout.zorderCluster(cached, cfg.zorderBy, numFiles),
-        dest, cfg.compression)
-      finally cached.unpersist()
+    val files = DayWriter.prepared(spark, AccessLogSchema.schema, cfg.compression) { day =>
+      val parsed = readListed(spark, listed, numFiles, day.conf)
+      if (cfg.zorderBy.isEmpty) {
+        DayWriter.write(parsed.sortWithinPartitions("request_time"), dest, day)
+      } else {
+        // the zorder path needs boundary/sampling passes BEFORE the write
+        // (quantile collect + range-partitioner sketch) — cache the parsed
+        // frame so the raw text is read and parsed once, not three times
+        val cached = parsed.persist(
+          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try DayWriter.write(graft.ext.Layout.zorderCluster(cached, cfg.zorderBy, numFiles),
+          dest, day)
+        finally cached.unpersist()
+      }
     }
     Some(DayStats(dest, files.map(_.rows).sum, files.map(_.corruptRows).sum,
       files.size, bytesIn, files.map(_.bytes).sum))

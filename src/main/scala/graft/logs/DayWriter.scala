@@ -9,6 +9,7 @@ import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.hadoop.ParquetOutputFormat
 import org.apache.spark.TaskContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.SQLExecution
@@ -42,8 +43,10 @@ import org.apache.spark.util.SerializableConfiguration
   * by which a time-range read skips pages.
   *
   * What differs is the job around the files:
-  *  - the prepared Hadoop conf is broadcast once per day, where Spark's
-  *    write command ships it twice inside every task;
+  *  - the prepared Hadoop conf is broadcast once per day ([[prepared]]),
+  *    where Spark's write command ships it twice inside every task, and
+  *    the day's raw scan opens its objects on the same broadcast, so a day
+  *    serializes one conf for its scan and its write;
   *  - tasks write into a hidden staging sibling of `dt=`, each attempt in
   *    its own directory, and return what they wrote;
   *  - after every task has succeeded the driver moves exactly the returned
@@ -66,9 +69,35 @@ object DayWriter {
   /** Raw bytes per Parquet page, for this day's write only (not the session). */
   private[logs] val PageBytes = 32 << 10
 
-  /** Write `df` to `dest` and publish it; returns the published files. */
-  def write(df: DataFrame, dest: String, compression: String): Seq[Written] = {
-    val staged = stage(df, dest, compression)
+  /** One day's write, prepared once: Spark's Parquet writer factory for
+    * frames of `schema`, and the Hadoop conf it writes with, broadcast as
+    * `conf`. The day's raw scan opens its objects on the same broadcast
+    * ([[Compacter.readListed]]).
+    */
+  final class Day private[DayWriter] (val schema: StructType,
+      private[DayWriter] val factory: OutputWriterFactory, private[DayWriter] val ext: String,
+      val conf: Broadcast[SerializableConfiguration])
+
+  /** Prepare the write of a day of `schema` rows, run `body` with it, and
+    * destroy the broadcast conf when `body` returns or fails.
+    */
+  def prepared[T](spark: SparkSession, schema: StructType, compression: String)
+                 (body: Day => T): T = {
+    val options = Map("compression" -> compression,
+      ParquetOutputFormat.PAGE_SIZE -> PageBytes.toString)
+    val job = Job.getInstance(spark.sessionState.newHadoopConfWithOptions(options))
+    val factory = new ParquetFileFormat().prepareWrite(spark, job, options, schema)
+    val conf = job.getConfiguration
+    val ext = factory.getFileExtension(new TaskAttemptContextImpl(conf, new TaskAttemptID()))
+    val shared = spark.sparkContext.broadcast(new SerializableConfiguration(conf))
+    try body(new Day(schema, factory, ext, shared)) finally shared.destroy()
+  }
+
+  /** Write `df` to `dest` as part of `day` and publish it; returns the
+    * published files.
+    */
+  def write(df: DataFrame, dest: String, day: Day): Seq[Written] = {
+    val staged = stage(df, dest, day)
     publish(df.sparkSession, staged)
     staged.files
   }
@@ -76,23 +105,19 @@ object DayWriter {
   /** Run the write job into a fresh staging sibling of `dest`. On failure
     * the staging directory is deleted and `dest` is untouched.
     */
-  private[logs] def stage(df: DataFrame, dest: String, compression: String): Staged = {
-    val qe = df.queryExecution
-    val spark = qe.sparkSession
+  private[logs] def stage(df: DataFrame, dest: String, day: Day): Staged = {
     val schema = df.schema
+    require(schema == day.schema,
+      s"the day was prepared for ${day.schema.toDDL}; got ${schema.toDDL}")
+    val qe = df.queryExecution
+    val sc = qe.sparkSession.sparkContext
     val corruptAt = schema.fieldIndex("error_line")
-    val options = Map("compression" -> compression,
-      ParquetOutputFormat.PAGE_SIZE -> PageBytes.toString)
-    val job = Job.getInstance(spark.sessionState.newHadoopConfWithOptions(options))
-    val factory = new ParquetFileFormat().prepareWrite(spark, job, options, schema)
-    val conf = job.getConfiguration
-    val ext = factory.getFileExtension(new TaskAttemptContextImpl(conf, new TaskAttemptID()))
     val destPath = new Path(dest)
     val dir = new Path(destPath.getParent, s".${destPath.getName}.${UUID.randomUUID()}")
     val stageDir = dir.toString
-    val suffix = s"-${UUID.randomUUID()}-c000$ext"
-    val sc = spark.sparkContext
-    val shared = sc.broadcast(new SerializableConfiguration(conf))
+    val suffix = s"-${UUID.randomUUID()}-c000${day.ext}"
+    // locals, so the task closure does not capture `day`
+    val (shared, factory) = (day.conf, day.factory)
     try {
       val files = SQLExecution.withNewExecutionId(qe, Some("DayWriter.write")) {
         val rdd = qe.toRdd
@@ -105,9 +130,9 @@ object DayWriter {
       Staged(destPath, dir, files.flatten.toSeq)
     } catch {
       case e: Throwable =>
-        dir.getFileSystem(conf).delete(dir, true)
+        dir.getFileSystem(shared.value.value).delete(dir, true)
         throw e
-    } finally shared.destroy()
+    }
   }
 
   /** One task: its rows into `<stageDir>/attempt-<n>/part-NNNNN<suffix>`. */

@@ -35,10 +35,6 @@ object LogFileLister {
       .filter(st => st.isFile && st.getPath.getName.startsWith(s"$date-")).toSeq
   }
 
-  def listDay(accessLogRoot: String, sourceBucket: String, date: String,
-              conf: Configuration = new Configuration()): Seq[String] =
-    listDayStatuses(accessLogRoot, sourceBucket, date, conf).map(_.getPath.toString)
-
   def listDayWithSizes(accessLogRoot: String, sourceBucket: String, date: String,
                        conf: Configuration = new Configuration()): Seq[(String, Long)] =
     listDayStatuses(accessLogRoot, sourceBucket, date, conf)

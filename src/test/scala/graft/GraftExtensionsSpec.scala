@@ -181,7 +181,7 @@ class GraftExtensionsSpec extends SparkTestBase {
     val dir = new org.apache.hadoop.fs.Path(lineFile(lines))
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val listed = fs.listStatus(dir).toSeq.filter(_.getPath.getName.endsWith(".txt"))
-    val df = graft.logs.Compacter.readListed(spark, listed, 3)
+    val df = graft.logs.Compacter.readListed(spark, listed, 3, sessionConf())
       .sortWithinPartitions("request_time")
     assert(df.queryExecution.toRdd.count() == 200)
     // the accesslog reader parses each non-blank line as it emits it: no

@@ -2,8 +2,10 @@ package graft
 
 import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.util.SerializableConfiguration
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -37,6 +39,12 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
       case (k, None) => spark.conf.unset(k)
     }
   }
+
+  /** The session's Hadoop conf, broadcast, for a scan built outside a
+    * compacted day.
+    */
+  def sessionConf(): Broadcast[SerializableConfiguration] =
+    spark.sparkContext.broadcast(new SerializableConfiguration(spark.sessionState.newHadoopConf()))
 
   /** Job property holding `SparkContext.setJobDescription`'s text. */
   val JobDescription = "spark.job.description"

@@ -48,7 +48,7 @@ class AthenaDdlSpec extends SparkTestBase {
     val cfg = Compacter.Config(rawRoot.toString, "bucket1",
       destRoot.toString, numOutputFiles = 1)
     Seq("2021-02-03", "2021-02-04").foreach { dt =>
-      assert(Compacter.compactDay(spark, cfg, dt).isDefined)
+      assert(Compacter.compactDayWithStats(spark, cfg, dt).map(_.dest).isDefined)
     }
 
     // a sibling suite registers a temp view under the table's name;

@@ -4,12 +4,14 @@ import java.nio.file.{Files, Path}
 
 import graft.SparkTestBase
 import graft.analysis.DaysApart
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.execution.{RDDScanExec, SparkPlanInfo}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
 
 /** End-to-end golden test (SURVEY.md §5.3): raw log dir → compact →
   * re-read parquet → schema + content + sortedness + file count + DDL +
@@ -94,7 +96,7 @@ class CompacterSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     // determinism: re-run the day → identical row multiset (materialize
     // before the overwrite invalidates the first read's file listing)
     val firstRun = back.collect().map(_.toString).sorted
-    Compacter.compactDay(spark, cfg, dt)
+    Compacter.compactDayWithStats(spark, cfg, dt).map(_.dest)
     val again = spark.read.parquet(dest).collect().map(_.toString).sorted
     assert(again.sameElements(firstRun))
 
@@ -145,7 +147,7 @@ class CompacterSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     val cfg = Compacter.Config(rawRoot.toString, "bucket1",
       destRoot.toString, numOutputFiles = 8,
       zorderBy = Seq("request_time", "requester"))
-    val dest = Compacter.compactDay(spark, cfg, dt).get
+    val dest = Compacter.compactDayWithStats(spark, cfg, dt).map(_.dest).get
     val perFile = spark.read.parquet(dest)
       .groupBy(input_file_name())
       .agg(countDistinct("requester").as("n_req"),
@@ -184,9 +186,9 @@ class CompacterSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     Files.createDirectories(tmp.resolve("b"))
     Files.write(tmp.resolve("b/2021-01-01-AAA"), "x".getBytes)
     Files.write(tmp.resolve("b/2021-01-02-BBB"), "x".getBytes)
-    assert(LogFileLister.listDay(tmp.toString, "b", "2021-01-01").size == 1)
-    assert(LogFileLister.listDay(tmp.toString, "b", "2021-01-03").isEmpty)
-    assert(LogFileLister.listDay(tmp.toString, "missing", "2021-01-01").isEmpty)
+    assert(LogFileLister.listDayStatuses(tmp.toString, "b", "2021-01-01").size == 1)
+    assert(LogFileLister.listDayStatuses(tmp.toString, "b", "2021-01-03").isEmpty)
+    assert(LogFileLister.listDayStatuses(tmp.toString, "missing", "2021-01-01").isEmpty)
   }
   test("CLI arg parsing: strict flag/value pairing") {
     val opts = CompacterCli.parseArgs(Array(
@@ -213,7 +215,7 @@ class CompacterSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       (0 until 20).map(i => logLine(3, i % 24, s"logs/svc/2019/01/01/p$i.gz")))
     val cfg = Compacter.Config(rawRoot.toString, "b", destRoot.toString,
       numOutputFiles = 2, compression = "zstd")
-    val dest = Compacter.compactDay(spark, cfg, dt).get
+    val dest = Compacter.compactDayWithStats(spark, cfg, dt).map(_.dest).get
     val files = Files.list(java.nio.file.Paths.get(dest)).iterator()
     val parts = Iterator.continually(files)
       .takeWhile(_.hasNext).map(_.next().getFileName.toString)
@@ -330,10 +332,10 @@ class CompacterSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       (0 until 12).map(i => logLine(3, i, s"logs/svc/2019/01/01/p$i.gz")), 4)
     val listed = LogFileLister.listDayStatuses(tmp.toString, "bucket1", dt)
     assert(listed.size == 4)
-    assert(Compacter.readListed(spark, listed, 2).count() == 12)
+    assert(Compacter.readListed(spark, listed, 2, sessionConf()).count() == 12)
     val gone = listed(1).getPath
     Files.delete(java.nio.file.Paths.get(gone.toUri))
-    val e = intercept[Exception](Compacter.readListed(spark, listed, 2).collect())
+    val e = intercept[Exception](Compacter.readListed(spark, listed, 2, sessionConf()).collect())
     val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
     assert(chain.exists(t => t.isInstanceOf[java.io.FileNotFoundException] ||
       String.valueOf(t.getMessage).contains(gone.getName)),
@@ -398,7 +400,7 @@ class CompacterSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
         assert(cuts.exists(_ % width != 0) == (label == "mid-line"), s"$label: cuts $cuts")
         val cfg = Compacter.Config(tmp.resolve("raw").toString, "bucket1",
           tmp.resolve("out").toString, numOutputFiles = 7)
-        val dest = Compacter.compactDay(spark, cfg, dt).get
+        val dest = Compacter.compactDayWithStats(spark, cfg, dt).map(_.dest).get
         val expected = LogLineParser.parse(lines.toDF("value")).collect().map(_.toString).sorted
         assert(spark.read.parquet(dest).collect().map(_.toString).sorted.sameElements(expected),
           s"$label: row multiset")
@@ -419,7 +421,7 @@ class CompacterSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       try out.write(r.map(lines(_) + "\n").mkString.getBytes) finally out.close()
     }
     val listed = LogFileLister.listDayStatuses(tmp.resolve("raw").toString, "bucket1", dt)
-    val scan = Compacter.readListed(spark, listed, 5).queryExecution.executedPlan
+    val scan = Compacter.readListed(spark, listed, 5, sessionConf()).queryExecution.executedPlan
       .collectFirst { case s: RDDScanExec => s.rdd }.get
     val ranges = scan.partitions.toSeq.flatMap(_.asInstanceOf[FilePartition].files)
     assert(ranges.size == 3 && ranges.forall(f => f.start == 0 && f.length == f.fileSize),
@@ -440,7 +442,8 @@ class CompacterSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     def run(out: String): Seq[Array[Byte]] = {
       val cfg = Compacter.Config(tmp.resolve("raw").toString, "bucket1",
         tmp.resolve(out).toString, numOutputFiles = 4)
-      val dest = java.nio.file.Paths.get(Compacter.compactDay(spark, cfg, dt).get)
+      val dest = java.nio.file.Paths.get(
+        Compacter.compactDayWithStats(spark, cfg, dt).map(_.dest).get)
       Files.list(dest).toArray.map(_.asInstanceOf[Path])
         .filter(_.getFileName.toString.endsWith(".parquet"))
         .sortBy(_.getFileName.toString).toSeq.map(Files.readAllBytes)
@@ -489,7 +492,7 @@ class CompacterSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       .map(n => Files.size(raw.resolve(n))).sum)
     val before = snapshot(dest)
     def failsLeavingPreviousDay(): Unit = {
-      intercept[Exception](Compacter.compactDay(spark, cfg, dt))
+      intercept[Exception](Compacter.compactDayWithStats(spark, cfg, dt).map(_.dest))
       assert(Files.exists(dest) && snapshot(dest) == before,
         "the first run's files must survive the failed run")
       assert(names(dest.getParent) == Set(s"dt=$dt"), "a staging sibling was left behind")
@@ -575,13 +578,14 @@ class CompacterSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
         writeRawDay(raw, "b", dt, (0 until n).map(i =>
           logLine(3, (i * 5) % 24, s"logs/svc${i % 3}/2019/01/01/p$i.gz")))
         val listed = LogFileLister.listDayStatuses(raw.toString, "b", dt)
-        def frame() = Compacter.readListed(spark, listed, numFiles)
-          .sortWithinPartitions("request_time")
+        def frame(conf: Broadcast[SerializableConfiguration]) =
+          Compacter.readListed(spark, listed, numFiles, conf).sortWithinPartitions("request_time")
         val ours = tmp.resolve(s"ours-$n-$numFiles/dt=$dt").toString
         val theirs = tmp.resolve(s"spark-$n-$numFiles/dt=$dt").toString
         Compacter.configure(spark)
-        val written = DayWriter.write(frame(), ours, "snappy")
-        frame().write.option("compression", "snappy").parquet(theirs)
+        val written = DayWriter.prepared(spark, AccessLogSchema.schema, "snappy")(day =>
+          DayWriter.write(frame(day.conf), ours, day))
+        frame(sessionConf()).write.option("compression", "snappy").parquet(theirs)
 
         val (a, b) = (footers(ours), footers(theirs))
         assert(a.size == b.size && written.size == a.size, s"$label: file counts")
@@ -619,7 +623,7 @@ class CompacterSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     writeObjects(tmp.resolve("raw"), "bucket1", "2021-02-03", lines, 4)
     val cfg = Compacter.Config(tmp.resolve("raw").toString, "bucket1",
       tmp.resolve("out").toString, numOutputFiles = 1)
-    val dest = Compacter.compactDay(spark, cfg, "2021-02-03").get
+    val dest = Compacter.compactDayWithStats(spark, cfg, "2021-02-03").map(_.dest).get
     // request_time repeats ~67 times a second. Corrupt lines have no
     // request_time, so they sort first: a 1000-row first page holds only
     // 100 values of total_time, too few to show that its 900-value
@@ -634,7 +638,7 @@ class CompacterSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   test("a narrow request_time range reads only the pages that can hold it") {
     val (lines, cfg) = spreadDay
-    val dest = Compacter.compactDay(spark, cfg, "2021-02-03").get
+    val dest = Compacter.compactDayWithStats(spark, cfg, "2021-02-03").map(_.dest).get
     // the day's last hour, 451 rows, lies in the last page of each file;
     // a file's 5k request_time values (40 KB) fill a 32 KiB page first
     val hour = spark.read.parquet(dest).filter(expr(
@@ -653,10 +657,10 @@ class CompacterSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     val dt = "2021-02-03"
     writeRawDay(tmp.resolve("raw"), "b", dt,
       (0 until 20).map(i => logLine(3, i % 24, s"logs/svc/2019/01/01/p$i.gz")))
-    val frame = Compacter.readListed(spark,
-      LogFileLister.listDayStatuses(tmp.resolve("raw").toString, "b", dt), 2)
+    val listed = LogFileLister.listDayStatuses(tmp.resolve("raw").toString, "b", dt)
     val dest = tmp.resolve(s"out/dt=$dt")
-    val staged = DayWriter.stage(frame, dest.toString, "snappy")
+    val staged = DayWriter.prepared(spark, AccessLogSchema.schema, "snappy")(day =>
+      DayWriter.stage(Compacter.readListed(spark, listed, 2, day.conf), dest.toString, day))
     assert(!Files.exists(dest), "staging must not touch dt=")
     // what a failed or speculative attempt of partition 1 leaves behind
     val stray = staged.files.find(_.name.startsWith("part-00001")).get.name
